@@ -5,7 +5,7 @@ import org.apache.spark.storage.StorageLevel
 
 /** Owned lifecycle for the corpus-sized persisted memos the dedup/ANN
   * family pins (joinBackOnce drop sets, hashed-shingle tables, semantic
-  * assignment memos). Spark's CacheManager holds strong references, so a
+  * assignment memos) and the metric stages' reserve-bound input. Spark's CacheManager holds strong references, so a
   * long-lived session looping corpora (`graft.Main --watch`) would
   * otherwise accumulate MEMORY_AND_DISK blocks until LRU thrash; the
   * registry gives pipeline drivers one `drain()` to call when a run's

@@ -15,11 +15,18 @@ import graft.render.Render
   * reference's per-event interpreter loop at scale.
   *
   * `success` is the reference's `(event, bool)` second return: evaluated
-  * against the *input* columns, materialized once by the FilterBox so
-  * fail-tagging and conditional post-processing agree with it.
+  * against the *input* columns and projected into one column by the
+  * FilterBox, so fail-tagging and conditional post-processing agree with
+  * it. A filter whose success and transform share expensive per-row work
+  * (Grok's regex match) computes it once in [[prepare]]; the FilterBox
+  * runs `prepare` before both.
   */
 trait EventFilter {
-  /** Parse/convert success predicate over the input frame. */
+  /** Add the per-row intermediate columns that `success` and `transform`
+    * both read, computed only where `cond` holds. Default: none. */
+  def prepare(df: DataFrame, cond: Column): DataFrame = df
+
+  /** Parse/convert success predicate over the prepared frame. */
   def success(df: DataFrame): Column = lit(true)
 
   /** Apply the transform for rows where `cond`; leave others untouched. */
@@ -48,10 +55,11 @@ final case class FilterBox(
 
     if (unconditional && addFields.isEmpty && removeFields.isEmpty && failTag.isEmpty) {
       // common case: no wrapper work at all — keep the plan minimal
-      filter.transformAll(df0)
+      filter.transformAll(filter.prepare(df0, lit(true)))
     } else {
-      // materialize success once so post-processing sees a stable value
-      val df1 = df0.withColumn(StageCols.Succ, guard && filter.success(df0))
+      // project success once so post-processing sees a stable value
+      val prepared = filter.prepare(df0, guard)
+      val df1 = prepared.withColumn(StageCols.Succ, guard && filter.success(prepared))
       val succ = col(StageCols.Succ)
       var out = filter.transform(df1, succ)
       addFields.foreach { case (k, v) =>

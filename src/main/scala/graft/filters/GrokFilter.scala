@@ -112,9 +112,23 @@ object Grok {
 }
 
 /** Grok filter: N patterns tried in order, first match wins, named groups
-  * become columns. One UDF evaluation per row produces all fields (the
-  * regex automata are compiled once per executor; a per-field
-  * `regexp_extract` would re-run the match per column).
+  * become columns. One match per row produces all fields: [[prepare]]
+  * projects the match map once, and both `success` and `transform` read
+  * that column (the regex automata are compiled once per executor; a
+  * per-field `regexp_extract` would re-run the match per column).
+  *
+  * The match UDF is marked nondeterministic, although its result depends
+  * only on its input. The flag is the optimizer barrier that keeps it at
+  * one evaluation per row: Catalyst neither copies a nondeterministic
+  * expression into other projections (CollapseProject) nor pushes a
+  * filter through the projection that computes it
+  * (PushPredicateThroughNonJoin). Without it, a later `Drop` on a Grok
+  * field is pushed below the match with the UDF inlined once per
+  * reference to the field, and Spark 4.1.2 has no setting that stops that
+  * alias inlining short of excluding the rule for the whole session. The
+  * price is the reference's in-order semantics: a filter placed after a
+  * Grok stays above it, so only conditions placed before the Grok reach
+  * the scan's pushed filters.
   * (reference: filter/grok.go) */
 final case class GrokFilter(
     src: String,
@@ -190,25 +204,26 @@ final case class GrokFilter(
         }
         result
       }
-    }
+    }.asNondeterministic() // an optimizer barrier only; see the class doc
   }
 
-  private def grokCol(df: DataFrame): Column = {
+  /** Project the match map, null where `cond` does not hold (a guarded
+    * fallback Grok matches only the rows its `if` selects). */
+  override def prepare(df: DataFrame, cond: Column): DataFrame = {
     val c = FieldPath.resolve(df, src).getOrElse(lit(null)).cast("string")
-    matchUdf(c)
+    df.withColumn(GrokFilter.MatchCol, when(cond, matchUdf(c)))
   }
 
-  override def success(df: DataFrame): Column = grokCol(df).isNotNull
+  override def success(df: DataFrame): Column = col(GrokFilter.MatchCol).isNotNull
 
   def transform(df: DataFrame, cond: Column): DataFrame = {
-    val tmp = "__graft_grok"
-    val withMap = df.withColumn(tmp, when(cond, grokCol(df)))
+    val tmp = GrokFilter.MatchCol
     val m = col(tmp)
     val out = target match {
       case Some(t) =>
-        StageCols.setField(withMap, t, m, cond, overwrite)
+        StageCols.setField(df, t, m, cond, overwrite)
       case None =>
-        outputFields.foldLeft(withMap) { (d, f) =>
+        outputFields.foldLeft(df) { (d, f) =>
           StageCols.setField(d, f, element_at(m, f), cond && m.isNotNull, overwrite)
         }
     }
@@ -217,6 +232,7 @@ final case class GrokFilter(
 }
 
 object GrokFilter {
+  private val MatchCol = "__graft_grok"
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[Seq[String], Array[Pattern]]()
 }

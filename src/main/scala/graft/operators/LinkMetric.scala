@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.core.CacheRegistry
 import graft.paths.FieldPath
 
 /** LinkMetric / LinkStatsMetric: the reference's only stateful operators —
@@ -78,20 +79,36 @@ object LinkMetric {
     (win, fields, ts)
   }
 
+  /** `df` pruned to the top-level columns a batch metric aggregate reads:
+    * the timestamp's root column, the link fields and, under `reduce`, the
+    * upstream partials. */
+  private[operators] def aggInput(c: Config, df: DataFrame): DataFrame = {
+    val tsRoot = FieldPath.parse(c.tsColumn).headOption.collect { case FieldPath.Key(k) => k }
+    val reads = tsRoot.toSeq ++ c.fieldsLink.split("->").map(_.trim) ++
+      (if (c.reduce) Seq("count", "sum", "min", "max") else Nil)
+    df.select(df.columns.filter(n => reads.exists(_.equalsIgnoreCase(n)))
+      .map(n => col(s"`$n`")).toSeq: _*)
+  }
+
   /** Batch analogue of the watermark lateness bound, WITHOUT a driver-side
     * action: the max event time aggregates to a 1-row frame that re-enters
     * the plan via `crossJoin(broadcast(...))` (the qualityBand pattern,
     * TextAnalysis.scala), so constructing a metric stage launches no job
     * and the bound composes lazily with whatever the caller plans around
-    * it. Costs one extra scan of `df` at execution time — the same work
-    * the eager `max(ts).head` did, now inside the one query. */
+    * it. The bound and the aggregation both read `df`, so it is memoed
+    * (`CacheRegistry.memo`, lazy): the first consumer at execution time
+    * fills the cache and the upstream chain runs once per run instead of
+    * once per consumer. Callers pass `df` pruned by [[aggInput]], so the
+    * memo holds only the aggregate's columns; Planner.runBatch and each
+    * foreachBatch micro-batch drain it after their sinks. */
   private[operators] def boundByReserve(df: DataFrame, ts: Column,
       reserveSec: Long): DataFrame =
     if (reserveSec <= 0) df
     else {
       val boundCol = "__graft_reserve_max_us"
-      val bound = broadcast(df.select(max(unix_micros(ts)).as(boundCol)))
-      df.crossJoin(bound)
+      val in = CacheRegistry.memo(df)
+      val bound = broadcast(in.select(max(unix_micros(ts)).as(boundCol)))
+      in.crossJoin(bound)
         // a null max (every ts null — a broken upstream Date stage) must
         // KEEP the frame, matching the old eager `if (maxTs == null) df`
         // path: the condition would otherwise be NULL for every row and
@@ -107,7 +124,7 @@ object LinkMetric {
     * reference drops them on arrival (link_metric.go:214-216). */
   def batch(c: Config)(df: DataFrame): DataFrame = {
     val (win, fields, ts) = parts(c, df)
-    val bounded = boundByReserve(df, ts, c.reserveWindowSec)
+    val bounded = boundByReserve(aggInput(c, df), ts, c.reserveWindowSec)
     finish(bounded
       .groupBy(win +: fields.map(f => col(s"`$f`")): _*)
       .agg(countAgg(c, bounded)))
@@ -192,7 +209,7 @@ object LinkStatsMetric {
   def batch(c: Config)(df: DataFrame): DataFrame = {
     val (win, fields, ts) = LinkMetric.parts(c, df)
     val groupFields = fields.init
-    val bounded = LinkMetric.boundByReserve(df, ts, c.reserveWindowSec)
+    val bounded = LinkMetric.boundByReserve(LinkMetric.aggInput(c, df), ts, c.reserveWindowSec)
     val aggs = aggCols(c, bounded)
     LinkMetric.finish(bounded
       .groupBy(win +: groupFields.map(f => col(s"`$f`")): _*)
@@ -236,7 +253,7 @@ object LinkUniqMetric {
 
   def batch(c: Config)(df: DataFrame): DataFrame = {
     val (win, fields, ts) = LinkMetric.parts(c, df)
-    val bounded = LinkMetric.boundByReserve(df, ts, c.reserveWindowSec)
+    val bounded = LinkMetric.boundByReserve(LinkMetric.aggInput(c, df), ts, c.reserveWindowSec)
     // `reduce` here only swaps the exact count for the mergeable HLL
     // sketch — unlike LinkMetric/LinkStatsMetric it CANNOT merge upstream
     // partials (a partial `uniq` count is not a distinct set). Feeding
@@ -275,7 +292,7 @@ object LinkUniqMetric {
   /** Partial form: (window, groups, uniq_sketch binary). */
   def batchSketch(c: Config)(df: DataFrame): DataFrame = {
     val (win, fields, ts) = LinkMetric.parts(c, df)
-    val bounded = LinkMetric.boundByReserve(df, ts, c.reserveWindowSec)
+    val bounded = LinkMetric.boundByReserve(LinkMetric.aggInput(c, df), ts, c.reserveWindowSec)
     LinkMetric.finish(bounded
       .groupBy(win +: fields.init.map(f => col(s"`$f`")): _*)
       .agg(hll_sketch_agg(uniqField(c)).as("uniq_sketch")))

@@ -76,6 +76,89 @@ class PlanQualitySpec extends SparkSpec {
     assert(!plan.contains("jaccard_long("), plan)
   }
 
+  /** Scala UDFs in one operator's expressions; in the chains below, the
+    * only ones are Grok matches. */
+  private def udfs(op: org.apache.spark.sql.execution.SparkPlan) =
+    op.expressions.flatMap(_.collect {
+      case u: org.apache.spark.sql.catalyst.expressions.ScalaUDF => u
+    })
+
+  test("weblog chain evaluates each Grok once per row and scans its source once") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec}
+    val tmp = java.nio.file.Files.createTempDirectory("weblog-plan")
+    val df = WeblogChain.frame(spark, WeblogChain.writeInput(tmp))
+    try {
+      val rows = df.collect()
+      assert(rows.nonEmpty)
+      val plan = df.queryExecution.executedPlan
+      val ops = WeblogChain.operators(plan)
+      // two Grok boxes (main match, guarded fallback): one UDF each. The
+      // inlined form copied the match into the Drop filter and the later
+      // projections, about fifteen per row
+      assert(ops.map(udfs(_).size).sum <= 2, s"Grok match evaluated more than once per box:\n$plan")
+      ops.collect { case f: FilterExec => f }.foreach { f =>
+        assert(udfs(f).isEmpty, s"Grok UDF inside a Filter:\n$f")
+      }
+      val scans = ops.collect { case s: FileSourceScanExec => s }
+      scans.foreach { s =>
+        assert(s.dataFilters.forall(_.find(
+          _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.ScalaUDF]).isEmpty),
+          s"Grok UDF pushed into the scan's DataFilters:\n$s")
+      }
+      // the reserve bound's max(ts) and the aggregation read one memo of
+      // the chain, not a second run of it
+      assert(scans.size == 1, s"source scanned ${scans.size} times:\n$plan")
+    } finally graft.core.CacheRegistry.drain()
+    for (q <- Seq("q_grok", "q_fail_tag")) {
+      val plan = executedPlan(q)
+      assert("UDF\\(".r.findAllIn(plan).length == 1, s"$q runs the Grok match more than once:\n$plan")
+    }
+  }
+
+  test("a Drop before Grok still reaches the scan; a Drop on a Grok field stays above the match") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, ProjectExec}
+    val tmp = java.nio.file.Files.createTempDirectory("grok-pushdown")
+    val in = tmp.resolve("in").toString
+    Seq(("GET 200", Some("edge-1")), ("POST 404", Some("edge-2")), ("PUT 500", None))
+      .toDF("message", "host").write.parquet(in)
+    def run(filters: String) = {
+      val pipe = graft.pipeline.Planner.fromYaml(
+        s"inputs:\n  - Parquet: {path: '$in'}\nfilters:\n$filters" +
+          "outputs:\n  - Stdout: {}\n")
+      val df = pipe.transform(graft.pipeline.Planner.input(spark, "Parquet", Map("path" -> in)))
+      val verbs = df.collect().map(r => r.getString(r.fieldIndex("verb"))).sorted.toSeq
+      val plan = df.queryExecution.executedPlan
+      val scans = WeblogChain.operators(plan).collect { case s: FileSourceScanExec => s }
+      assert(scans.size == 1, plan)
+      (verbs, plan, "PushedFilters: \\[[^\\]]*host".r.findFirstIn(scans.head.toString).nonEmpty)
+    }
+    val grok = "  - Grok: {src: message, match: ['^%{WORD:verb} %{INT:code}$']}\n"
+    val dropHostless = "  - Drop: {if: ['!Exist(host)']}\n"
+
+    // the reference runs filters in order: a condition on a raw field
+    // placed before the Grok is still pushed into the Parquet scan
+    val (before, p1, pushed1) = run(dropHostless + grok)
+    assert(before == Seq("GET", "POST"))
+    assert(pushed1, s"raw-field Drop before Grok not pushed to the scan:\n$p1")
+
+    // a condition on a Grok field filters ABOVE the single match
+    // projection: pushing it below would inline the UDF into the filter
+    val (after, p2, _) = run(grok + "  - Drop: {if: ['EQ(verb,\"POST\")']}\n")
+    assert(after == Seq("GET", "PUT"))
+    val ops = WeblogChain.operators(p2)
+    assert(ops.map(udfs(_).size).sum == 1, s"Grok match not evaluated exactly once:\n$p2")
+    val drop = ops.collect { case f: FilterExec => f }
+    assert(drop.size == 1 && udfs(drop.head).isEmpty, s"Drop on a Grok field:\n$p2")
+    assert(drop.head.find { case p: ProjectExec => udfs(p).nonEmpty; case _ => false }.nonEmpty,
+      s"the Drop on a Grok field is not above the Grok projection:\n$p2")
+
+    // the price of the barrier: the same raw-field Drop placed after the
+    // Grok stays above the match too, as it would in the reference
+    val (late, p3, pushed3) = run(grok + dropHostless)
+    assert(late == Seq("GET", "POST"))
+    assert(!pushed3, s"a Drop after Grok was pushed below the match:\n$p3")
+  }
+
   test("passage dedup keeps its single-shuffle window shape") {
     // the round-4 refactor: the corpus's token windows flow through ONE
     // fp-partitioned exchange into the lag/sum/min window stack, then one
