@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Shared store-read probe for the incremental seen/temporal/vector
   * stores. Existence is probed via the Hadoop FS API BEFORE calling
@@ -19,12 +20,51 @@ object Stores {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Some(frame) when `path` exists, None when absent — without ever
-    * surfacing a logged AnalysisException for the expected-absent case. */
-  def readParquetIfExists(spark: SparkSession,
-      path: String): Option[DataFrame] = {
+    * surfacing a logged AnalysisException for the expected-absent case.
+    *
+    * With `schema`, the read skips Parquet's footer schema inference (one
+    * Spark job per read). A forced schema would read a missing column as
+    * all-null — a near (`sim`) store handed to an exact stage would then
+    * silently leak every duplicate — so the schema is first checked
+    * against one data file's footer, read on the driver (no job): every
+    * field must be present with its type, or the read fails. */
+  def readParquetIfExists(spark: SparkSession, path: String,
+      schema: Option[StructType] = None): Option[DataFrame] = {
     val p = new org.apache.hadoop.fs.Path(path)
-    if (!hadoopFs(spark, path).exists(p)) None
-    else Some(spark.read.parquet(path))
+    val fs = hadoopFs(spark, path)
+    if (!fs.exists(p)) None
+    else schema match {
+      case None => Some(spark.read.parquet(path))
+      case Some(s) =>
+        checkFooterSchema(fs, p, s)
+        Some(spark.read.schema(s).parquet(path))
+    }
+  }
+
+  /** Fail unless the first data file directly under `root` (Spark's
+    * discovery rules: `_`/`.`-prefixed names are skipped) holds every
+    * field of `want` with the same type. */
+  private def checkFooterSchema(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path, want: StructType): Unit = {
+    val dataFile = fs.listStatus(root)
+      .find(st => st.isFile && !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith("."))
+      .map(_.getPath)
+      .getOrElse(sys.error(s"store $root exists but holds no parquet data file"))
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(dataFile,
+        fs.getConf))
+    val have =
+      try new org.apache.spark.sql.execution.datasources.parquet
+        .ParquetToSparkSchemaConverter()
+        .convert(reader.getFooter.getFileMetaData.getSchema)
+      finally reader.close()
+    val bad = want.fields.filterNot(f =>
+      have.fields.exists(h => h.name == f.name && h.dataType == f.dataType))
+    if (bad.nonEmpty)
+      sys.error(s"store $root does not match the expected schema: wants " +
+        bad.map(f => s"${f.name} ${f.dataType.simpleString}").mkString(", ") +
+        s", its data file $dataFile holds ${have.simpleString}")
   }
 
   /** `<path><suffix>` as a SIBLING of path, built via parent+name: string

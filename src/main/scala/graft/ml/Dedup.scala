@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Deduplication operators for large-scale training-data pipelines.
   *
@@ -1128,10 +1129,13 @@ object Dedup {
   private def appendFps(fresh: DataFrame, keyCol: String,
       storePath: String): (Long, DataFrame) = {
     val spark = fresh.sparkSession
+    // the store and the appended files hold `fresh`'s rows: read both by
+    // its schema (no footer-inference job; see Stores.readParquetIfExists)
+    val schema = StructType(fresh.schema.fields.map(_.copy(nullable = true)))
     // Null keys (null/absent text) never leave the anti-join's left side
     // (null = null is null), so unfiltered they'd re-append one null row
     // EVERY run; they also can't match any future probe — drop them.
-    val deduped = readStoreOpt(spark, storePath)
+    val deduped = readStoreOpt(spark, storePath, Some(schema))
       .map(s => fresh.join(s, Seq(keyCol), "left_anti"))
       .getOrElse(fresh)
       .filter(col(keyCol).isNotNull)
@@ -1144,7 +1148,7 @@ object Dedup {
     // would see the grown store and return empty).
     val (n, files) = graft.core.Stores.appendCountedFiles(deduped, storePath)
     val newFps =
-      if (files.nonEmpty) spark.read.parquet(files: _*)
+      if (files.nonEmpty) spark.read.schema(schema).parquet(files: _*)
       else deduped.limit(0)
     (n, newFps)
   }
@@ -1153,10 +1157,20 @@ object Dedup {
     * failure must propagate, or dedup would silently run against an empty
     * set and leak every known duplicate (and an append would re-write
     * every fingerprint). Existence is probed via the FS API, never by
-    * catching PATH_NOT_FOUND — see [[graft.core.Stores]]. */
+    * catching PATH_NOT_FOUND — see [[graft.core.Stores]]. A known
+    * `schema` skips the footer-inference job and is checked against one
+    * data file's footer instead. */
   private[ml] def readStoreOpt(spark: org.apache.spark.sql.SparkSession,
+      storePath: String,
+      schema: Option[StructType] = None): Option[DataFrame] =
+    graft.core.Stores.readParquetIfExists(spark, storePath, schema)
+
+  /** The exact seen store's row format ([[contentFingerprints]]). */
+  private val seenSchema = StructType(Seq(StructField("fp", StringType)))
+
+  private def readSeenStore(spark: org.apache.spark.sql.SparkSession,
       storePath: String): Option[DataFrame] =
-    graft.core.Stores.readParquetIfExists(spark, storePath)
+    readStoreOpt(spark, storePath, Some(seenSchema))
 
   private def hadoopFs(spark: org.apache.spark.sql.SparkSession, path: String) =
     graft.core.Stores.hadoopFs(spark, path)
@@ -1168,14 +1182,18 @@ object Dedup {
     * `spark.sql.graft.storeBloomMaxItems` (default 1e8 ≈ 115 MB at 1%
     * fpp): one driver-held filter stops scaling there — shard by fp
     * prefix before raising it. The build is one extra store scan per
-    * append (the append's anti-join already paid one). */
+    * append (the append's anti-join already paid one). `knownRows` is the
+    * store's row count when the caller already observed it (a compaction's
+    * rewrite), sparing the count job. */
   private def refreshBloomSidecar(spark: org.apache.spark.sql.SparkSession,
-      storePath: String, force: Boolean = false): Unit = {
+      storePath: String, force: Boolean = false,
+      knownRows: Option[Long] = None): Unit = {
     val maxItems =
       spark.conf.get("spark.sql.graft.storeBloomMaxItems", "100000000").toLong
     val fpp = spark.conf.get("spark.sql.graft.storeBloomFpp", "0.01").toDouble
     if (maxItems <= 0) return
-    val rows = readStoreOpt(spark, storePath).map(_.count()).getOrElse(0L)
+    val store = readSeenStore(spark, storePath)
+    val rows = store.map(s => knownRows.getOrElse(s.count())).getOrElse(0L)
     if (rows == 0 || rows > maxItems) return
     // `force` bypasses the covered==rows short-circuit: after a
     // compaction every data file was rewritten, and a distinct-count can
@@ -1188,7 +1206,7 @@ object Dedup {
     // force updateBloomSidecar's incremental path into a full rebuild on
     // the very next append
     val sizedFor = math.min(maxItems, math.max(rows * 2, 1L << 20))
-    val bf = spark.read.parquet(storePath)
+    val bf = store.get
       .select(xxhash64(col("fp")).as("h"))
       .stat.bloomFilter("h", sizedFor, fpp)
     writeBloomSidecar(spark, storePath, rows, bf)
@@ -1240,7 +1258,7 @@ object Dedup {
     val incrMax = spark.conf
       .get("spark.sql.graft.storeBloomIncrementalMax", "4000000").toLong
     if (maxItems <= 0) return
-    val rows = readStoreOpt(spark, storePath).map(_.count()).getOrElse(0L)
+    val rows = readSeenStore(spark, storePath).map(_.count()).getOrElse(0L)
     if (rows == 0 || rows > maxItems) return
     loadBloomCovered(spark, storePath) match {
       case Some(covered) if covered == rows => () // no-op append, marker current
@@ -1332,10 +1350,11 @@ object Dedup {
     * (a dup-heavy increment, where the Bloom prunes nothing anyway). */
   def dropSeenStore(df: DataFrame, storePath: String, textCol: String): DataFrame = {
     val spark = df.sparkSession
-    readStoreOpt(spark, storePath) match {
+    readSeenStore(spark, storePath) match {
       case None => df
       case Some(seen) =>
-        val rows = seen.count() // parquet footer count — cheap at any scale
+        // one count job over the known schema (no footer-inference job)
+        val rows = seen.count()
         loadBloomSidecar(spark, storePath).filter(_._1 == rows).map(_._2) match {
           case None => dropSeen(df, seen, textCol)
           case Some(bf) =>
@@ -1410,44 +1429,52 @@ object Dedup {
   }
 
   /** Compact an EXACT seen store in place: rewrite the fingerprint rows
-    * (distinct — a crashed append's double-write heals here) into
-    * ~`targetFiles` files and refresh the Bloom sidecar. Loss-free at
-    * every crash point: the new files land in the store BEFORE the old
-    * ones are deleted, and the in-between state is duplicate rows, which
-    * every reader already tolerates (dropSeen distincts, appendFps
-    * anti-joins, sidecar validity markers detect the row-count change
-    * and mark themselves stale). Single-writer, same contract as append.
-    * Returns the store's distinct row count. */
+    * (distinct — a crashed append's double-write heals here) into at most
+    * `targetFiles` files (the YAML `compact_files: N` trigger passes
+    * max(1, N/2), see Planner) and force-rebuild the Bloom sidecar. The
+    * rebuild takes its row count from the rewrite's own observation —
+    * under the single-writer contract that IS the store's row count — so
+    * it pays no count job. Loss-free at every crash point: the new files
+    * land in the store BEFORE the old ones are deleted, and the
+    * in-between state is duplicate rows, which every reader already
+    * tolerates (dropSeen distincts, appendFps anti-joins, sidecar
+    * validity markers detect the row-count change and mark themselves
+    * stale). Single-writer, same contract as append. Returns the store's
+    * distinct row count. */
   def compactSeenStore(spark: org.apache.spark.sql.SparkSession,
       storePath: String, targetFiles: Int = 32): Long =
-    compactStore(spark, storePath, "fp", targetFiles)(
-      refreshBloomSidecar(spark, storePath, force = true))
+    compactStore(spark, storePath, "fp", targetFiles, Some(seenSchema))(rows =>
+      refreshBloomSidecar(spark, storePath, force = true, knownRows = Some(rows)))
 
   /** [[compactSeenStore]] for a near-dup (simhash) store; always rebuilds
     * the banded sidecar (compaction rewrote the rows it derives from). */
   def compactNearStore(spark: org.apache.spark.sql.SparkSession,
       storePath: String, targetFiles: Int = 32,
       totalBits: Int = 64, bands: Int = 8): Long =
-    compactStore(spark, storePath, "sim", targetFiles)(
+    compactStore(spark, storePath, "sim", targetFiles)(_ =>
       refreshBandedSidecar(spark, storePath,
         spark.read.parquet(storePath).select("sim"), 0, totalBits, bands,
         force = true))
 
   private def compactStore(spark: org.apache.spark.sql.SparkSession,
-      storePath: String, keyCol: String, targetFiles: Int)
-      (refreshSidecars: => Unit): Long =
-    compactStoreWith(spark, storePath, targetFiles)(
+      storePath: String, keyCol: String, targetFiles: Int,
+      schema: Option[StructType] = None)
+      (refreshSidecars: Long => Unit): Long =
+    compactStoreWith(spark, storePath, targetFiles, schema)(
       _.select(keyCol).distinct())(refreshSidecars)
 
   /** The tmp+rename compaction contract with a caller-chosen rewrite
     * (distinct for the key stores, groupBy-sum for the vocabulary
     * store). Crash windows leave either the tmp dir (invisible to
     * readers, cleaned next run) or duplicated rows (tolerated by every
-    * store's read semantics). */
+    * store's read semantics). A known `schema` reads the store without
+    * the footer-inference job ([[readStoreOpt]]); `refreshSidecars` gets
+    * the rewrite's row count. */
   private[ml] def compactStoreWith(spark: org.apache.spark.sql.SparkSession,
-      storePath: String, targetFiles: Int)
-      (rewrite: DataFrame => DataFrame)(refreshSidecars: => Unit): Long =
-    readStoreOpt(spark, storePath) match {
+      storePath: String, targetFiles: Int,
+      schema: Option[StructType] = None)
+      (rewrite: DataFrame => DataFrame)(refreshSidecars: Long => Unit): Long =
+    readStoreOpt(spark, storePath, schema) match {
       case None => 0L
       case Some(s0) =>
         val fs = hadoopFs(spark, storePath)
@@ -1477,8 +1504,9 @@ object Dedup {
           }
         fs.delete(tmp, true)
         oldFiles.foreach(p => fs.delete(p, false))
-        refreshSidecars
-        obs.get("n").asInstanceOf[Long]
+        val n = obs.get("n").asInstanceOf[Long]
+        refreshSidecars(n)
+        n
     }
 
   /** Append NEW simhash fingerprints to a near-dup seen store AND keep

@@ -87,7 +87,7 @@ object LinkGraph {
   def compactHostGraphStore(spark: org.apache.spark.sql.SparkSession,
       storePath: String, targetFiles: Int = 32): Long =
     Dedup.compactStoreWith(spark, storePath, targetFiles)(
-      _.groupBy("src_host", "dst_host").agg(sum(col("n_links")).as("n_links")))(())
+      _.groupBy("src_host", "dst_host").agg(sum(col("n_links")).as("n_links")))(_ => ())
 
   /** Fixed-point PageRank over an edge list: returns (node, rank_scaled)
     * where rank_scaled = rank × 10^scaleDigits (LONG). Init rank 1.0 per

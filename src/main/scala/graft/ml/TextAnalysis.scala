@@ -798,7 +798,7 @@ object TextAnalysis {
   def compactVocabStore(spark: org.apache.spark.sql.SparkSession,
       storePath: String, targetFiles: Int = 32): Long =
     Dedup.compactStoreWith(spark, storePath, targetFiles)(
-      _.groupBy("token").agg(sum(col("cnt")).as("cnt")))(())
+      _.groupBy("token").agg(sum(col("cnt")).as("cnt")))(_ => ())
 
   /** Inverted-index build: one row per (token, posting) with the token's
     * document frequency and the posting's 1-based rank — the

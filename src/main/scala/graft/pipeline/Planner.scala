@@ -507,16 +507,16 @@ object Planner {
           val near = conf.bool("near", false)
           val (kOpt, bandsOpt) = (conf.int("k", 3), conf.int("bands", 8))
           // compact_files: when the store's compact level exceeds this
-          // many data files after an update, rewrite it (daily appends
-          // add a file set each; day-300 reads otherwise pay hundreds of
-          // parquet footers). 0 disables.
+          // many data files N after an update, rewrite it to max(1, N/2)
+          // files, below the trigger (daily appends add a file set each;
+          // day-300 reads otherwise pay hundreds of parquet footers).
+          // 0 disables. See compactAbove.
           val compactFiles = conf.int("compact_files", 0)
           def maybeCompact(spark: SparkSession): Unit =
-            if (compactFiles > 0 &&
-                graft.ml.Dedup.storeDataFiles(spark, store).size > compactFiles) {
+            compactAbove(spark, store, compactFiles) { target =>
               if (near) graft.ml.Dedup.compactNearStore(spark, store,
-                bands = bandsOpt): Unit
-              else graft.ml.Dedup.compactSeenStore(spark, store): Unit
+                target, bands = bandsOpt)
+              else graft.ml.Dedup.compactSeenStore(spark, store, target)
             }
           df => {
             // the store-PATH variants own the read (only a genuinely
@@ -807,10 +807,8 @@ object Planner {
             df => {
               graft.core.PostCommit.register { () =>
                 graft.ml.LinkGraph.appendToHostGraphStore(df, srcUrl, dst, store): Unit
-                if (compactAt > 0 && graft.ml.Dedup.storeDataFiles(
-                    df.sparkSession, store).size > compactAt)
-                  graft.ml.LinkGraph.compactHostGraphStore(
-                    df.sparkSession, store): Unit
+                compactAbove(df.sparkSession, store, compactAt)(
+                  graft.ml.LinkGraph.compactHostGraphStore(df.sparkSession, store, _))
               }
               graft.ml.LinkGraph.readHostGraphStore(df.sparkSession, store)
                 .unionByName(graft.ml.LinkGraph.hostGraph(df, srcUrl, dst))
@@ -1136,10 +1134,8 @@ object Planner {
             df => {
               graft.core.PostCommit.register { () =>
                 graft.ml.TextAnalysis.appendToVocabStore(df, text, store, uni): Unit
-                if (compactAt > 0 && graft.ml.Dedup.storeDataFiles(
-                    df.sparkSession, store).size > compactAt)
-                  graft.ml.TextAnalysis.compactVocabStore(
-                    df.sparkSession, store): Unit
+                compactAbove(df.sparkSession, store, compactAt)(
+                  graft.ml.TextAnalysis.compactVocabStore(df.sparkSession, store, _))
               }
               graft.ml.TextAnalysis.vocabularyFromStore(df.sparkSession,
                 store, minCount, topN, Some(df), text, uni)
@@ -1499,6 +1495,18 @@ object Planner {
       case other => sys.error(s"unknown corpus stage '$other'")
     }
   }
+
+  /** The `compact_files: N` trigger of a store-backed stage, run after its
+    * post-commit append: once the store holds more than N data files,
+    * `compact(target)` rewrites it to target = max(1, N/2) files. Landing
+    * BELOW the trigger is the point: a rewrite to N or more files (the
+    * compact* API default is 32) would fire again on every increment,
+    * rewriting the whole store and leaving every later read that many
+    * files to open. 0 disables. */
+  private def compactAbove(spark: SparkSession, store: String, n: Int)(
+      compact: Int => Long): Unit =
+    if (n > 0 && graft.ml.Dedup.storeDataFiles(spark, store).size > n)
+      compact(math.max(1, n / 2)): Unit
 
   /** Metric emission path (reference: filter/link_metric.go:248-274 —
     * synthetic metric events re-enter the pipeline; `drop_original_event:

@@ -310,6 +310,85 @@ class IncrementalStoreSpec extends SparkSpec {
     assert(kept == Set(31L))
   }
 
+  /** `body`'s result and the stage names (`<action> at <file>:<line>`, the
+    * call site) of every job launched while it runs — the LinkMetricSpec
+    * construction-guard pattern: job groups are thread-local, so
+    * concurrent suites' jobs don't carry this one, and a marker job
+    * bounds the wait. */
+  private def jobStagesDuring[T](body: => T): (T, List[Seq[String]]) = {
+    val sc = spark.sparkContext
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(String, Seq[String])]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.synchronized {
+          seen += (Option(js.properties)
+            .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+            .getOrElse("") -> js.stageInfos.map(_.name))
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("graft-build", "store read guard")
+      val result = body
+      sc.setJobGroup("graft-marker", "store read guard")
+      spark.range(1).count()
+      sc.clearJobGroup()
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (!seen.synchronized(seen.exists(_._1 == "graft-marker")) &&
+             System.nanoTime() < deadline) Thread.sleep(20)
+      assert(seen.synchronized(seen.exists(_._1 == "graft-marker")),
+        "marker job never observed")
+      (result, seen.synchronized(seen.filter(_._1 == "graft-build").map(_._2).toList))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("building dropSeenStore reads the store by its schema: no inference job") {
+    val store = tmp("inc-schema") + "/fps"
+    assert(Dedup.appendToSeenStore(day1, "text", store) == 3)
+    val (q, jobs) = jobStagesDuring(Dedup.dropSeenStore(day2, store, "text"))
+    // AQE runs query stages as jobs on its own threads, named after that
+    // thread's frames; the rest carry the building thread's call site
+    val names = jobs.flatten.filterNot(_.contains("CompletableFuture"))
+    // a `spark.read.parquet` without a schema launches a footer-inference
+    // job on the building thread, named after the read's call site
+    assert(!names.exists(_.startsWith("parquet at")),
+      s"schema-inference job at build: $jobs")
+    // what remains: the store count (sidecar validity), the probe's
+    // candidate count, and the matched set's checkpoint
+    assert(names.exists(_.startsWith("count at")), s"no count job: $jobs")
+    assert(names.forall(n => n.startsWith("count at") ||
+      n.startsWith("localCheckpoint at")), s"unexpected job at build: $jobs")
+    assert(q.select("id").as[Long].collect().toSet == Set(11L))
+  }
+
+  test("an exact stage over a near (sim) store fails the run loudly") {
+    // with a forced `fp` schema the missing column would read as all-null
+    // and the stage would keep the whole increment; the footer check must
+    // fail the run instead, before any sink writes
+    val store = tmp("inc-wrong") + "/sims"
+    assert(Dedup.appendToNearStore(near1, "text", store) == 2)
+    val e = intercept[RuntimeException](Dedup.dropSeenStore(day2, store, "text"))
+    assert(e.getMessage.contains("fp string"), e.getMessage)
+    val root = tmp("inc-wrong-run")
+    day2.write.parquet(s"$root/in")
+    val run = graft.pipeline.Planner.fromYaml(
+      s"""inputs:
+         |  - Parquet: {path: '$root/in'}
+         |filters:
+         |  - Dedup: {method: incremental, src: text, id_field: id, store: '$store', update_store: true}
+         |outputs:
+         |  - Parquet: {path: '$root/out'}
+         |""".stripMargin)
+    val e2 = intercept[RuntimeException](run.runBatch(spark))
+    assert(e2.getMessage.contains("does not match the expected schema"), e2.getMessage)
+    assert(!new java.io.File(s"$root/out").exists, "the failed run wrote its output")
+    assert(spark.read.parquet(store).count() == 2, "the failed run grew the store")
+  }
+
   test("compactNearStore heals duplicate sims and re-covers the banded sidecar") {
     val store = tmp("inc-compact-near") + "/sims"
     assert(Dedup.appendToNearStore(near1, "text", store) == 2)
