@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.streaming.Observability.{JobCounter, JobCounts}
 
 object Bench {
 
@@ -48,283 +49,16 @@ object Bench {
     "q_curate_rank")
 
   /** Pure per-family budget decision (spec-pinned in BenchLineSpec):
-    * None = skip this family (budget exhausted — rotate it to the next
-    * run), Some(n) = run it with n samples per datapoint (min-of-2 past
-    * half budget, single-sample past 80% — r17 verdict task 2: a noisy
-    * isolated datapoint with an honest bracket beats no datapoint for a
-    * family that has published none in six rounds; full baseRuns before
-    * that). */
+    * None = skip this family (budget exhausted — it leads the next run),
+    * Some(n) = run it with n samples per datapoint (min-of-2 past half
+    * budget, single-sample past 80%: a noisy datapoint beats none for a
+    * family late in the queue; full baseRuns before that). */
   private[graft] def familyRunsUnderBudget(elapsedSecs: Double,
       budgetSecs: Double, baseRuns: Int): Option[Int] =
     if (elapsedSecs >= budgetSecs) None
     else if (elapsedSecs > budgetSecs * 0.8) Some(math.min(baseRuns, 1))
     else if (elapsedSecs > budgetSecs * 0.5) Some(math.min(baseRuns, 2))
     else Some(baseRuns)
-
-  /** A family's probe bracket (the probe sample before and after its
-    * ops) is CONTENDED when either side exceeds 2× the run's calm floor
-    * (the min probe across the whole stress phase): the machine was
-    * visibly loaded while the family ran, so its mins may be
-    * noise-poisoned. r13/r14 both published poisoned mins that only
-    * bench_detail.json archaeology could attribute — the bracket (and
-    * this verdict) now ride the parsed line. */
-  private[graft] def contendedBracket(bracket: (Double, Double),
-      calmMin: Double): Boolean =
-    calmMin > 0 && math.max(bracket._1, bracket._2) > 2.0 * calmMin
-
-  /** Certification bound vs the persisted CALM-FLOOR REFERENCE (r16
-    * verdict task 2): [[contendedBracket]] compares a family's bracket
-    * to the run's OWN floor, but the run floor may itself sit 1.5× above
-    * calm ([[runContended]]'s flag bound) — compounded, a "clean" family
-    * bracket could ride 3× above calm, and r16's graph family was
-    * stamped exactly that way (bracket 1.49-1.66× the calm ref, certified
-    * mins ~1.3× their calm rehearsal band). A family may STAMP only when
-    * its bracket also sits within this multiple of the calm reference.
-    * The same bound gates the pre-flight heat deferral
-    * ([[StressOps.runFamilyIfCalm]]): above it, running the ops cannot
-    * produce a stampable bracket, so they are not run. */
-  private[graft] val StampRefMult = 1.25
-
-  /** True when `bracket` is certifiable against the calm-floor reference
-    * (no reference yet → always eligible, the first-run seed path). */
-  private[graft] def stampEligibleVsRef(bracket: (Double, Double),
-      floorRef: Double): Boolean =
-    floorRef <= 0 ||
-      math.max(bracket._1, bracket._2) <= StampRefMult * floorRef
-
-  /** Certification precondition (r19 review finding 1): every op the
-    * family SELECTED this run must have published a sample vector — a
-    * hot-skipped heavy op publishes nothing, and a stamp would advance
-    * the arm cursor past ops that never ran (the tie-breaker can turn a
-    * hot-skipping attempt's bracket calm, so bracket cleanliness alone
-    * does not imply the ops were measured). An op that ran and ERRORED
-    * publishes -1 and still counts as attempted — the separate
-    * usable-min condition governs that, unchanged. */
-  private[graft] def armFullyAttempted(ops: Seq[String],
-      published: collection.Set[String]): Boolean =
-    ops.nonEmpty && ops.forall(published.contains)
-
-  /** TIE-BREAKER RULE (r17 verdict task 1): a 2-sample bracket gives one
-    * GC or co-tenant blip veto power over certification — r17's events
-    * family missed its FIFTH-round stamp by exactly one probe (bracket
-    * [0.841, 0.980] vs bound 0.855; the min was UNDER the bound). When
-    * the bracket straddles the bound (min ≤ bound < max), the hot side
-    * earns ONE confirmation probe before the refusal stands — 2-of-3
-    * evidence either way, the 1.25× bound itself untouched. Both sides
-    * clean or both sides hot need no tie-breaker. */
-  private[graft] def tieBreakNeeded(pre: Double, post: Double,
-      stampRef: Double): Boolean = {
-    val bound = StampRefMult * stampRef
-    stampRef > 0 && math.min(pre, post) <= bound &&
-      math.max(pre, post) > bound
-  }
-
-  /** Resolve a straddling bracket with its tie-breaker probe. Returns the
-    * published probe-sample vector — the parent reads the bracket as
-    * (head, last), and every raw sample stays in the vector for the
-    * floor population and the audit trail:
-    *   - tie-breaker CALM (≤ bound): 2-of-3 samples calm — the blip loses
-    *     its veto; the calm confirmation becomes the resolved hot-side
-    *     value (last position).
-    *   - tie-breaker HOT: 2-of-3 hot — genuinely contended; the WORST
-    *     hot sample takes the last position so the published bracket
-    *     never understates the heat. */
-  private[graft] def resolveTieBreak(pre: Double, post: Double,
-      tiebreak: Double, stampRef: Double): Vector[Double] = {
-    val bound = StampRefMult * stampRef
-    val (hot, calm) = if (post > bound) (post, pre) else (pre, post)
-    if (tiebreak <= bound) Vector(calm, hot, tiebreak)
-    else Vector(calm, math.min(hot, tiebreak), math.max(hot, tiebreak))
-  }
-
-  /** HEAD-TAIL INTERLEAVE (r17 verdict task 2): pure stalest-first
-    * ordering starves the queue's tail — store/index/vec/media/langid/
-    * token sat SIX rounds with zero isolated driver datapoints because
-    * heat kept eating the budget from the front and their old stamps
-    * (earned under the pre-ledger regime) kept them permanently behind
-    * events/graph/metrics. Alternate head-of-queue with tail-of-queue:
-    * the stalest family still leads (certification priority intact),
-    * but every second slot goes to the FRESHEST-stamped end, which is
-    * exactly where the never-isolated tail lives. */
-  private[graft] def interleaveHeadTail[A](xs: Seq[A]): Seq[A] = {
-    val buf = scala.collection.mutable.ArrayDeque.from(xs)
-    val out = Seq.newBuilder[A]
-    var front = true
-    while (buf.nonEmpty) {
-      out += (if (front) buf.removeHead() else buf.removeLast())
-      front = !front
-    }
-    out.result()
-  }
-
-  /** Classify a stress-phase budget overshoot for the parsed line (r17
-    * verdict task 4: the r17 driver read phases.stress 700.77 s against
-    * the 600 s budget and only SURVEY archaeology could say why).
-    * Empty = no overshoot. Otherwise the late-phase activities that ran
-    * ("settle" wait, deferred "re-attempt", contention "retry") joined
-    * by '+'; a plain overshoot with none of them is "in-flight" — the
-    * budget gates family STARTS, so the last family started before the
-    * line runs to completion past it. */
-  private[graft] def overshootReason(stressSec: Double, budget: Double,
-      settled: Boolean, reAttempted: Boolean, retried: Boolean): String =
-    if (stressSec <= budget) ""
-    else {
-      val parts = Seq("settle" -> settled, "re-attempt" -> reAttempted,
-        "retry" -> retried).collect { case (t, true) => t }
-      if (parts.isEmpty) "in-flight" else parts.mkString("+")
-    }
-
-  /** How long a worker's hot pre-probe stays valid as deferral evidence
-    * for the NEXT families in the queue (no re-fork, no re-probe). */
-  private[graft] val HotProbeReuseSecs = 60.0
-
-  /** How many CONSECUTIVE families may defer on one remembered hot probe
-    * before the next family must fork and take its OWN probe (r18
-    * verdict task 3): in r18 ONE stale bracket ([1.380, 1.125]) was
-    * reused for EIGHT families — metrics among them published no
-    * isolated bracket of its own for a second round, and the evidence
-    * aged far past anything "temporally correlated" justifies. Capped,
-    * every fourth family re-measures the box (~20 s) — on a cooling box
-    * the queue resumes mid-run instead of writing the whole tail off. */
-  private[graft] val MaxHotReuse = 3
-
-  /** Pure heat-memory reuse decision (spec-pinned): remembered hot-probe
-    * evidence defers a family for free only while it is RECENT and has
-    * not already excused [[MaxHotReuse]] consecutive families. */
-  private[graft] def reuseHeatMemory(sinceHot: Double, reuseCount: Int): Boolean =
-    sinceHot < HotProbeReuseSecs && reuseCount < MaxHotReuse
-
-  /** One committed bench run's floor evidence in
-    * `bench_probe_history.txt`: its min fresh-JVM worker probe and how
-    * many families it stamped. The r18 verdict's open question — is the
-    * 0.684 floor stale, or does the stress phase self-heat? — needs
-    * cross-run probe history ON DISK; six rounds of BENCH-file
-    * archaeology is what this replaces. */
-  final case class RunRecord(label: String, floor: Double, stamps: Int)
-
-  /** Parse `bench_probe_history.txt`: one `label floor stamps` triple
-    * per line, `#` comments and malformed/non-positive lines dropped
-    * (damage degrades to "no history", never a crash). File order IS
-    * chronological order — labels are free-form display text. */
-  private[graft] def parseHistory(text: String): Vector[RunRecord] =
-    text.linesIterator.flatMap { l =>
-      val t = l.trim
-      if (t.isEmpty || t.startsWith("#")) None
-      else t.split("\\s+") match {
-        case Array(lab, f, s) =>
-          try {
-            val floor = f.toDouble
-            val stamps = s.toInt
-            if (floor > 0 && floor.isFinite && stamps >= 0)
-              Some(RunRecord(lab, floor, stamps))
-            else None
-          } catch { case _: NumberFormatException => None }
-        case _ => None
-      }
-    }.toVector
-
-  private[graft] def renderHistoryLine(r: RunRecord): String =
-    s"${r.label} ${jnum(r.floor)} ${r.stamps}\n"
-
-  /** Rolling calm-floor candidate (r18 verdict task 1): the min probe
-    * over the last [[FloorWindow]] recorded runs — what the floor WOULD
-    * be if re-baselined to "calm for this machine as it now is". Rides
-    * the parsed line every run so the floor-vs-self-heat question stays
-    * answerable from artifacts alone. -1 with no history. */
-  private[graft] val FloorWindow = 5
-  private[graft] def floorCandidate(hist: Vector[RunRecord]): Double =
-    if (hist.isEmpty) -1.0 else hist.takeRight(FloorWindow).map(_.floor).min
-
-  /** HYSTERESIS RE-BASELINE RULE (r18 verdict task 1, spec-pinned): when
-    * the last [[RebaselineStreak]] recorded runs' min probes ALL exceed
-    * the stamping bound (1.25 × floorRef), the floor no longer describes
-    * an attainable calm state — re-baseline to [[floorCandidate]] with a
-    * versioned log entry (old floor retained) so stamps measure calm for
-    * the machine as it now is. NOTE the honest r19 answer: r17's driver
-    * floor was 0.841 ≤ the 0.855 bound — a stampable window existed
-    * within the last three rounds, so on the r16-r18 history this rule
-    * correctly does NOT fire; it arms only if r19+ stay hot throughout
-    * (the spec pins both shapes). */
-  private[graft] val RebaselineStreak = 3
-  private[graft] def needsRebaseline(hist: Vector[RunRecord],
-      floorRef: Double): Boolean =
-    floorRef > 0 && hist.size >= RebaselineStreak &&
-      hist.takeRight(RebaselineStreak)
-        .forall(_.floor > StampRefMult * floorRef)
-
-  /** Settle wait before the deferred re-attempts (pure, spec-pinned):
-    * when EVERY queued family deferred on one hot window, the "end of
-    * the stress phase" arrives seconds later — too close to
-    * de-correlate, and the first ungated re-attempt would burn a full
-    * family run on the same spike (observed in the r17 shipped-bits
-    * rehearsal: the whole queue deferred in <30 s and events re-ran
-    * while still warm). Wait out the remainder of the heat-evidence
-    * window, but never into the last 60 s of budget — the re-attempts
-    * themselves need room. Zero when the heat evidence is already old
-    * (families ran in between) or budget is short. */
-  private[graft] def settleWaitSecs(lastHotAt: Double, elapsed: Double,
-      budget: Double): Double =
-    math.max(0.0, math.min(lastHotAt + HotProbeReuseSecs - elapsed,
-      budget - elapsed - 60.0))
-
-  /** One family's certification record in the persisted stress ledger:
-    * `stamp` is the run counter of its last CLEAN isolated run (0 =
-    * never certified), `arm` the arm-group cursor its NEXT run uses.
-    * The r15 verdict's structural finding: cursor rotation is fair
-    * in-order but blind to staleness — events/graph sat uncertified
-    * three rounds while fresher families re-certified ahead of them.
-    * Stalest-first ordering is the fix: a family that certifies moves
-    * to the back; one that's contended, skipped, or failed keeps its
-    * old stamp and so keeps (or gains) priority. */
-  final case class FamilyLedger(stamp: Long, arm: Int)
-
-  /** Parse `bench_stress_ledger.txt` (one `family stamp arm` triple per
-    * line). Unknown families, malformed lines, and out-of-range stamps
-    * are dropped — a stale or hand-damaged ledger degrades to "never
-    * certified", never to a crash or a wedged ordering (a stamp near
-    * Long.MaxValue would overflow `maxStamp + 1` and invert staleness,
-    * so anything outside [0, 2^53] reads as damage). */
-  private[graft] def parseLedger(text: String): Map[String, FamilyLedger] = {
-    val known = StressOps.families.map(_._1).toSet
-    val maxSane = 1L << 53
-    text.linesIterator.flatMap { l =>
-      l.trim.split("\\s+") match {
-        case Array(f, s, a) if known(f) =>
-          try {
-            val stamp = s.toLong
-            val arm = a.toInt
-            if (stamp < 0 || stamp > maxSane || arm < 0) None
-            else Some(f -> FamilyLedger(stamp, arm))
-          } catch { case _: NumberFormatException => None }
-        case _ => None
-      }
-    }.toMap
-  }
-
-  private[graft] def renderLedger(m: Map[String, FamilyLedger]): String =
-    StressOps.families.map(_._1)
-      .flatMap(f => m.get(f).map(e => s"$f ${e.stamp} ${e.arm}"))
-      .mkString("", "\n", "\n")
-
-  /** Families in stalest-first order: ascending last-certified stamp,
-    * ties broken by canonical [[StressOps.families]] order. A family
-    * absent from the ledger reads stamp 0 — maximum priority. */
-  private[graft] def staleOrdered(
-      ledger: Map[String, FamilyLedger]): Seq[(String, Seq[String])] =
-    StressOps.families.zipWithIndex.sortBy { case ((f, _), i) =>
-      (ledger.get(f).map(_.stamp).getOrElse(0L), i)
-    }.map(_._1)
-
-  /** Whole-run contention (r15 verdict task 2): per-family brackets
-    * compare to the run's OWN floor, so a uniformly-hot run certified
-    * uniformly-slow numbers (r15's token family passed "clean" on a
-    * floor that was itself 1.8× calm). The persisted calm-floor
-    * reference (best probe across all committed runs) closes that: a
-    * run whose floor exceeds 1.5× the reference is flagged on the
-    * parsed line itself, so a judge classifies calm/hot from the
-    * artifact alone. */
-  private[graft] def runContended(runFloor: Double, floorRef: Double): Boolean =
-    floorRef > 0 && runFloor > 1.5 * floorRef
 
   // same JDK-17 module opens the sbt fork gets (build.sbt) — Spark 4
   // outside spark-submit needs them (shared by every worker fork)
@@ -343,10 +77,8 @@ object Bench {
     * by `timeoutMins`. None on ANY infrastructure failure (spawn,
     * timeout, non-zero exit). The worker's stderr (Spark logs) is
     * inherited; stdout is consumed here so the parent's parsed JSON
-    * line stays clean. The single spawn/reader/watchdog path shared by
-    * family workers and probe-only forks (r19 review finding 4 — two
-    * diverging copies of this machinery is how protocols rot). Needs no
-    * parent SparkSession: only java.home + classpath. */
+    * line stays clean. Needs no parent SparkSession: only java.home +
+    * classpath. */
   private def forkWorkerLines(cliArgs: Seq[String],
       timeoutMins: Long): Option[Vector[String]] =
     try {
@@ -383,29 +115,42 @@ object Bench {
       else Some(lines.synchronized(lines.toVector))
     } catch { case _: Throwable => None }
 
-  /** Fork a probe-only [[StressWorker]] (family "_probe") and return its
-    * fresh-JVM machine probe, or -1 on any infrastructure failure. Used
-    * for probe0 (BEFORE the parent does any Spark work — is the box hot
-    * before we touch it?) and the post-settle probe (did idling calm
-    * it?). */
-  private def forkProbeWorker(timeoutMins: Long): Double = {
-    val Probe = """\{"op":"probe","samples":\[([0-9.]+)\]\}""".r
-    forkWorkerLines(Seq("_probe"), timeoutMins)
-      .flatMap(_.collectFirst { case Probe(v) => v.toDouble })
-      .getOrElse(-1.0)
+  /** Stress families in run order: `lead` (the cursor — the first
+    * family the previous run's budget skipped) first, the rest following
+    * in canonical order, wrapping. An unknown lead keeps canonical order. */
+  private[graft] def rotatedFrom(lead: String): Seq[(String, Seq[String])] = {
+    val i = math.max(0, StressOps.families.indexWhere(_._1 == lead))
+    StressOps.families.drop(i) ++ StressOps.families.take(i)
   }
+
+  /** Min and spread (max − min) over a query's CLEAN samples: an errored
+    * round's -1 never enters either (it would read `min: -1` and
+    * `spread: max + 1`). Both -1 when no round succeeded. */
+  private[graft] def cleanMinSpread(xs: Seq[Double]): (Double, Double) = {
+    val ok = xs.filter(_ >= 0)
+    if (ok.isEmpty) (-1.0, -1.0) else (ok.min, ok.max - ok.min)
+  }
+
+  /** Per-field lower median of one query's or op's per-round job counts.
+    * Jobs, stages, tasks and shuffle bytes repeat round over round; CPU
+    * time is the field noise moves. */
+  private[graft] def medianCounts(xs: Seq[JobCounts]): JobCounts =
+    if (xs.isEmpty) JobCounts()
+    else {
+      def med[N: Ordering](f: JobCounts => N): N =
+        xs.map(f).sorted.apply((xs.size - 1) / 2)
+      JobCounts(med(_.jobs), med(_.stages), med(_.tasks), med(_.cpuNs),
+        med(_.shuffleReadBytes), med(_.shuffleWriteBytes))
+    }
 
   /** Render the one driver-parsed JSON line. Pure so a spec can pin the
     * length invariant at any gate count: if the assembled line would
-    * exceed [[MaxLineChars]], progressively drop the optional payloads
-    * (headline queries map first, then stress, then probe_bracket) — the
-    * driver's contract needs `value` and `errors` above all. The
-    * `phases` object (per-phase wall seconds: warmup/stress/shared/
-    * queries), `isolated_families`/`stress_cursor` and `contended` are
-    * small and ride every candidate: budget regressions and poisoned
-    * stress mins must be visible from the artifact alone (r13's rc=124
-    * had NO artifact to diagnose from; r14's poisoned events/graph mins
-    * needed bench_detail.json archaeology to attribute). */
+    * exceed [[MaxLineChars]], optional payloads drop in order (the stress
+    * block, then the headline queries, then the errors array is
+    * truncated) — a reader of the line needs `value` and `errors` above
+    * all. `phases` (per-phase wall seconds) and `stress_cursor` are small
+    * and ride every candidate, so a budget regression is visible from the
+    * artifact alone. */
   private[graft] def renderParsedLine(
       total: Double,
       queryMedians: Seq[(String, Double)],
@@ -413,65 +158,31 @@ object Bench {
       rounds: Int,
       sharedSec: Double,
       stress: Seq[(String, Double)],
-      probeBracket: Seq[(String, (Double, Double))],
-      contended: Seq[String],
       sfDir: String,
       phases: Seq[(String, Double)] = Seq.empty,
-      isolatedFamilies: Int = 0,
       stressCursor: String = "",
-      probeFloorRef: Double = -1.0,
-      runIsContended: Boolean = false,
-      warmupProbe: (Double, Double) = (-1.0, -1.0),
-      queriesProbe: (Double, Double) = (-1.0, -1.0),
-      warmupHot: Boolean = false,
-      stressOvershoot: String = "",
-      probe0: Double = -1.0,
-      settleProbe: Double = -1.0,
-      floorCand: Double = -1.0,
-      floorRefresh: String = "",
       queryMins: Seq[(String, Double)] = Seq.empty): String = {
     def obj(kvs: Seq[(String, Double)]): String =
       kvs.map { case (k, v) => "\"" + k + "\":" + jnum(v) }
         .mkString("{", ",", "}")
-    // brackets at 2 decimals (10 ms resolution on a ~1 s probe — ample
-    // for heat classification; the gates judge the in-memory values):
-    // ~40 chars on a 10-family line, part of the r19 budget that keeps
-    // the FULL candidate under the window on an all-families calm run
     def jnum2(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    def brObj(kvs: Seq[(String, (Double, Double))]): String =
-      kvs.map { case (k, (a, b)) =>
-        "\"" + k + "\":[" + jnum2(a) + "," + jnum2(b) + "]"
-      }.mkString("{", ",", "}")
     val head = queryMedians.filter { case (k, _) => headline.contains(k) }
     def errJsonOf(es: Seq[String]): String =
       es.map("\"" + jstr(_) + "\"").mkString("[", ",", "]")
-    val contJson = contended.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // per-phase heat attribution (r16 verdict task 3): the run-level
-    // flag compares the run's BEST probe to calm, which is blind to a
-    // run that is hot in WINDOWS (r16: warmup 49.6 s on a "calm" line —
-    // its heat only visible minutes later when graph's probes read
-    // 1.016). warmup_probe/queries_probe bracket those phases with their
-    // own samples, and warmup_hot evaluates the warmup bar against ITS
-    // probe — small, so they ride every shed candidate.
-    def probePair(p: (Double, Double)): String =
-      "[" + jnum(p._1) + "," + jnum(p._2) + "]"
-    // per-query heat classification (r20, VERDICT r19 item 6 — addition
-    // only): each headline query's MIN-of-rounds next to its median, as
-    // a POSITIONAL array aligned with the `queries` key order (a keyed
-    // object would cost ~500 chars and overflow the 1800-char window; 19
-    // two-decimal values cost ~110). A median ≫ its min marks that
-    // query's rounds as heat-poisoned — the q_funnel-style 6× noise
-    // swing (r19: 2.726 median on a byte-identical plan, floor 0.58)
-    // becomes classifiable from the artifact alone, and PERF can stop
-    // counting such rows as code regressions. -1 = no clean sample.
+    // `queries_min` is POSITIONAL: entry i is the min-of-rounds of the
+    // i-th key of `queries` in the order this line writes them
+    // (`queryMedians` insertion order). A keyed object would cost ~500
+    // chars of the window. A consumer must read `queries`' keys in
+    // document order; parsing it into an unordered map loses the
+    // alignment. -1 = no clean sample.
     val minsMap = queryMins.toMap
     def minArr(qs: Seq[(String, Double)]): String =
       qs.map { case (k, _) => minsMap.get(k).map(jnum2).getOrElse("-1") }
         .mkString("[", ",", "]")
     def assemble(qs: Seq[(String, Double)], st: Seq[(String, Double)],
-        br: Seq[(String, (Double, Double))], es: Seq[String]): String =
-      s"""{"metric":"total","value":${jnum(total)},"unit":"sec","queries":${obj(qs)},"queries_min":${minArr(qs)},"errors":${errJsonOf(es)},"rounds":$rounds,"shared":{"shared_build":${jnum(sharedSec)}},"phases":${obj(phases)},"stress_overshoot_reason":"${jstr(stressOvershoot)}","warmup_probe":${probePair(warmupProbe)},"warmup_hot":$warmupHot,"queries_probe":${probePair(queriesProbe)},"isolated_families":$isolatedFamilies,"stress_cursor":"$stressCursor","probe_floor_ref":${jnum(probeFloorRef)},"probe0":${jnum(probe0)},"settle_probe":${jnum(settleProbe)},"floor_candidate":${jnum(floorCand)},"floor_refresh":"${jstr(floorRefresh)}","run_contended":$runIsContended,"contended":$contJson,"probe_bracket":${brObj(br)},"stress":${obj(st)},"sf":"${jstr(sfDir)}"}"""
+        es: Seq[String]): String =
+      s"""{"metric":"total","value":${jnum(total)},"unit":"sec","queries":${obj(qs)},"queries_min":${minArr(qs)},"errors":${errJsonOf(es)},"rounds":$rounds,"shared":{"shared_build":${jnum(sharedSec)}},"phases":${obj(phases)},"stress_cursor":"${jstr(stressCursor)}","stress":${obj(st)},"sf":"${jstr(sfDir)}"}"""
     // final shedding step: a mass-error run (every gate analysis-broken)
     // carries an errors array that alone outgrows the capture window —
     // truncate to the first names plus a count so the artifact stays
@@ -479,85 +190,26 @@ object Bench {
     val truncatedErrors =
       if (errored.size <= 12) errored
       else errored.take(12) :+ s"(+${errored.size - 12} more errored)"
-    // shed order (r19 revision): the STRESS block drops before the
-    // headline medians — the headline is bounded (19 pinned keys) and is
-    // THE cross-round comparison metric, while a fully-calm run's stress
-    // block (~23 op keys) is the largest and least bounded payload and
-    // is replicated verbatim in bench_detail.json. Brackets + contended
-    // (the certification story) outlive both.
+    // the stress block drops before the headline medians: the headline
+    // is bounded (pinned keys) and is the cross-round comparison metric,
+    // while the stress block is replicated in bench_detail.json
     val candidates = Iterator(
-      assemble(head, stress, probeBracket, errored),
-      assemble(head, Seq.empty, probeBracket, errored),
-      assemble(Seq.empty, Seq.empty, probeBracket, errored),
-      assemble(Seq.empty, Seq.empty, Seq.empty, errored),
-      assemble(Seq.empty, Seq.empty, Seq.empty, truncatedErrors))
+      assemble(head, stress, errored),
+      assemble(head, Seq.empty, errored),
+      assemble(Seq.empty, Seq.empty, errored))
     candidates.find(_.length <= MaxLineChars)
-      .getOrElse(assemble(Seq.empty, Seq.empty, Seq.empty, truncatedErrors))
+      .getOrElse(assemble(Seq.empty, Seq.empty, truncatedErrors))
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Median-of-N per query (default 3): a single-shot run cannot
-    // distinguish real regressions from scheduler/JIT noise — r3→r5 spent
-    // two rounds chasing a q_ann_pq "drift" that was structurally
-    // unanswerable with one sample. Rounds alternate A/B/C over the whole
-    // query list (not back-to-back repeats) so one slow neighbor can't
-    // poison all of a query's samples.
+    // distinguish real regressions from scheduler/JIT noise. Rounds
+    // alternate A/B/C over the whole query list (not back-to-back
+    // repeats) so one slow neighbor can't poison all of a query's samples.
     val rounds = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    def readFileOr(p: java.nio.file.Path, fallback: String): String =
-      try new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-      catch { case _: Throwable => fallback }
-    def appendFile(p: java.nio.file.Path, text: String): Unit =
-      try java.nio.file.Files.write(p, text.getBytes("UTF-8"),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-      catch { case _: Throwable => () }
-    // CALM-FLOOR REFERENCE (r15 verdict task 2): best probe across all
-    // committed runs on this machine, persisted monotone-min. -1 = no
-    // history (first run seeds it; run_contended then stays false).
-    // First line only: the file may one day carry trailing annotations.
-    val floorPath = java.nio.file.Paths.get("bench_probe_floor.txt")
-    val floorFromFile =
-      try readFileOr(floorPath, "").linesIterator
-        .map(_.trim).find(_.nonEmpty).getOrElse("").toDouble
-      catch { case _: NumberFormatException => -1.0 }
-    // PROBE HISTORY + HYSTERESIS RE-BASELINE (r18 verdict task 1): one
-    // record per committed run (min fresh-JVM worker probe + stamp
-    // count). When the last RebaselineStreak runs' floors ALL exceeded
-    // the stamping bound, the floor no longer describes an attainable
-    // calm state — re-baseline to the rolling floorCandidate with a
-    // versioned entry in bench_probe_floor_log.txt (old floor retained)
-    // BEFORE this run's gates read it, so stamps measure calm for the
-    // machine as it now is. On the seeded r16-r18 history this does NOT
-    // fire (r17's 0.841 was under the 0.855 bound — a stampable window
-    // existed); it arms only if r19+ stay hot throughout.
-    val historyPath = java.nio.file.Paths.get("bench_probe_history.txt")
-    val floorLogPath = java.nio.file.Paths.get("bench_probe_floor_log.txt")
-    val history = parseHistory(readFileOr(historyPath, ""))
-    val (probeFloorRef, floorRefresh) =
-      if (needsRebaseline(history, floorFromFile)) {
-        val cand = floorCandidate(history)
-        appendFile(floorLogPath, s"refresh ${jnum(floorFromFile)} -> " +
-          s"${jnum(cand)} after ${history.last.label} reason " +
-          s"$RebaselineStreak-consecutive-over-bound\n")
-        try java.nio.file.Files.write(floorPath,
-          (jnum(cand) + "\n").getBytes("UTF-8"))
-        catch { case _: Throwable => () }
-        (cand, s"${jnum(floorFromFile)}->${jnum(cand)}:" +
-          s"$RebaselineStreak-runs-over-bound")
-      } else (floorFromFile, "")
     val stressEnabled = sys.env.getOrElse("SPARK_GRAFT_STRESS", "1") != "0"
-    val isolate = sys.env.getOrElse("SPARK_GRAFT_STRESS_ISOLATE", "1") != "0"
-    // probe0 (r18 verdict task 1): one fresh-JVM machine probe BEFORE
-    // the parent does ANY Spark work — if the box is already hot here,
-    // the heat is pre-existing; if probe0 is calm but every later
-    // bracket is hot, the run self-heats. Forked (not in-process) so the
-    // sample is population-compatible with the worker probes the floor
-    // and the stamping gates judge against.
-    val probe0 =
-      if (stressEnabled && isolate) forkProbeWorker(timeoutMins = 5)
-      else -1.0
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -566,38 +218,10 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     // Warm up codegen/JIT/parquet-footer paths on the smallest SF so the
     // first timed query doesn't absorb one-time session costs. HEADLINE
-    // queries only (r14 verdict task 5): warming all ~135 gates cost
-    // 81 s per driver run, and what it bought the OTHER queries —
-    // kernel-specific JIT — the median-of-3 already absorbs (the slow
-    // first sample is dropped by the median); the session-wide one-time
-    // costs (codegen infra, parquet reader classes) warm on any query.
-    // Stress families run in fresh forked JVMs and never saw this warmup
-    // at all.
-    // Per-query warmup seconds go to bench_detail.json (r15 verdict task
-    // 4): the r15 driver read warmup=86.7 s vs 24-30 s in quiet
-    // rehearsals, and attribution needs the breakdown — which query ate
-    // the wall (first-query session codegen vs uniform heat) must be
-    // readable from the artifact, not re-measured.
-    // FRESH-JVM probe samples only (each stress worker's bracket): the
-    // calm-floor reference and the run floor must stay comparable to
-    // what the deferral/stamping gates judge — a fully-JIT-warmed
-    // parent-JVM probe can read 25%+ faster than any fresh worker's,
-    // and folding it into the monotone-min reference would make the
-    // 1.25× stamp bound permanently unattainable (r17 review finding).
-    // The warmup/queries phase probes publish as their own brackets and
-    // never enter this buffer.
-    val probeSamples = scala.collection.mutable.ArrayBuffer.empty[Double]
-    if (probe0 > 0) probeSamples += probe0 // fresh-JVM, pre-any-Spark-work
-    // warmup-phase heat bracket (r16 verdict task 3): the r16 driver
-    // read warmup 49.6 s against the ≤40 s bar on a line whose
-    // run-level flag said calm — the run's BEST probe came minutes
-    // later. The bar must be judged against the warmup window's OWN
-    // probes. Probes sit OUTSIDE the timed warmup window (they measure
-    // the machine, not the warmup) — NOTE the r17 semantics shift: the
-    // pre-probe now absorbs the session's first-job init that earlier
-    // rounds billed into warmupSec, so r17+ warmup reads a few seconds
-    // lower than r16's on identical machines (SURVEY §8.24).
-    val warmupProbePre = StressOps.probeWarmed(spark)
+    // queries only: what warming every gate would buy the others —
+    // kernel-specific JIT — the median-of-3 already absorbs, and the
+    // session-wide one-time costs warm on any query. Per-query warmup
+    // seconds go to bench_detail.json.
     val tWarm0 = System.nanoTime()
     val warmBreakdown =
       scala.collection.mutable.LinkedHashMap.empty[String, Double]
@@ -610,462 +234,78 @@ object Bench {
       }
     }
     val warmupSec = (System.nanoTime() - tWarm0) / 1e9
-    val warmupProbePost = StressOps.probeOnce(spark)
-    val warmupProbe = (warmupProbePre, warmupProbePost)
-    // hot-warmup verdict: BOTH ends of the warmup window above the
-    // run-contention bound means the 40 s bar was measured on a hot box
-    // (attributable heat); one calm end leaves a slow warmup attributed
-    // to plan cost. Uses min so heat is only ever claimed with evidence
-    // — and a warm-JVM probe reads FASTER than the fresh-JVM reference,
-    // so a `true` here is conservative (the box really was loaded).
-    val warmupHot = probeFloorRef > 0 &&
-      math.min(warmupProbePre, warmupProbePost) > 1.5 * probeFloorRef
-    // Cross-scale stress datapoints — each FAMILY runs in a FRESH forked
-    // JVM (graft.StressWorker) by default: r12's in-block numbers moved
-    // 1.8-2× probe-normalized on byte-identical code (semdedup samples of
-    // 120/152/47 s within ONE run) while an isolated fresh-JVM re-run of
-    // the same op read in-band minutes later — heap/JIT/page-cache churn
-    // from the 130-gate warmup and earlier stress ops, which the short
-    // CPU-bound probe demonstrably does not see (it read FASTER while the
-    // long ops read 2× slower, so normalization AMPLIFIED the noise).
-    // Isolation makes every datapoint start from identical JVM state —
-    // the min-of-N is then a certifiable cross-round statistic. The probe
-    // stays as a machine sanity line (one sample before + after each
-    // family, min across workers). SPARK_GRAFT_STRESS_ISOLATE=0 or a
-    // worker spawn failure falls back to in-process execution (same ops,
-    // same keys) so the driver bench never breaks on a weird environment.
+    // Cross-scale stress datapoints: each FAMILY runs in a fresh forked
+    // JVM (graft.StressWorker), so every datapoint starts from identical
+    // JVM state and its min-of-N compares across rounds. A family whose
+    // worker fails publishes -1 for its ops, the errored-op convention.
     val stress = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val stressSamples = scala.collection.mutable.LinkedHashMap.empty[String, Vector[Double]]
-    val stressCopies = sys.env.getOrElse("SPARK_GRAFT_STRESS_COPIES", "100").toInt
-    val semCopies = sys.env.getOrElse("SPARK_GRAFT_SEMDEDUP_COPIES", "50").toInt
-    // min-of-3 by default: a same-session A/B (r12) showed min-of-2
-    // still moving 45-67% when the machine slowed 20% mid-block
+    val stressCounters = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    val stressConsts = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    // min-of-3 by default: min-of-2 still moved 45-67% when the machine
+    // slowed 20% mid-block
     val stressRuns = sys.env.getOrElse("SPARK_GRAFT_STRESS_RUNS", "3").toInt
-    // TOTAL stress budget (r13's gating defect — VERDICT task 1): the
-    // per-family watchdog bounds a HUNG worker, but nothing bounded the
-    // healthy case, and 9 families × min-of-3 × fresh-JVM startup summed
-    // to ~1,516 s of raw samples — past the driver's wall-clock window
-    // (BENCH_r13.json rc=124, parsed:null — no artifact at all). The
-    // budget enforces: (a) past budget/2, families drop to min-of-2
-    // samples; (b) past the budget, remaining families are SKIPPED and
-    // rotated to the FRONT of the next bench run via a persisted cursor
-    // (bench_stress_cursor.txt beside bench_detail.json), so every family
-    // is still certified every ~2 rounds, and a partial-but-parseable
-    // artifact always beats a complete-but-absent one. Headline queries
-    // and the probe always run regardless.
+    // TOTAL stress budget: the per-family watchdog bounds a HUNG worker,
+    // the budget bounds the healthy case (10 families × min-of-3 ×
+    // fresh-JVM startup can outrun a caller's wall-clock limit). Past
+    // budget/2 families drop to fewer samples; past the budget the rest
+    // are SKIPPED, and the first skipped family leads the next run
+    // through the cursor file (cwd, beside bench_detail.json) — a
+    // partial-but-parseable artifact always beats an absent one.
     val stressBudget =
       sys.env.getOrElse("SPARK_GRAFT_STRESS_BUDGET_SECS", "600").toDouble
-    // STALENESS LEDGER (r15 verdict task 1): per-family last-clean-run
-    // stamp + arm cursor. Stalest-first ordering replaces the r13-15
-    // fixed-order cursor rotation, which left events/graph uncertified
-    // three rounds while fresher families re-certified ahead of them.
-    // bench_stress_cursor.txt stays as a human-readable pointer to the
-    // next run's lead family (and the parsed line's stress_cursor).
     val cursorPath = java.nio.file.Paths.get("bench_stress_cursor.txt")
-    val ledgerPath = java.nio.file.Paths.get("bench_stress_ledger.txt")
-    val ledger0 = parseLedger(readFileOr(ledgerPath, ""))
-    val runCounter = (ledger0.values.map(_.stamp) ++ Seq(0L)).max + 1
-    // DISTINCT families that ran isolated (a contended retry re-forks the
-    // same family — it must not double-count the audit bit)
-    val isolatedFams = scala.collection.mutable.LinkedHashSet.empty[String]
-    var nextCursor = staleOrdered(ledger0).head._1
-    var finalLedger = ledger0
-    // the ops each family actually ran this run (arm rotation) — for the
-    // retry path and the detail JSON's audit trail
-    val famOps = scala.collection.mutable.LinkedHashMap.empty[String, Seq[String]]
+    val lead =
+      try new String(java.nio.file.Files.readAllBytes(cursorPath), "UTF-8").trim
+      catch { case _: Throwable => "" }
     val skippedFamilies = scala.collection.mutable.ArrayBuffer.empty[String]
-    // per-family probe bracket (probe sample before/after the family's
-    // ops — the best attempt's, when a contended family re-ran) and the
-    // families whose FINAL bracket is still contended: both ride the
-    // parsed line so a poisoned min is attributable from the artifact
-    // alone (r14 verdict task 1)
-    val famBracket =
-      scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)]
-    val contendedFams = scala.collection.mutable.ArrayBuffer.empty[String]
-    // families whose FIRST attempt was heat-deferred (r16 task 1) — the
-    // detail JSON's audit trail of the pre-flight gate's firings
-    val deferredFams = scala.collection.mutable.ArrayBuffer.empty[String]
+    var nextCursor = rotatedFrom(lead).head._1
     val tStress0 = System.nanoTime()
     def stressElapsed: Double = (System.nanoTime() - tStress0) / 1e9
-    // budget-overshoot attribution (r17 verdict task 4): which late-phase
-    // activities ran, so a phases.stress above the budget classifies
-    // itself on the parsed line (settle wait / deferred re-attempt /
-    // contention retry / plain in-flight family)
-    var stressSettled = false
-    // post-settle fresh-JVM probe (r18 verdict task 1): did the idle
-    // wait actually calm the box? -1 when no settle happened.
-    var settleProbe = -1.0
-    // per-family heavy ops skipped on a hot ungated window (r18 task 2).
-    // UNION across attempts: an op can be published by a calm attempt
-    // (min-merged) and skipped by a hot retry — the audit must show both
-    // facts, not whichever attempt came last.
-    val famHotSkipped =
-      scala.collection.mutable.LinkedHashMap.empty[String, Seq[String]]
-    var stressReAttempted = false
-    var stressRetried = false
     if (stressEnabled) {
+      // the workers are separate JVMs: free what the warmup cached
       spark.catalog.clearCache()
       graft.core.CacheRegistry.drain()
-
-      /** Fork graft.StressWorker for one family; None on any
-        * infrastructure failure (spawn, timeout, non-zero exit, no
-        * parseable output) — the caller then runs the family in-process.
-        * The worker's stderr (Spark logs) is inherited; its stdout is
-        * consumed here so the parent's parsed JSON line stays clean. */
-      def runIsolated(family: String, famRuns: Int, famOpList: Seq[String],
-          watchdogMins: Long, gateRef: Double,
-          stampRef: Double): Option[StressOps.Results] =
-        // per-family watchdog (forkWorkerLines' timeout): a hung worker
-        // must not hang the bench — capped at the REMAINING budget (plus
-        // margin), or one hang would blow the driver window the budget
-        // exists to protect. Double.toString, NOT jnum, for the refs:
-        // %.3f rounds a small reference (or any sub-millisecond
-        // precision) to 0.000, which the worker reads as "no reference"
-        // and never defers.
-        forkWorkerLines(Seq(family, famRuns.toString,
-            famOpList.mkString(","), gateRef.toString, stampRef.toString),
-            watchdogMins).flatMap { lines =>
-          val OpConst = """\{"op":"([^"]+)","const":([-0-9.]+)\}""".r
-          val OpSamples = """\{"op":"([^"]+)","samples":\[([-0-9.,]*)\]\}""".r
-          val HotSkip = """\{"hot_skipped":\[([^\]]*)\]\}""".r
-          val res = new StressOps.Results
-          lines.foreach {
-            case OpConst(k, v) => res.consts(k) = v.toDouble
-            case OpSamples(k, xs) => res.samples(k) =
-              xs.split(",").filter(_.nonEmpty).map(_.toDouble).toVector
-            case """{"deferred":true}""" => res.deferred = true
-            case HotSkip(xs) => res.hotSkipped ++= xs.split(",")
-              .map(_.trim.stripPrefix("\"").stripSuffix("\""))
-              .filter(_.nonEmpty)
-            case _ => ()
-          }
-          if (res.samples.isEmpty) None else Some(res)
-        }
-
-      /** Fold one attempt's results into the published maps. Op values
-        * MIN-MERGE across attempts (the min is the contention-robust
-        * statistic — noise only ever adds time, so the best attempt's
-        * min is always valid); -1 (errored) survives only if EVERY
-        * attempt errored. Returns this attempt's probe bracket.
-        * `isolated=false` (the in-process fallback) keeps its probe
-        * samples OUT of the floor population: they come from the warmed
-        * parent JVM and would ratchet the monotone-min calm reference
-        * below anything a fresh worker can reach (r17 review pass 2) —
-        * the bracket is still returned for display/retry decisions. */
-      def fold(res: StressOps.Results,
-          isolated: Boolean = true): (Double, Double) = {
-        res.consts.foreach { case (k, v) =>
-          if (!stress.contains(k)) stress(k) = v
-        }
-        var bracket = (-1.0, -1.0)
-        res.samples.foreach { case (k, xs) =>
-          if (k == "probe") {
-            if (isolated) probeSamples ++= xs
-            bracket = (xs.headOption.getOrElse(-1.0),
-              xs.lastOption.getOrElse(-1.0))
-          } else {
-            stressSamples(k) = stressSamples.getOrElse(k, Vector.empty) ++ xs
-            // empty guard: SPARK_GRAFT_STRESS_RUNS=0 yields samples:[]
-            // per op — publish errored (-1), never crash on empty.min
-            val v = if (xs.isEmpty || xs.exists(_ < 0)) -1.0 else xs.min
-            stress(k) = stress.get(k) match {
-              case Some(old) if old >= 0 && v >= 0 => math.min(old, v)
-              case Some(old) => math.max(old, v) // one errored → the valid one
-              case None => v
-            }
-          }
-        }
-        bracket
-      }
-
-      /** Union-merge one attempt's hot-skip audit into the per-family
-        * map (r19): an op can be published by a calm attempt and skipped
-        * by a hot retry — the audit shows both facts. */
-      def recordHotSkips(family: String, res: StressOps.Results): Unit =
-        if (res.hotSkipped.nonEmpty)
-          famHotSkipped(family) =
-            (famHotSkipped.getOrElse(family, Seq.empty) ++ res.hotSkipped)
-              .distinct
-
-      /** One attempt at a family: isolated worker first, in-process
-        * fallback only while budget remains. None = could not run; the
-        * Boolean records whether THIS attempt ran isolated — the
-        * certification stamp must follow the kept bracket's provenance,
-        * not mere set-membership (a clean in-process bracket must never
-        * certify just because a different, contended attempt was
-        * isolated). */
-      def attemptFamily(family: String, famRuns: Int, famOpList: Seq[String],
-          gateRef: Double): Option[(StressOps.Results, Boolean)] = {
-        // watchdog = remaining budget + a settle margin, never more
-        // than 45 min: a hung worker costs at most the budget, and the
-        // family rotates to the next run's front instead of re-running
-        // in-process with no bound
-        val watchdogMins = math.min(45L, math.max(2L,
-          math.ceil((stressBudget - stressElapsed + 120.0) / 60.0).toLong))
-        (if (isolate)
-           runIsolated(family, famRuns, famOpList, watchdogMins, gateRef,
-             stampRef = probeFloorRef)
-         else None) match {
-          case Some(r) =>
-            // a deferred attempt ran NO ops — it must not count toward
-            // the isolated_families audit ("this many families'
-            // datapoints are churn-immune")
-            if (!r.deferred) isolatedFams += family
-            Some((r, true))
-          case None if stressElapsed >= stressBudget => None
-          case None =>
-            // in-process fallback: same ops, same keys — a spawn
-            // failure costs isolation, never the datapoints. Ungated
-            // AND unskipped (stampRef -1, r19 review finding 3): the
-            // calm-floor reference describes fresh-JVM probes (a warmed
-            // parent-JVM probe is population-incompatible with that
-            // bound), an in-process bracket can never stamp anyway, and
-            // losing heavy-arm datapoints to a heat gate this path
-            // can't certify through would be pure downside.
-            if (isolate) System.err.println(
-              s"[bench] stress family '$family' worker failed; running in-process")
-            Some((StressOps.runFamily(spark, family, sfDir, stressCopies,
-              semCopies, famRuns, famOpList,
-              stampRef = -1.0), false))
-        }
-      }
-
-      // whether each family's KEPT bracket came from an isolated attempt
-      // (the certification requirement — isolatedFams is only the audit
-      // count of distinct families that ever forked)
-      val bracketIsolated =
-        scala.collection.mutable.LinkedHashMap.empty[String, Boolean]
-      // stalest-first, HEAD-TAIL INTERLEAVED (r15 task 1 + r17 task 2):
-      // the stalest family still leads (certification priority), but
-      // every second slot comes from the freshest-stamped END of the
-      // queue — the six-family tail with zero isolated driver
-      // datapoints finally gets early-budget slots instead of waiting
-      // behind three uncertified heads that heat keeps re-deferring
-      val ordered = interleaveHeadTail(staleOrdered(ledger0))
-      // HEAT DEFERRAL (r16 verdict task 1): families whose worker's
-      // pre-probe exceeded the stamping bound were refused their op run
-      // (~probe cost, not minutes) and re-attempt at the END of the
-      // stress phase — heat is temporally correlated (r16: events'
-      // probes read 2.7/3.2 at minute 1, graph's 1.0/1.1 minutes later),
-      // so the end of the run is the cheapest de-correlation available.
-      // The bracket of each deferral attempt is kept as heat evidence
-      // for families that never get a clean shot.
-      val deferBracket =
-        scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)]
-      // parent-side heat memory: a worker's hot-probe deferral is
-      // reusable evidence for a short window (heat is temporally
-      // correlated at the seconds scale) — consecutive families defer
-      // WITHOUT paying another fork+probe (~15-20 s each; on a
-      // uniformly-warm box the gate would otherwise spend ~3 min of the
-      // 600 s budget re-discovering the same heat ten times)
-      var lastHotAt = -1e9
-      var lastHotBracket = (-1.0, -1.0)
-      // consecutive families excused by the CURRENT heat memory (r18
-      // task 3): capped at MaxHotReuse — r18 reused ONE stale bracket
-      // for eight families, so metrics never got its own probe
-      var hotReuse = 0
-      for ((family, _) <- ordered) {
+      val OpConst = """\{"op":"([^"]+)","const":([-0-9.]+)\}""".r
+      val OpSamples =
+        """\{"op":"([^"]+)","samples":\[([-0-9.,]*)\],"counters":(\{[^}]*\})\}""".r
+      for ((family, ops) <- rotatedFrom(lead)) {
         val decision =
           if (skippedFamilies.nonEmpty) None
           else familyRunsUnderBudget(stressElapsed, stressBudget, stressRuns)
         decision match {
           case None => skippedFamilies += family
           case Some(famRuns) =>
-            if (probeFloorRef > 0 &&
-                reuseHeatMemory(stressElapsed - lastHotAt, hotReuse)) {
-              System.err.println(s"[bench] stress family '$family' " +
-                "deferred on recent hot probe (no fork)")
-              deferBracket(family) = lastHotBracket
-              deferredFams += family
-              hotReuse += 1
-            } else {
-              val ops = StressOps.armsFor(family,
-                ledger0.get(family).map(_.arm).getOrElse(0))
-              attemptFamily(family, famRuns, ops,
-                  gateRef = probeFloorRef) match {
-                case Some((res, _)) if res.deferred =>
-                  System.err.println(s"[bench] stress family '$family' " +
-                    "pre-probe hot; deferring to end of stress phase")
-                  deferBracket(family) = fold(res) // hot-probe evidence only
-                  deferredFams += family
-                  lastHotAt = stressElapsed
-                  lastHotBracket = deferBracket(family)
-                  hotReuse = 0 // fresh evidence — the cap restarts
-                case Some((res, iso)) =>
-                  // recorded only for families that actually RAN: the
-                  // detail JSON's stress_arms documents arm coverage, and
-                  // a judge must not read ops off skipped/failed families
-                  famOps(family) = ops
-                  famBracket(family) = fold(res, iso)
-                  bracketIsolated(family) = iso
-                  recordHotSkips(family, res)
-                  // an ISOLATED attempt started on a clean gate probe —
-                  // fresher evidence than any remembered heat. The
-                  // in-process fallback runs UNGATED (no probe passed),
-                  // so it must not clear the memory (r17 review finding).
-                  if (iso) { lastHotAt = -1e9; hotReuse = 0 }
-                case None =>
-                  // worker failed AND the budget is spent (e.g. a hang
-                  // ate it): don't run unbounded in-process — rotate
-                  System.err.println(s"[bench] stress family '$family' " +
-                    "worker failed past budget; rotating to next run")
-                  skippedFamilies += family
-              }
+            // watchdog = remaining budget + a settle margin, never more
+            // than 45 min: a hung worker costs at most the budget
+            val watchdogMins = math.min(45L, math.max(2L,
+              math.ceil((stressBudget - stressElapsed + 120.0) / 60.0).toLong))
+            val lines = forkWorkerLines(Seq(family, famRuns.toString),
+              watchdogMins)
+            if (lines.isEmpty)
+              System.err.println(s"[bench] stress family '$family' worker failed")
+            lines.getOrElse(Vector.empty).foreach {
+              case OpConst(k, v) => stressConsts(k) = v.toDouble
+              case OpSamples(k, xs, counters) =>
+                val opSamples = xs.split(",").filter(_.nonEmpty)
+                  .map(_.toDouble).toVector
+                stressSamples(k) = opSamples
+                stressCounters(k) = counters
+                // empty guard: SPARK_GRAFT_STRESS_RUNS=0 yields samples:[]
+                stress(k) =
+                  if (opSamples.isEmpty || opSamples.exists(_ < 0)) -1.0
+                  else opSamples.min
+              case _ => ()
             }
+            ops.foreach(k => if (!stress.contains(k)) stress(k) = -1.0)
         }
       }
-      // settle wait: when the whole queue deferred on one recent hot
-      // window, give the heat time to pass before the first ungated
-      // re-attempt (bounded by [[settleWaitSecs]] — zero if evidence is
-      // old or budget short)
-      if (deferredFams.nonEmpty && probeFloorRef > 0) {
-        val wait = settleWaitSecs(lastHotAt, stressElapsed, stressBudget)
-        if (wait > 0) {
-          System.err.println(
-            f"[bench] settling $wait%.0f s before deferred re-attempts " +
-              "(heat de-correlation)")
-          stressSettled = true
-          Thread.sleep((wait * 1000).toLong)
-          // post-settle fresh-JVM probe (r18 task 1): the direct
-          // self-heat test — probe0 calm + hot family gates + a calm
-          // probe HERE means our own ops heat the box and idling cures
-          // it; still-hot here means the load is external. Joins the
-          // floor population (fresh JVM, often the run's calmest window).
-          if (isolate) {
-            settleProbe = forkProbeWorker(timeoutMins = 5)
-            if (settleProbe > 0) probeSamples += settleProbe
-          }
-        }
-      }
-      // deferred re-attempts, UNGATED (gateRef -1): on a box that never
-      // calms, datapoints still get produced and the bracket logic
-      // classifies them — degrade to the pre-gate behavior, never below.
-      // A family that cannot re-attempt (budget gone / worker failed)
-      // publishes its hot-probe bracket so the parsed line shows WHY it
-      // has no op keys this run; its stamp (and staleness priority)
-      // survives untouched.
-      for (family <- deferredFams) {
-        val decision =
-          if (skippedFamilies.nonEmpty) None
-          else familyRunsUnderBudget(stressElapsed, stressBudget, stressRuns)
-        val ops = StressOps.armsFor(family,
-          ledger0.get(family).map(_.arm).getOrElse(0))
-        val ran = decision.exists { famRuns =>
-          stressReAttempted = true
-          attemptFamily(family, famRuns, ops, gateRef = -1.0) match {
-            case Some((res, iso)) =>
-              famOps(family) = ops
-              famBracket(family) = fold(res, iso)
-              bracketIsolated(family) = iso
-              recordHotSkips(family, res)
-              true
-            case None => false
-          }
-        }
-        if (!ran) famBracket(family) = deferBracket(family)
-      }
-      // CONTENTION RETRY (r14 verdict task 1): two consecutive rounds the
-      // driver artifact published noise-poisoned stress mins the probe
-      // bracket detected but only bench_detail.json recorded. A family
-      // whose bracket is contended (either probe side > 2× the run's
-      // calm floor) re-runs ONCE while budget remains; its ops keep the
-      // min across attempts and its published bracket is the cleaner
-      // attempt's. A family still dirty after the retry (or with no
-      // budget left) is flagged in `contended` on the parsed line —
-      // never published as if certified.
-      if (probeSamples.nonEmpty) {
-        // dirty = the bracket is either contended vs the run's own floor
-        // OR above the calm-reference stamping bound (r16 task 2): both
-        // shapes cannot certify, so both deserve the one retry. Only
-        // families that actually RAN ops retry (famOps) — a deferred
-        // family that never got its re-attempt has no ops to re-run.
-        val dirty = famBracket.collect {
-          case (f, b) if famOps.contains(f) &&
-            (contendedBracket(b, probeSamples.min) ||
-              !stampEligibleVsRef(b, probeFloorRef)) => f
-        }.toSeq
-        for (family <- dirty) {
-          val decision =
-            if (skippedFamilies.nonEmpty) None
-            else familyRunsUnderBudget(stressElapsed, stressBudget, stressRuns)
-          decision.foreach { famRuns =>
-            System.err.println(s"[bench] stress family '$family' bracket " +
-              "contended; re-running once within budget")
-            stressRetried = true
-            attemptFamily(family, famRuns, famOps(family),
-                gateRef = -1.0).foreach {
-              case (res, iso) =>
-                val b2 = fold(res, iso)
-                val b1 = famBracket(family)
-                recordHotSkips(family, res)
-                if (math.max(b2._1, b2._2) < math.max(b1._1, b1._2)) {
-                  famBracket(family) = b2
-                  bracketIsolated(family) = iso
-                }
-            }
-          }
-        }
-        // the published contended verdict covers BOTH failure shapes:
-        // hot vs the run's own floor (the classic poisoned bracket) and
-        // clean-vs-run-floor but above the calm-reference stamp bound
-        // (r16's graph — stamped on a 1.49-1.66× window the old rule
-        // could not see)
-        famBracket.foreach { case (f, b) =>
-          if (contendedBracket(b, probeSamples.min) ||
-              !stampEligibleVsRef(b, probeFloorRef)) contendedFams += f
-        }
-      }
-      // LEDGER STAMPING: a family certifies (stamp = this run's counter,
-      // arm cursor advances) only when its KEPT bracket came from an
-      // ISOLATED attempt, that bracket is clean vs the run floor AND
-      // within StampRefMult of the calm-floor reference (r16 task 2 —
-      // the explicit stampEligibleVsRef term is belt-and-braces with the
-      // contended list now carrying both shapes), AND at least one of
-      // its selected ops published a usable (non-errored) min —
-      // contended, deferred-without-rerun, in-process-fallback, skipped,
-      // failed and all-errored families keep their old stamp, so they
-      // keep (or gain) staleness priority next run. A
-      // perpetually-contended family replays the same arm until it gets
-      // a clean shot: its published mins are the ones needing
-      // re-certification.
-      val certified = famBracket.keys.filter(f =>
-        bracketIsolated.getOrElse(f, false) && !contendedFams.contains(f) &&
-          stampEligibleVsRef(famBracket(f), probeFloorRef) &&
-          // r19 review finding 1: every selected op must have been
-          // ATTEMPTED (hot-skipped ops publish no samples; a tie-broken
-          // calm bracket over a skipping attempt must not advance the
-          // arm past unmeasured ops)
-          armFullyAttempted(famOps.getOrElse(f, Seq.empty),
-            stressSamples.keySet) &&
-          famOps.getOrElse(f, Seq.empty)
-            .exists(k => stress.get(k).exists(_ >= 0)))
-      finalLedger = ledger0 ++ certified.map { f =>
-        val nGroups = StressOps.armGroups.get(f).map(_.size).getOrElse(1)
-        val arm0 = ledger0.get(f).map(_.arm).getOrElse(0)
-        f -> FamilyLedger(runCounter, (arm0 + 1) % nGroups)
-      }
-      try java.nio.file.Files.write(ledgerPath,
-        renderLedger(finalLedger).getBytes("UTF-8"))
-      catch { case _: Throwable => () }
-      // cursor file: next run's lead family under staleness order — a
-      // human-readable pointer (the ledger is the real state)
-      nextCursor = staleOrdered(finalLedger).head._1
+      nextCursor = skippedFamilies.headOption.getOrElse(nextCursor)
       try java.nio.file.Files.write(cursorPath,
         (nextCursor + "\n").getBytes("UTF-8"))
       catch { case _: Throwable => () }
-      // machine sanity line: min over every worker's bracketing probe
-      // samples (NOT a normalizer, see StressOps scaladoc). The
-      // whole-run heat verdict and the floor-reference update happen
-      // after the queries phase, over these same worker probes.
-      if (probeSamples.nonEmpty) {
-        stressSamples("probe") = probeSamples.toVector
-        stress("probe") = probeSamples.min
-      }
-      System.gc() // leave the query rounds a settled heap
     }
     val stressSec = stressElapsed
-    val stressOvershoot = overshootReason(stressSec, stressBudget,
-      stressSettled, stressReAttempted, stressRetried)
 
     // Shared memoized frames (minhash pair frame feeds q_dedup_minhash
     // AND q_dedup_clusters; the synthesized-PNG corpus feeds
@@ -1077,8 +317,7 @@ object Bench {
     if (rounds > 0)
       try SparkEntry.prebuildShared(spark, sfDir) catch { case _: Throwable => () }
     val sharedSec = (System.nanoTime() - tShared) / 1e9
-    // SPARK_GRAFT_BENCH_RUNS=0 → stress-only run (probe-reproducibility
-    // measurements without paying 3 query rounds)
+    // SPARK_GRAFT_BENCH_RUNS=0 → stress-only run
     // SPARK_GRAFT_ONLY=a,b,c → time only those queries (builder-side fast
     // iteration, the Verify third-arg convention; the driver never sets it)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
@@ -1088,11 +327,12 @@ object Bench {
       else Seq.empty[String]
     val samples = scala.collection.mutable.Map.empty[String, Vector[Double]]
       .withDefaultValue(Vector.empty)
-    // queries-phase heat bracket (r16 verdict task 3): one probe sample
-    // each side of the timed query rounds, so headline medians carry
-    // their own calm/hot classification on the parsed line. Outside the
-    // timed window; the JVM is warm here, no warmed probe needed.
-    val queriesProbePre = StressOps.probeOnce(spark)
+    val counts = scala.collection.mutable.Map.empty[String, Vector[JobCounts]]
+      .withDefaultValue(Vector.empty)
+    // each query's construction + count() runs under its own job group,
+    // so its jobs, stages, tasks, CPU and shuffle bytes land next to its
+    // wall time in bench_detail.json
+    val counter = new JobCounter(spark)
     val tQueries0 = System.nanoTime()
     for (r <- 0 until rounds) {
       // identical plans across rounds would hit the previous round's
@@ -1109,51 +349,22 @@ object Bench {
         // binary") be attributed to the query that triggered them
         if (sys.env.contains("SPARK_GRAFT_TRACE_QUERIES"))
           System.err.println(s"[bench] r$r query $name")
-        val t0 = System.nanoTime()
         // An errored query must NOT record its fast-fail latency as a
         // timing (r9 benched 16 analysis-failures at ~0.06 s each and the
         // artifact read as green): mark the sample -1 and surface the
         // name in the parsed line's "errors" list instead.
-        val ok = try { fn(spark, sfDir).count(); true }
-                 catch { case _: Throwable => false }
-        samples(name) = samples(name) :+
-          (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
+        val (sec, c) = counter.count(name) {
+          val t0 = System.nanoTime()
+          val ok = try { fn(spark, sfDir).count(); true }
+                   catch { case _: Throwable => false }
+          if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+        }
+        samples(name) = samples(name) :+ sec
+        counts(name) = counts(name) :+ c
       }
     }
     val queriesSec = (System.nanoTime() - tQueries0) / 1e9
-    val queriesProbePost = StressOps.probeOnce(spark)
-    val queriesProbe = (queriesProbePre, queriesProbePost)
-    // whole-run heat verdict + floor-reference update over the FRESH-JVM
-    // worker probes only (see probeSamples above: parent-JVM probes are
-    // population-incompatible with the reference the gates judge
-    // against). A stress-disabled run takes no worker probes: the flag
-    // stays false and the reference is left untouched.
-    val runFloor = if (probeSamples.nonEmpty) probeSamples.min else -1.0
-    val wholeRunContended =
-      runFloor > 0 && runContended(runFloor, probeFloorRef)
-    if (runFloor > 0) {
-      val newRef =
-        if (probeFloorRef > 0) math.min(probeFloorRef, runFloor) else runFloor
-      try java.nio.file.Files.write(floorPath,
-        (jnum(newRef) + "\n").getBytes("UTF-8"))
-      catch { case _: Throwable => () }
-    }
-    // history record (r18 task 1): this run's floor + stamp count — the
-    // cross-run evidence the hysteresis rule reads at the NEXT run's
-    // start. Label is display-only (file order is chronological).
-    val stampsThisRun =
-      finalLedger.count { case (_, e) => e.stamp == runCounter }
-    val updatedHistory =
-      if (runFloor > 0) {
-        val rec = RunRecord(s"t${System.currentTimeMillis / 1000}",
-          runFloor, stampsThisRun)
-        appendFile(historyPath, renderHistoryLine(rec))
-        history :+ rec
-      } else history
-    // rolling calm-floor candidate including THIS run — what a
-    // re-baseline would adopt; rides the parsed line so the floor-vs-
-    // self-heat question is answerable from the artifact alone
-    val floorCand = floorCandidate(updatedHistory)
+    counter.close()
     def median(xs: Vector[Double]): Double = {
       val s = xs.sorted
       if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
@@ -1163,120 +374,44 @@ object Bench {
       n -> (if (xs.exists(_ < 0)) -1.0 else median(xs))
     }
     val errored = med.collect { case (n, v) if v < 0 => n }
+    val minSpread = names.map(n => n -> cleanMinSpread(samples(n))).toMap
+    val phases = Seq("warmup" -> warmupSec, "stress" -> stressSec,
+      "shared" -> sharedSec, "queries" -> queriesSec)
 
-    // Per-query medians, spread and raw samples go to a SIDE FILE: the
-    // driver captures only the tail of the run's output, and both r6's
-    // inline spread/runs arrays and r10's 89 inline medians pushed the
-    // parsed line past the capture window (parsed:null). The driver-parsed
-    // line below carries only the total, errors, a fixed headline median
-    // subset, and the stress block — everything per-query lives here.
+    // Per-query medians, spread, raw samples and job counters go to a
+    // SIDE FILE: a caller may capture only the tail of the run's output,
+    // and r6's inline spread/runs arrays and r10's 89 inline medians both
+    // pushed the parsed line past the capture window (parsed:null).
+    // Reading the counters: when a median rises but its jobs, shuffle
+    // bytes and CPU stay flat, the machine was slower; when they rise
+    // too, the code changed.
     val detail = {
-      val meds = med.map { case (n, v) =>
-        "\"" + n + "\":" + v
-      }.mkString("{", ",", "}")
-      val spread = names.map { n =>
-        val s = samples(n)
-        "\"" + n + "\":" + (s.max - s.min)
-      }.mkString("{", ",", "}")
-      // per-query min alongside the parsed-line median: a contended
-      // driver round shows up as median >> min and can be diagnosed as
-      // environment-vs-code from the artifacts alone, without a re-run
-      val mins = names.map { n =>
-        "\"" + n + "\":" + samples(n).min
-      }.mkString("{", ",", "}")
-      val runs = names.map { n =>
-        "\"" + n + "\":" + samples(n).mkString("[", ",", "]")
-      }.mkString("{", ",", "}")
-      // NOT `stressRuns` — that name is the outer Int sample count and
-      // same-name different-type shadowing in this block is a trap
-      val stressRunsJson = stressSamples.map { case (k, xs) =>
-        "\"" + k + "\":" + xs.mkString("[", ",", "]")
-      }.mkString("{", ",", "}")
-      // probe-normalized stress datapoints — demoted from the parsed line
-      // to this side file (r8-r12 key continuity only): with fresh-JVM
-      // isolation the RAW mins are the comparable statistic, and the r12
-      // verdict showed normalization amplifies churn the probe can't see
-      val norm = stress.get("probe").filter(_ > 0).map { p =>
-        stressSamples.keys.filter(k => k != "probe" && stress(k) > 0)
-          .map(k => "\"" + k + "\":" + stress(k) / p)
-      }.getOrElse(Seq.empty).mkString("{", ",", "}")
-      // isolated_families: how many stress families really ran in fresh
-      // forked JVMs (vs the in-process fallback) — the auditability bit
-      // that says whether this round's stress numbers are churn-immune.
-      // skipped/cursor/phases: the budget's audit trail (which families
-      // this run deferred, where the next run starts, where the wall
-      // time went).
-      val skippedJson = skippedFamilies.map("\"" + _ + "\"")
-        .mkString("[", ",", "]")
-      val bracketJson = famBracket.map { case (f, (a, b)) =>
-        "\"" + f + "\":[" + a + "," + b + "]"
-      }.mkString("{", ",", "}")
-      val contendedJson = contendedFams.map("\"" + _ + "\"")
-        .mkString("[", ",", "]")
-      // arm-rotation + staleness audit trail: which ops each family ran
-      // this run, and every family's last-certified stamp + next arm —
-      // the judge reads partial-arm coverage from here, not by diffing
-      // stress keys across rounds
-      val armsJson = famOps.map { case (f, ops) =>
-        "\"" + f + "\":" + ops.map("\"" + _ + "\"").mkString("[", ",", "]")
-      }.mkString("{", ",", "}")
-      val ledgerJson = StressOps.families.map(_._1).flatMap(f =>
-        finalLedger.get(f).map(e =>
-          "\"" + f + "\":[" + e.stamp + "," + e.arm + "]"))
-        .mkString("{", ",", "}")
-      val warmJson = warmBreakdown.map { case (q, s) =>
-        "\"" + q + "\":" + jnum(s)
-      }.mkString("{", ",", "}")
-      // r16 task 1+3 audit fields: which families the pre-flight heat
-      // gate deferred, and the per-phase probe brackets behind the
-      // parsed line's warmup_probe/queries_probe/warmup_hot
-      val deferredJson = deferredFams.map("\"" + _ + "\"")
-        .mkString("[", ",", "]")
-      val phaseProbesJson =
-        s"""{"warmup":[${jnum(warmupProbe._1)},${jnum(warmupProbe._2)}],"queries":[${jnum(queriesProbe._1)},${jnum(queriesProbe._2)}]}"""
-      // r18 verdict task 4: every published stress datapoint carries its
-      // CALM BAND next to it, so heat inflation (r18's ngram_lm 65.7 s
-      // vs band 11.8-22) is classifiable from this artifact alone
-      val calmBandJson = stressSamples.keys
-        .filter(_ != "probe")
-        .flatMap(k => StressOps.calmBands.get(k).map(b =>
-          "\"" + k + "\":[" + jnum(b._1) + "," + jnum(b._2) + "]"))
-        .mkString("{", ",", "}")
-      // r18 task 2 audit: heavy ops a hot ungated attempt skipped
-      val hotSkipJson = famHotSkipped.map { case (f, ops) =>
-        "\"" + f + "\":" + ops.map("\"" + _ + "\"").mkString("[", ",", "]")
-      }.mkString("{", ",", "}")
-      // workload constants — off the parsed line since r19 (fixed every
-      // round; the line budget went to the floor-question fields)
-      val constsJson = stress.toSeq.filter(_._1.endsWith("_copies"))
-        .map { case (k, v) => "\"" + k + "\":" + jnum(v) }
-        .mkString("{", ",", "}")
-      s"""{"rounds":$rounds,"median":$meds,"spread":$spread,"min":$mins,"runs":$runs,"stress_runs":$stressRunsJson,"stress_norm":$norm,"stress_consts":$constsJson,"calm_band":$calmBandJson,"stress_hot_skipped":$hotSkipJson,"probe_bracket":$bracketJson,"contended":$contendedJson,"probe_floor_ref":${jnum(probeFloorRef)},"probe0":${jnum(probe0)},"settle_probe":${jnum(settleProbe)},"floor_candidate":${jnum(floorCand)},"floor_refresh":"${jstr(floorRefresh)}","run_contended":$wholeRunContended,"isolated_families":${isolatedFams.size},"stress_budget_secs":${jnum(stressBudget)},"stress_overshoot_reason":"${jstr(stressOvershoot)}","stress_skipped":$skippedJson,"stress_deferred":$deferredJson,"stress_cursor":"$nextCursor","stress_arms":$armsJson,"stress_ledger":$ledgerJson,"warmup_breakdown":$warmJson,"phase_probes":$phaseProbesJson,"warmup_hot":$warmupHot,"phases":{"warmup":${jnum(warmupSec)},"stress":${jnum(stressSec)},"shared":${jnum(sharedSec)},"queries":${jnum(queriesSec)}},"sf":"${jstr(sfDir)}"}"""
+      def jobj[V](kvs: Iterable[(String, V)])(render: V => String): String =
+        kvs.map { case (k, v) => "\"" + k + "\":" + render(v) }
+          .mkString("{", ",", "}")
+      def arr(xs: Seq[Any]): String = xs.mkString("[", ",", "]")
+      val meds = jobj(med)(_.toString)
+      val spread = jobj(names.map(n => n -> minSpread(n)._2))(_.toString)
+      val mins = jobj(names.map(n => n -> minSpread(n)._1))(_.toString)
+      val runs = jobj(names.map(n => n -> samples(n)))(arr)
+      val counters =
+        jobj(names.map(n => n -> medianCounts(counts(n))))(_.json)
+      val stressRunsJson = jobj(stressSamples)(arr)
+      val stressCountersJson = jobj(stressCounters)(identity)
+      val constsJson = jobj(stressConsts)(jnum)
+      val skippedJson = arr(skippedFamilies.map("\"" + _ + "\"").toSeq)
+      val warmJson = jobj(warmBreakdown)(jnum)
+      val phasesJson = jobj(phases)(jnum)
+      s"""{"rounds":$rounds,"median":$meds,"spread":$spread,"min":$mins,"runs":$runs,"counters":$counters,"stress_runs":$stressRunsJson,"stress_counters":$stressCountersJson,"stress_consts":$constsJson,"stress_budget_secs":${jnum(stressBudget)},"stress_skipped":$skippedJson,"stress_cursor":"${jstr(nextCursor)}","warmup_breakdown":$warmJson,"phases":$phasesJson,"sf":"${jstr(sfDir)}"}"""
     }
     try java.nio.file.Files.write(java.nio.file.Paths.get("bench_detail.json"),
       (detail + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () }
 
     val total = med.collect { case (_, v) if v >= 0 => v }.sum + sharedSec
-    // workload constants (doc_copies etc.) stay OFF the line since r19:
-    // they are fixed round over round and live in bench_detail's
-    // stress_consts — ~110 chars of the budget that keeps a fully-calm
-    // all-families line under the capture window
     println(renderParsedLine(total, med, errored, rounds, sharedSec,
-      stress.toSeq.filterNot(_._1.endsWith("_copies")),
-      famBracket.toSeq, contendedFams.toSeq, sfDir,
-      phases = Seq("warmup" -> warmupSec, "stress" -> stressSec,
-        "shared" -> sharedSec, "queries" -> queriesSec),
-      isolatedFamilies = isolatedFams.size, stressCursor = nextCursor,
-      probeFloorRef = probeFloorRef, runIsContended = wholeRunContended,
-      warmupProbe = warmupProbe, queriesProbe = queriesProbe,
-      warmupHot = warmupHot, stressOvershoot = stressOvershoot,
-      probe0 = probe0, settleProbe = settleProbe,
-      floorCand = floorCand, floorRefresh = floorRefresh,
-      queryMins = names.map { n =>
-        val clean = samples(n).filter(_ >= 0)
-        n -> (if (clean.isEmpty) -1.0 else clean.min)
-      }))
+      stress.toSeq, sfDir, phases = phases, stressCursor = nextCursor,
+      queryMins = names.map(n => n -> minSpread(n)._1)))
     spark.stop()
   }
 }

@@ -3,21 +3,11 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Cross-scale stress datapoints, grouped into FAMILIES so each family can
-  * run in a fresh JVM ([[StressWorker]]): r12's in-block numbers showed
-  * 3-4.5× intra-run spreads on byte-identical code (semdedup
-  * 120/152/47 s within one run) that an isolated fresh-JVM re-run
-  * immediately brought back in band — heap/page-cache/JIT churn from
-  * everything that ran earlier in the block, which the short CPU-bound
-  * calibration probe demonstrably does NOT see (it read FASTER while the
-  * long shuffle-heavy ops read 2× slower), so probe normalization
-  * amplified rather than cancelled the noise. Fresh JVM per family is
-  * the fix: every datapoint starts from the same JVM state every round,
-  * making cross-round comparisons certifiable.
-  *
-  * The ops themselves are unchanged from the in-block era (the datapoint
-  * keys and workload shapes are the cross-round contract); [[Bench]]
-  * runs families in-process as a fallback when spawning fails.
+/** Cross-scale stress datapoints, grouped into FAMILIES so each family
+  * runs in a fresh JVM ([[StressWorker]]): every datapoint then starts
+  * from the same JVM state (fresh heap, cold JIT, no page-cache residue
+  * from earlier ops), which is what makes cross-round comparisons hold.
+  * The datapoint keys and workload shapes are the cross-round contract.
   */
 object StressOps {
 
@@ -44,284 +34,41 @@ object StressOps {
     "metrics" -> Seq("stats_pct_exact", "stats_pct_approx",
       "stats_pct_exact_skew", "stats_pct_approx_skew"))
 
-  /** ARM GROUPS (r15 verdict tasks 1+3): the four most expensive families
-    * split their op list into groups that rotate across bench runs (a
-    * per-family arm cursor persists in the stress ledger), so one run
-    * pays roughly half the family's cost and 3-4 families certify per
-    * 600 s budget instead of 2. Groups keep dependent ops together
-    * (store_drop probes the store store_build just built; a skew twin
-    * may ride with its uniform baseline or rotate — the uniform/skew
-    * ratio then compares across adjacent runs, which min-of-N already
-    * requires for any cross-round ratio). Families absent here run all
-    * their ops every time. Each entry PARTITIONS the family's op list
-    * exactly (spec-pinned in BenchLineSpec). */
-  val armGroups: Map[String, Seq[Seq[String]]] = Map(
-    "dedup" -> Seq(
-      Seq("minhash", "hamming64_drop", "passage"),
-      Seq("passage_strip", "hamming64_drop_skew", "minhash_skew_collapse")),
-    "store" -> Seq(
-      Seq("store_build", "store_drop"),
-      Seq("near_store_build", "near_store_drop", "near_store_drop_skew")),
-    "events" -> Seq(
-      Seq("asof", "asof_skew", "sessionize", "sessionize_skew"),
-      Seq("funnel", "funnel_skew", "retention")),
-    // the r15 driver's metrics worker blew its (end-of-budget) watchdog
-    // running all 4 arms — exact+approx uniform one run, the skew pair
-    // the next keeps each run's cost ≈ half (verdict task 3)
-    "metrics" -> Seq(
-      Seq("stats_pct_exact", "stats_pct_approx"),
-      Seq("stats_pct_exact_skew", "stats_pct_approx_skew")))
-
-  /** The op subset a family runs at arm cursor `armIdx` (modulo the
-    * group count, so a stale cursor never errors); families without
-    * groups run everything. */
-  def armsFor(family: String, armIdx: Int): Seq[String] =
-    armGroups.get(family) match {
-      case Some(groups) => groups(((armIdx % groups.size) + groups.size) % groups.size)
-      case None => families.find(_._1 == family).map(_._2).getOrElse(Seq.empty)
-    }
-
-  /** CALM BANDS (r18 verdict task 4): per-op [lo, hi] seconds observed
-    * on calm windows of THIS box — emitted into bench_detail.json next
-    * to every published datapoint so heat inflation is classifiable
-    * from the artifact alone (the r18 judge could classify ngram_lm's
-    * 65.7 s as ~4× hot only by grepping SURVEY for the band). Bands are
-    * deliberately generous (~±15% past the observed calm span) — they
-    * classify 2-4× heat, not 10% regressions (min-of-N across rounds
-    * does that). Provenance: committed calm-round BENCH lines (r12/r16/
-    * r17) and the SURVEY §8.22-8.25 calm-box rehearsals, post the r13
-    * head()-consumption definitions and the r10/r13 kernel fixes (the
-    * pre-fix values — minhash 35.2, semdedup 47.5 — are NOT in-band on
-    * purpose). A datapoint far above its band on a calm bracket is a
-    * real regression; above it on a contended bracket is heat. */
-  val calmBands: Map[String, (Double, Double)] = Map(
-    // dedup — §8.22h/§8.23j/m rehearsals + r17 driver arm
-    "minhash" -> (11.7, 22.0),              // obs 13.8-19.1
-    "hamming64_drop" -> (14.5, 25.8),       // obs 17.1-22.4
-    "passage" -> (6.5, 12.0),               // obs 7.6-10.7
-    "passage_strip" -> (8.0, 13.5),         // obs 9.4-11.7 (head()-def)
-    "hamming64_drop_skew" -> (14.1, 26.9),  // obs 16.6-23.4
-    "minhash_skew_collapse" -> (11.9, 23.7),// obs 14.0-20.6
-    // store — §8.22h/§8.23j/m; store_drop honestly wide (obs 9.5-17.6)
-    "store_build" -> (5.4, 10.1),           // obs 6.4-8.8
-    "store_drop" -> (8.1, 20.2),
-    "near_store_build" -> (5.4, 8.5),       // obs 6.3-7.4
-    "near_store_drop" -> (10.9, 20.4),      // obs 12.8-17.7
-    "near_store_drop_skew" -> (11.1, 21.4), // obs 13.1-18.7
-    // index — obs 8.1-10.2 both twins (skew ≈ uniform by design)
-    "inverted_index" -> (6.9, 11.7),
-    "inverted_index_stopword" -> (6.9, 11.7),
-    // vec — r20 re-derived: the semanticDedup assignment barrier became
-    // the eager RDD barrier (unknown stats ⇒ no AQE coalesce of the
-    // pair-join exchanges at stress scale), and a full-defaults calm
-    // rehearsal (probe floor 0.516, the calmest window on record) read
-    // [19.31, 12.85, 12.28] — the old 23.7-38.2 band (pre-barrier obs
-    // 27.9-33.2) now sits ENTIRELY above calm. lo 15% under the calm
-    // min; hi covers the fresh-JVM first sample with margin.
-    "semdedup" -> (10.4, 20.0),
-    // media — obs 16.7-23 / 2.0-3.2 (§8.23j, r12-13)
-    "decode_headers" -> (14.2, 26.5),
-    "decode_pixels" -> (1.7, 3.7),
-    // events — the r16-18 verdict bands + §8.24g/§8.25f rehearsals
-    "asof" -> (1.2, 3.0),                   // obs 1.41-2.84 (§8.26l calm)
-    "asof_skew" -> (1.1, 1.9),              // obs 1.26-1.63
-    "sessionize" -> (5.6, 8.8),             // the verdict's quoted band
-    "sessionize_skew" -> (4.6, 8.8),        // obs 5.1-8.4
-    "funnel" -> (4.8, 8.6),                 // obs 5.7-7.8
-    "funnel_skew" -> (3.9, 8.0),            // obs 4.6-7.2
-    "retention" -> (4.2, 6.6),              // obs 5.0-5.9
-    // graph — the r16 verdict's 14.7-16.8 re-cert band, §8.25f 14.375
-    "pagerank" -> (12.2, 18.5),             // obs 13.9-16.8
-    "pagerank_hub" -> (10.4, 17.3),         // obs 12.2-15.8
-    // langid — obs 8.2 (§8.22h) - 11.96 (r15, mildly warm)
-    "langid" -> (7.0, 13.2),
-    // token — head()-def obs bpe 3.4-5.1, ngram 13.9-20.0
-    "bpe_encode" -> (2.9, 6.9),             // obs 3.4-6.26 (§8.26l calm)
-    // r19: score() rewritten to the zero-exchange broadcast-model
-    // kernel (pre-r19 lattice-explode band 11.8-25.0). r20: the model
-    // drain additionally checkpoints before its bounded take (the
-    // scale-up-scan fix), and a full-defaults calm rehearsal on the r20
-    // bits (probe floor 0.516) read [5.36, 4.637, 4.278] — under the
-    // prior 5.0 floor, which fired that band-comment's own rule: lo
-    // dropped BELOW HotSkipCalmSecs (the arm leaves the hot-skip set —
-    // BenchLineSpec membership pin updated with it) instead of bending
-    // the skip threshold. Context: earlier r20-bit obs 8.33-8.63 at
-    // probes ~0.97 (~1.7× floor, mildly warm — correctly above-band
-    // now); pre-r20 calm obs 5.334/8.408 are superseded by the drain
-    // change. lo 15% under the calm min; hi covers warm-adjacent
-    // variance without absorbing 2×+ heat.
-    "ngram_lm_score" -> (3.6, 8.0),
-    // metrics — §8.22h 5.5/7.0/6.4/7.8, r17 driver 10.45/8.49,
-    // §8.24e/g 7.2-9.0; skew twins single-obs → widened
-    "stats_pct_exact" -> (4.7, 12.0),
-    "stats_pct_approx" -> (6.0, 10.4),
-    "stats_pct_exact_skew" -> (4.8, 9.4),
-    "stats_pct_approx_skew" -> (5.9, 11.0))
-
-  /** Ops too expensive to burn on a window that cannot certify (r18
-    * verdict task 2): heat MULTIPLIES cost (r18 ran a calm-band-5.6-8.8
-    * sessionize for 32.9 s and a calm-band-11.8-22 ngram_lm_score for
-    * 65.7 s on refused windows — ~100 s of a 609 s budget producing two
-    * contended, unusable datapoints while 8 of 10 families got nothing
-    * isolated). An UNGATED attempt whose own pre-probe exceeds the
-    * stamping bound skips these ops — the bracket (heat evidence) and
-    * the cheap ops still publish; the banked budget buys breadth. */
-  private[graft] val HotSkipCalmSecs = 5.0
-  val hotSkipOps: Set[String] =
-    calmBands.collect { case (k, (lo, _)) if lo >= HotSkipCalmSecs => k }.toSet
-
-  /** CALIBRATION PROBE: a fixed seeded CPU+shuffle workload. Kept as a
-    * machine sanity line only (NOT a normalizer — see the scaladoc
-    * above): each family samples it once before and once after its ops,
-    * so the merged min brackets the whole stress run's machine floor. */
-  def probeOnce(spark: SparkSession): Double = {
-    System.gc()
-    val t0 = System.nanoTime()
-    spark.range(0, 200000000L, 1, 32)
-      .select(xxhash64(xxhash64(col("id"), lit(42))).as("h"))
-      .groupBy(pmod(col("h"), lit(1024)).as("b"))
-      .agg(sum(col("h"))).count()
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  /** The probe sample that enters a family's BRACKET must measure the
-    * machine, not the JVM: in a fresh forked worker the first probe run
-    * pays the probe's own JIT/codegen (it read 4-10× the calm floor on a
-    * verifiably idle machine — structurally indistinguishable from real
-    * contention), so one unrecorded run warms it before the recorded
-    * sample. In an already-warm JVM the extra run costs ~1 s and changes
-    * nothing. */
-  def probeWarmed(spark: SparkSession): Double = {
-    probeOnce(spark): Unit
-    probeOnce(spark)
-  }
-
-  /** Mutable result sink for one family run. `deferred` = the pre-flight
-    * heat gate ([[runFamilyIfCalm]]) refused to run the ops: the box was
-    * hot at family start, so the only samples are the (hot) probes. */
+  /** One family run: workload constants, and per op its wall-time
+    * samples (-1 = that sample errored) and the job counts of each. */
   final class Results {
     val consts = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val samples = scala.collection.mutable.LinkedHashMap.empty[String, Vector[Double]]
-    var deferred: Boolean = false
-    /** Selected ops NOT run because the attempt's own pre-probe was over
-      * the stamping bound and the op is in [[hotSkipOps]] (r18 task 2) —
-      * the audit trail for a family whose published arm is missing its
-      * heavy keys this run. */
-    val hotSkipped = scala.collection.mutable.ArrayBuffer.empty[String]
-  }
-
-  /** Pre-flight heat gate (r16 verdict task 1): a family whose pre-probe
-    * already exceeds the stamping bound ([[Bench.StampRefMult]] × the
-    * calm-floor reference) CANNOT produce a certifiable bracket no matter
-    * how its ops run — running them would burn minutes of stress budget
-    * on a window that is certain to be flagged (r16's events family cost
-    * ~400 s of a 600 s budget exactly this way, probes 2.7-3.2 vs calm
-    * 0.684, squeezing 8 of 10 families out of the run). Instead: confirm
-    * the heat with ONE more probe (a single noisy sample must not defer a
-    * calm box), and if still hot return a `deferred` result (~probe cost
-    * only, ~20-30 s with JVM startup vs minutes of hot ops) so [[Bench]]
-    * re-attempts the family at the END of the stress phase — heat is
-    * temporally correlated, and the end of the run is the cheapest
-    * de-correlation available. The retry runs UNGATED: on a box that
-    * never calms, datapoints still get produced and the bracket logic
-    * classifies them — the failure mode degrades to the r16 behavior,
-    * never below it. `floorRef <= 0` (no calm history) never defers. */
-  def runFamilyIfCalm(spark: SparkSession, family: String, sfDir: String,
-      stressCopies: Int, semCopies: Int, runs: Int,
-      ops: Seq[String], floorRef: Double,
-      stampRef: Double = -1.0): Results = {
-    // the tie-break reference is allowed to differ from the deferral
-    // gate's (the worker CLI carries them separately); callers that
-    // don't distinguish get the gate ref for both (r18 review finding —
-    // the gated path used to hardwire stampRef = floorRef, silently
-    // ignoring the CLI's arg 5)
-    val effStampRef = if (stampRef > 0) stampRef else floorRef
-    val bound = Bench.StampRefMult * floorRef
-    val p1 = probeWarmed(spark)
-    if (floorRef > 0 && p1 > bound) {
-      val p2 = probeOnce(spark)
-      if (p2 > bound) {
-        val res = new Results
-        res.deferred = true
-        res.samples("probe") = Vector(p1, p2)
-        res
-      } else runFamily(spark, family, sfDir, stressCopies, semCopies,
-        runs, ops, preProbe = Some(p2), stampRef = effStampRef)
-    } else runFamily(spark, family, sfDir, stressCopies, semCopies,
-      runs, ops, preProbe = Some(p1), stampRef = effStampRef)
+    val counters = scala.collection.mutable.LinkedHashMap.empty[String,
+      Vector[graft.streaming.Observability.JobCounts]]
   }
 
   private val hotText = "common boilerplate navigation header about contact " +
     "privacy terms copyright all rights reserved site map search login"
 
-  /** Run one family's datapoints. `runs` samples per op (min is the
-    * contention-robust statistic — noise only ever adds time); a probe
-    * sample before and after the family brackets its machine floor.
-    * `ops` restricts which of the family's datapoints run this time
-    * (empty = all — the pre-arm-rotation behavior); unselected ops emit
-    * nothing, so the published stress block only ever carries keys that
-    * really ran.
-    *
-    * `stampRef` (> 0) arms the TIE-BREAKER (r17 verdict task 1,
-    * [[Bench.tieBreakNeeded]]): a bracket straddling the 1.25× stamping
-    * bound takes ONE confirmation probe on the hot side before the
-    * refusal stands — a single GC/co-tenant blip must not veto a
-    * certification the other two samples support. Separate from the
-    * deferral gate's `floorRef` on purpose: UNGATED re-attempts (the
-    * path where stamping actually lands on a hot round) still deserve
-    * the tie-breaker. */
+  /** Run one family's datapoints: `runs` samples per op (the min is the
+    * contention-robust statistic — noise only ever adds time), each under
+    * its own job group so its job counts ride next to its wall time. */
   def runFamily(spark: SparkSession, family: String, sfDir: String,
-      stressCopies: Int, semCopies: Int, runs: Int,
-      ops: Seq[String] = Seq.empty,
-      preProbe: Option[Double] = None,
-      stampRef: Double = -1.0): Results = {
+      stressCopies: Int, semCopies: Int, runs: Int): Results = {
     val res = new Results
-    val preSelected: String => Boolean =
-      if (ops.isEmpty) _ => true else ops.toSet
-    // HOT-WINDOW HEAVY-ARM SKIP (r18 verdict task 2): this attempt's own
-    // pre-probe over the stamping bound means the bracket is already
-    // refused — running a heavy op buys a datapoint that can only be
-    // flagged contended (r18: sessionize 32.9 s vs band 5.6-8.8,
-    // ngram_lm_score 65.7 s vs 11.8-22). Heavy ops are skipped; cheap
-    // ops and the bracket still publish. Only the UNGATED paths reach
-    // here hot (the deferral gate refuses hot windows outright), so
-    // this is exactly the end-of-phase re-attempt/retry budget burn.
-    // Like the deferral gate, a single noisy sample must not cost a calm
-    // box its heavy arms (r19 review finding 2): a hot raw pre-probe
-    // earns ONE confirmation probe — calm confirmation wins the window
-    // (and becomes the bracket's pre side, the runFamilyIfCalm p2
-    // convention); the overruled raw sample stays in the published
-    // vector (middle position — the parent reads the bracket as
-    // (head, last)) for the floor population and the audit trail.
-    val rawPre = preProbe.getOrElse(probeWarmed(spark))
-    val (probePre, preExtra, hotWindow) =
-      if (stampRef > 0 && rawPre > Bench.StampRefMult * stampRef) {
-        val confirm = probeOnce(spark)
-        if (confirm > Bench.StampRefMult * stampRef)
-          (rawPre, Vector(confirm), true) // 2-of-2 hot
-        else (confirm, Vector(rawPre), false) // blip loses its veto
-      } else (rawPre, Vector.empty[Double], false)
-    val selected: String => Boolean = k =>
-      preSelected(k) && {
-        val skip = hotWindow && hotSkipOps(k)
-        if (skip && !res.hotSkipped.contains(k)) res.hotSkipped += k
-        !skip
-      }
-    def timed(key: String)(f: => Long): Unit = if (selected(key)) {
+    val counter = new graft.streaming.Observability.JobCounter(spark)
+    def timed(key: String)(f: => Long): Unit = {
       val xs = (0 until runs).map { _ =>
         System.gc() // settle: don't bill a prior op's garbage to this one
-        val t0 = System.nanoTime()
-        val ok = try { f; true } catch { case _: Throwable => false }
-        // stop the clock BEFORE the between-sample housekeeping: the
-        // cache clear/drain is fixture bookkeeping, not op cost (Bench's
-        // query loop already clears outside its timed region — r16
-        // review finding; op mins may read marginally lower than r15's)
-        val elapsed = (System.nanoTime() - t0) / 1e9
+        val sample = counter.count(key) {
+          val t0 = System.nanoTime()
+          val ok = try { f; true } catch { case _: Throwable => false }
+          if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+        }
+        // between-sample housekeeping stays off the clock: the cache
+        // clear/drain is fixture bookkeeping, not op cost
         spark.catalog.clearCache()
         graft.core.CacheRegistry.drain()
-        if (ok) elapsed else -1.0
+        sample
       }.toVector
-      res.samples(key) = xs
+      res.samples(key) = xs.map(_._1)
+      res.counters(key) = xs.map(_._2)
     }
     def bigDocsOf(d1: DataFrame): DataFrame =
       (0 until stressCopies).map(i => d1.select(
@@ -478,13 +225,11 @@ object StressOps {
         // PNG-*encode*-heavy, so it is built and checkpointed OUTSIDE the
         // timed region (the localCheckpoint survives the between-sample
         // cache clears); the datapoint times decode+hash only.
-        if (selected("decode_pixels")) { // the checkpoint build is eager
-          val bigPngs = mm.synthesizeImageVariants(
-            bigDocs.select(col("doc_id")), "doc_id").localCheckpoint()
-          timed("decode_pixels")(
-            mm.decodeImagePixels(bigPngs)
-              .agg(sum(col("px.px_sum"))).head().getLong(0))
-        }
+        val bigPngs = mm.synthesizeImageVariants(
+          bigDocs.select(col("doc_id")), "doc_id").localCheckpoint()
+        timed("decode_pixels")(
+          mm.decodeImagePixels(bigPngs)
+            .agg(sum(col("px.px_sum"))).head().getLong(0))
 
       case "events" =>
         // AS-OF JOIN + SESSIONIZE at 100×: both ops are one keyed exchange
@@ -604,29 +349,25 @@ object StressOps {
         val d1 = spark.read.parquet(s"$sfDir/documents.parquet")
         val bigDocs = bigDocsOf(d1)
         res.consts("doc_copies") = stressCopies.toDouble
-        if (selected("bpe_encode")) { // training is eager (driver merges)
-          val merges = graft.ml.Bpe.train(d1, "text", numMerges = 200,
-            maxWords = 20000)
-          // head(), not count(): the token-count column is a pure
-          // projection — count() would prune the BPE kernel entirely and
-          // time a bare parquet scan
-          timed("bpe_encode")(
-            graft.ml.Bpe.tokenCount(bigDocs, "text", merges)
-              .agg(sum(col("n_bpe_tokens"))).head().getLong(0))
-        }
-        if (selected("ngram_lm_score")) {
-          // localCheckpoint: the model frame must survive the
-          // between-sample cache clears and not re-derive inside the
-          // timed region
-          val model = graft.ml.NgramLm.train(d1, "text", order = 3,
-            minCount = 2).localCheckpoint()
-          // head() + sum_prob: the scoring FOLDS are projections over the
-          // per-doc lattice — count() would run the lattice for
-          // cardinality but prune the folds, under-measuring the kernel
-          timed("ngram_lm_score")(
-            graft.ml.NgramLm.score(bigDocs, model, "text", "doc_id", order = 3)
-              .agg(sum(col("sum_prob"))).head().getDouble(0).toLong)
-        }
+        val merges = graft.ml.Bpe.train(d1, "text", numMerges = 200,
+          maxWords = 20000)
+        // head(), not count(): the token-count column is a pure
+        // projection — count() would prune the BPE kernel entirely and
+        // time a bare parquet scan
+        timed("bpe_encode")(
+          graft.ml.Bpe.tokenCount(bigDocs, "text", merges)
+            .agg(sum(col("n_bpe_tokens"))).head().getLong(0))
+        // localCheckpoint: the model frame must survive the
+        // between-sample cache clears and not re-derive inside the
+        // timed region
+        val model = graft.ml.NgramLm.train(d1, "text", order = 3,
+          minCount = 2).localCheckpoint()
+        // head() + sum_prob: the scoring FOLDS are projections over the
+        // per-doc lattice — count() would run the lattice for
+        // cardinality but prune the folds, under-measuring the kernel
+        timed("ngram_lm_score")(
+          graft.ml.NgramLm.score(bigDocs, model, "text", "doc_id", order = 3)
+            .agg(sum(col("sum_prob"))).head().getDouble(0).toLong)
 
       case "metrics" =>
         // QUANTILES at 100×: exact per-group percentile buffers every
@@ -665,18 +406,7 @@ object StressOps {
       case other => sys.error(s"unknown stress family '$other' " +
         s"(known: ${families.map(_._1).mkString(", ")})")
     }
-    // bracket tie-breaker (r17 verdict task 1): one straddling sample
-    // earns one confirmation probe; 2-of-3 decides. The resolved vector
-    // keeps every raw sample (floor population + audit trail); the
-    // parent reads the bracket as (head, last), so the pre-side
-    // confirmation's overruled sample (preExtra) splices into the
-    // MIDDLE — bracket semantics untouched, no sample lost.
-    val probePost = probeOnce(spark)
-    val resolved =
-      if (Bench.tieBreakNeeded(probePre, probePost, stampRef))
-        Bench.resolveTieBreak(probePre, probePost, probeOnce(spark), stampRef)
-      else Vector(probePre, probePost)
-    res.samples("probe") = resolved.head +: (preExtra ++ resolved.tail)
+    counter.close()
     res
   }
 }

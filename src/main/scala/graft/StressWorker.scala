@@ -4,86 +4,38 @@ import org.apache.spark.sql.SparkSession
 
 /** Child-JVM entry for one stress family: [[Bench]] forks one of these
   * per family so every datapoint starts from identical JVM state (fresh
-  * heap, cold JIT, no page-cache residue from 130 warmup gates — the
-  * churn class that made r12's in-block semdedup/hamming numbers move
-  * 2× on byte-identical code).
+  * heap, cold JIT, no page-cache residue from the warmup queries).
   *
-  * Protocol: one `GRAFT_STRESS {"op":…,"samples":[…]}` line per
-  * datapoint (plus `"const"` lines for workload constants) on stdout;
-  * everything else (Spark logs) goes to stderr. Exit 0 even when an op
-  * errored — the op's samples carry -1 and the parent surfaces it; a
-  * non-zero exit means the WORKER infrastructure failed and the parent
-  * falls back to in-process execution. */
+  * Protocol: one `GRAFT_STRESS {"op":…,"samples":[…],"counters":{…}}`
+  * line per datapoint (plus `"const"` lines for workload constants) on
+  * stdout; everything else (Spark logs) goes to stderr. `counters` are
+  * the per-field medians of the op's per-sample [[graft.streaming.Observability.JobCounts]].
+  * Exit 0 even when an op errored — its samples carry -1 and the parent
+  * surfaces it; a non-zero exit means the worker itself failed. */
 object StressWorker {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 1,
-      "usage: StressWorker <family> [runs] [ops-csv] [floorRef] [stampRef]")
+    require(args.length == 2, "usage: StressWorker <family> <runs>")
     val family = args(0)
-    // arm rotation (r15 verdict task 1): the parent may restrict this
-    // run to one arm group of the family; empty/absent = all ops
-    val ops: Seq[String] =
-      if (args.length >= 3) args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      else Seq.empty
-    // pre-flight heat gate (r16 verdict task 1): the calm-floor
-    // reference, when the parent wants a hot pre-probe to DEFER this
-    // family instead of burning its op cost on an uncertifiable window.
-    // Absent or <= 0 = run ungated (the retry path, and old callers).
-    val floorRef: Double =
-      if (args.length >= 4) try args(3).toDouble catch {
-        case _: NumberFormatException => -1.0
-      } else -1.0
-    // tie-breaker reference (r17 verdict task 1): the calm-floor ref for
-    // the END-of-family bracket tie-break, passed SEPARATELY from the
-    // deferral gate's floorRef — ungated re-attempts (floorRef <= 0, the
-    // path where stamping actually lands on a hot round) still tie-break.
-    // Absent = fall back to floorRef (old caller compatibility).
-    val stampRef: Double =
-      if (args.length >= 5) try args(4).toDouble catch {
-        case _: NumberFormatException => floorRef
-      } else floorRef
+    val runs = args(1).toInt
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val stressCopies = sys.env.getOrElse("SPARK_GRAFT_STRESS_COPIES", "100").toInt
     val semCopies = sys.env.getOrElse("SPARK_GRAFT_SEMDEDUP_COPIES", "50").toInt
-    // CLI override beats env: the parent's stress budget may drop a late
-    // family to min-of-2 while the env still says 3
-    val runs =
-      if (args.length >= 2) args(1).toInt
-      else sys.env.getOrElse("SPARK_GRAFT_STRESS_RUNS", "3").toInt
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // PROBE-ONLY MODE (r18 verdict task 1): family "_probe" measures the
-    // machine from a fresh JVM and exits — no family ops. The parent
-    // forks one BEFORE any of its own Spark work (probe0: is the box hot
-    // before WE touch it?) and one after the mid-run settle wait
-    // (settle_probe: did idling actually calm it?). The sample is
-    // population-compatible with the worker probes the floor reference
-    // and the stamping gates judge against (fresh JVM, warmed probe).
-    if (family == "_probe") {
-      val p = StressOps.probeWarmed(spark)
-      println(s"""GRAFT_STRESS {"op":"probe","samples":[${Bench.jnum(p)}]}""")
-      spark.stop()
-      return
-    }
-    val res =
-      if (floorRef > 0)
-        StressOps.runFamilyIfCalm(spark, family, sfDir, stressCopies,
-          semCopies, runs, ops, floorRef, stampRef = stampRef)
-      else StressOps.runFamily(spark, family, sfDir, stressCopies,
-        semCopies, runs, ops, stampRef = stampRef)
-    if (res.deferred) println("""GRAFT_STRESS {"deferred":true}""")
-    if (res.hotSkipped.nonEmpty) println(s"""GRAFT_STRESS {"hot_skipped":[${
-      res.hotSkipped.map("\"" + _ + "\"").mkString(",")}]}""")
+    val res = StressOps.runFamily(spark, family, sfDir, stressCopies,
+      semCopies, runs)
     res.consts.foreach { case (k, v) =>
       println(s"""GRAFT_STRESS {"op":"$k","const":${Bench.jnum(v)}}""")
     }
     res.samples.foreach { case (k, xs) =>
       println(s"""GRAFT_STRESS {"op":"$k","samples":[${
-        xs.map(Bench.jnum).mkString(",")}]}""")
+        xs.map(Bench.jnum).mkString(",")}],"counters":${
+        Bench.medianCounts(res.counters(k)).json}}""")
     }
     spark.stop()
   }

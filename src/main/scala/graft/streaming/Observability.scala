@@ -1,9 +1,11 @@
 package graft.streaming
 
 import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
@@ -63,5 +65,98 @@ object Observability {
     /** Cumulative per-stage event counts (Prometheus scrape shape). */
     def snapshot: Map[String, Long] = counters.asScala.toMap
     def progress: Map[String, Double] = lastProgress
+  }
+
+  /** The Spark work one labelled action did: the jobs, stages and tasks
+    * it launched, their executor CPU time and shuffle bytes. Unlike wall
+    * time, a busy machine does not move these, so a regression that
+    * moves them is the code's. `jobStages` holds each job's stage names
+    * (`<action> at <file>:<line>`, its call site). */
+  final case class JobCounts(jobs: Int = 0, stages: Int = 0, tasks: Long = 0L,
+      cpuNs: Long = 0L, shuffleReadBytes: Long = 0L,
+      shuffleWriteBytes: Long = 0L,
+      jobStages: Vector[Seq[String]] = Vector.empty) {
+    def json: String =
+      s"""{"jobs":$jobs,"stages":$stages,"tasks":$tasks,"cpu_ms":${cpuNs / 1000000L},"shuffle_read_bytes":$shuffleReadBytes,"shuffle_write_bytes":$shuffleWriteBytes}"""
+  }
+
+  // job-group ids stay unique across every JobCounter in the JVM
+  private val counterIds = new AtomicLong()
+
+  /** Per-job-group job counter, the batch twin of [[Listener]]:
+    * `count(label)(body)` runs `body` under a job group of its own and
+    * returns the [[JobCounts]] of every job that group launched. Job
+    * groups are thread-local (AQE's query-stage threads inherit them), so
+    * jobs another thread runs meanwhile are not counted. The listener bus
+    * is asynchronous but ordered: after `body`, a one-row marker job runs
+    * under a second group, and once its start arrives every event of
+    * `body`'s jobs has arrived too. */
+  final class JobCounter(spark: SparkSession) extends SparkListener {
+    private val sc = spark.sparkContext
+    // the groups and markers of the calls in flight (a marker maps to
+    // whether its job has started); events of any other group are ignored
+    private val counts = scala.collection.mutable.Map.empty[String, JobCounts]
+    private val markers = scala.collection.mutable.Map.empty[String, Boolean]
+    private val stageGroup = new ConcurrentHashMap[Int, String]()
+    sc.addSparkListener(this)
+
+    private def groupOf(p: java.util.Properties): String =
+      Option(p).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+        .getOrElse("")
+
+    private def update(group: String)(f: JobCounts => JobCounts): Unit =
+      synchronized { counts.get(group).foreach(c => counts(group) = f(c)) }
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      val g = groupOf(e.properties)
+      synchronized { if (markers.contains(g)) markers(g) = true }
+      update(g)(c => c.copy(jobs = c.jobs + 1,
+        jobStages = c.jobStages :+ e.stageInfos.map(_.name)))
+    }
+
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
+      val g = groupOf(e.properties)
+      if (synchronized(counts.contains(g))) {
+        stageGroup.put(e.stageInfo.stageId, g)
+        update(g)(c => c.copy(stages = c.stages + 1))
+      }
+    }
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      stageGroup.remove(e.stageInfo.stageId): Unit
+
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      Option(stageGroup.get(e.stageId)).zip(Option(e.taskMetrics)).foreach {
+        case (g, m) => update(g)(c => c.copy(tasks = c.tasks + 1,
+          cpuNs = c.cpuNs + m.executorCpuTime,
+          shuffleReadBytes = c.shuffleReadBytes +
+            m.shuffleReadMetrics.totalBytesRead,
+          shuffleWriteBytes = c.shuffleWriteBytes +
+            m.shuffleWriteMetrics.bytesWritten))
+      }
+
+    def count[T](label: String)(body: => T): (T, JobCounts) = {
+      val id = counterIds.incrementAndGet()
+      val group = s"graft-count-$id-$label"
+      val marker = s"graft-marker-$id"
+      synchronized { counts(group) = JobCounts(); markers(marker) = false }
+      def seen: Boolean = synchronized(markers(marker))
+      try {
+        sc.setJobGroup(group, label)
+        val result = body
+        sc.setJobGroup(marker, label)
+        spark.range(1).count()
+        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+        while (!seen && System.nanoTime() < deadline) Thread.sleep(10)
+        if (!seen)
+          throw new IllegalStateException(s"marker job never observed ($label)")
+        (result, synchronized(counts(group)))
+      } finally {
+        sc.clearJobGroup()
+        synchronized { counts -= group; markers -= marker }
+      }
+    }
+
+    def close(): Unit = sc.removeSparkListener(this)
   }
 }

@@ -20,32 +20,15 @@ class BenchLineSpec extends AnyFunSuite {
   private def fakeStress(n: Int): Seq[(String, Double)] =
     (0 until n).map(i => s"stress_pt_$i" -> (i * 1.37 + 0.5))
 
-  // one bracket per family — real family names, the worst realistic case
-  // being all 9 on one line
-  private def fakeBrackets(n: Int): Seq[(String, (Double, Double))] =
-    StressOps.families.map(_._1).take(n)
-      .zipWithIndex.map { case (f, i) => f -> (0.9 + i * 0.01, 1.1 + i * 0.5) }
-
   test("parsed line stays under the driver capture window at 150 queries") {
-    // a fully-calm run's stress block is ~22 arm-selected op keys +
-    // probe (consts moved to bench_detail in r19) — pin with headroom at
-    // 26, asserting BOTH the headline medians and the stress block
-    // survive. History of this budget: the r17 per-phase probe fields
-    // consumed the old 40-key pin's headroom; the r19 floor-question
-    // fields (probe0/settle_probe/floor_candidate/floor_refresh, ~115
-    // chars, ride every candidate) forced the consts off the line,
-    // brackets to 2 decimals, and stress to shed BEFORE the headline.
+    // a full run's stress block is every op key of StressOps.families;
+    // both the headline medians and the stress block must survive it
+    val ops = StressOps.families.flatMap(_._2).size
     val line = Bench.renderParsedLine(
       total = 123.456,
       queryMedians = Bench.headline.map(_ -> 1.234) ++ fakeQueries(150),
       errored = Seq.empty, rounds = 3, sharedSec = 3.2,
-      stress = fakeStress(26), probeBracket = fakeBrackets(9),
-      contended = Seq("events", "graph"),
-      sfDir = "/root/testdata/sf0.1",
-      warmupProbe = (2.668, 3.184), queriesProbe = (0.684, 0.701),
-      warmupHot = true,
-      probe0 = 0.712, settleProbe = 0.934, floorCand = 0.841,
-      floorRefresh = "0.684->0.841:3-runs-over-bound",
+      stress = fakeStress(ops), sfDir = "/data/sf0.1",
       queryMins = Bench.headline.map(_ -> 1.111) ++ fakeQueries(150).map {
         case (k, v) => k -> (v - 0.1) })
     assert(line.length <= Bench.MaxLineChars, s"line was ${line.length} chars")
@@ -56,32 +39,24 @@ class BenchLineSpec extends AnyFunSuite {
     Bench.headline.foreach { q =>
       assert(node.get("queries").has(q), s"headline $q missing")
     }
-    // r20 (VERDICT r19 item 6): per-query min-of-rounds rides the line as
-    // a positional array ALIGNED with the queries key order — one entry
-    // per emitted median, 2-decimal, so per-query heat (median >> min) is
-    // classifiable from the artifact alone
+    // per-query min-of-rounds rides the line as a positional array
+    // ALIGNED with the queries key order — one entry per emitted median
     assert(node.get("queries_min").isArray)
     assert(node.get("queries_min").size() === node.get("queries").size(),
       "queries_min must align 1:1 with the queries object")
     assert(node.get("queries_min").get(0).asDouble() === 1.11)
     // ... and the stress block itself fits alongside them (the full
-    // candidate, no shedding, at a realistic all-families op count)
-    assert(node.get("stress").size() === 26, "stress was shed at a " +
-      "realistic op count — the full candidate no longer fits")
-    // the r14 verdict's gap: the bracket and the contended verdict must
-    // be readable from the parsed line alone, no bench_detail archaeology
-    assert(node.get("probe_bracket").get("dedup").get(0).asDouble() > 0.8)
-    assert(node.get("probe_bracket").get("dedup").isArray)
-    assert(node.get("contended").get(0).asText() === "events")
-    // r19 shed order: at an oversized stress block the headline medians
+    // candidate, no shedding, at the real op count)
+    assert(node.get("stress").size() === ops, "stress was shed at the " +
+      "real op count — the full candidate no longer fits")
+    // shed order: at an oversized stress block the headline medians
     // OUTLIVE the stress payload (bounded, pinned, the cross-round
     // metric beats the bench_detail-replicated stress keys)
     val over = Bench.renderParsedLine(
       total = 123.456,
       queryMedians = Bench.headline.map(_ -> 1.234),
       errored = Seq.empty, rounds = 3, sharedSec = 3.2,
-      stress = fakeStress(60), probeBracket = fakeBrackets(9),
-      contended = Seq("events"), sfDir = "/root/testdata/sf0.1")
+      stress = fakeStress(100), sfDir = "/data/sf0.1")
     val overNode = mapper.readTree(over)
     assert(over.length <= Bench.MaxLineChars)
     assert(overNode.get("stress").size() === 0, "oversized stress must shed")
@@ -96,15 +71,12 @@ class BenchLineSpec extends AnyFunSuite {
       queryMedians = fakeQueries(500),
       errored = (0 until 20).map(i => s"q_errored_operator_$i"),
       rounds = 3, sharedSec = 0.1,
-      stress = fakeStress(200), probeBracket = fakeBrackets(9),
-      contended = StressOps.families.map(_._1),
-      sfDir = "/root/testdata/sf0.1")
-    // optional payloads (queries, stress, probe_bracket) are shed in
-    // order; value + errors + contended always remain parseable
+      stress = fakeStress(200), sfDir = "/data/sf0.1")
+    // optional payloads (stress, queries) are shed in order; value and
+    // errors always remain parseable
     val node = mapper.readTree(line)
     assert(node.get("value").asDouble() >= 0.999 && node.get("value").asDouble() <= 1.001)
     assert(node.get("errors").size() === 20)
-    assert(node.get("contended").size() === StressOps.families.size)
     assert(line.length <= Bench.MaxLineChars ||
       node.get("stress").size() === 0)
   }
@@ -120,8 +92,7 @@ class BenchLineSpec extends AnyFunSuite {
       queryMedians = Seq.empty,
       errored = (0 until 150).map(i => s"q_errored_operator_name_$i"),
       rounds = 3, sharedSec = 0.0,
-      stress = Seq.empty, probeBracket = Seq.empty, contended = Seq.empty,
-      sfDir = "/root/testdata/sf0.1")
+      stress = Seq.empty, sfDir = "/data/sf0.1")
     assert(line.length <= Bench.MaxLineChars, s"line was ${line.length}")
     val node = mapper.readTree(line)
     assert(node.get("errors").size() === 13) // 12 names + the count marker
@@ -132,76 +103,56 @@ class BenchLineSpec extends AnyFunSuite {
     val line = Bench.renderParsedLine(
       total = 1.0, queryMedians = Seq.empty, errored = Seq.empty,
       rounds = 3, sharedSec = 0.0, stress = Seq.empty,
-      probeBracket = Seq.empty, contended = Seq.empty,
       sfDir = """/tmp/we"ird\path""")
     val node = mapper.readTree(line) // parse fails if unescaped
     assert(node.get("sf").asText() === """/tmp/we"ird\path""")
   }
 
-  test("contended bracket: either dirty probe side flags; retry keeps " +
-      "the cleaner attempt") {
-    // the r14 driver run's actual bracket values: pre-probe 9.27 with a
-    // calm floor of 0.992 — exactly the shape that must flag
-    assert(Bench.contendedBracket((9.268, 1.08), calmMin = 0.992))
-    assert(Bench.contendedBracket((1.0, 5.078), calmMin = 0.992))
-    assert(!Bench.contendedBracket((0.992, 1.08), calmMin = 0.992))
-    assert(!Bench.contendedBracket((1.9, 1.2), calmMin = 0.992))
-    // no probe floor (stress disabled / all errored) → never flags
-    assert(!Bench.contendedBracket((9.0, 9.0), calmMin = -1.0))
+  test("queries_min is positional over the queries insertion order") {
+    // headline keys in a non-first position each get their own min, and
+    // non-headline mins never enter the array
+    val line = Bench.renderParsedLine(
+      total = 10.0,
+      queryMedians = Seq("q_not_headline" -> 9.0, "q_dsir" -> 2.0,
+        "q_other" -> 8.0, "q1_pricing" -> 1.0),
+      errored = Seq.empty, rounds = 3, sharedSec = 0.0,
+      stress = Seq.empty, sfDir = "/sf",
+      queryMins = Seq("q_not_headline" -> 7.77, "q_dsir" -> 1.5,
+        "q_other" -> 6.66, "q1_pricing" -> 0.25))
+    val node = mapper.readTree(line)
+    val keys = Seq.newBuilder[String]
+    node.get("queries").fieldNames().forEachRemaining(k => keys += k)
+    assert(keys.result() === Seq("q_dsir", "q1_pricing"))
+    val mins = (0 until node.get("queries_min").size())
+      .map(node.get("queries_min").get(_).asDouble())
+    assert(mins === Seq(1.5, 0.25))
   }
 
-  test("family stamping requires the bracket within 1.25x the calm-floor " +
-      "reference (r16 task 2)") {
-    // the r16 hole: graph's bracket [1.016, 1.139] was CLEAN vs the
-    // run's own floor (2× rule) yet 1.49-1.66× the calm reference
-    // (0.684) — it stamped on a hot window and published pagerank ~1.3×
-    // its calm band. That exact shape must now be stamp-ineligible.
-    assert(!Bench.stampEligibleVsRef((1.016, 1.139), floorRef = 0.684))
-    assert(!Bench.stampEligibleVsRef((0.7, 0.86), floorRef = 0.684)) // 1.26×
-    assert(Bench.stampEligibleVsRef((0.7, 0.85), floorRef = 0.684))  // 1.24×
-    assert(Bench.stampEligibleVsRef((0.684, 0.684), floorRef = 0.684))
-    // no calm history yet (first run) → always eligible, seeds the ref
-    assert(Bench.stampEligibleVsRef((9.0, 9.0), floorRef = -1.0))
-    assert(Bench.stampEligibleVsRef((9.0, 9.0), floorRef = 0.0))
-    // the bound constant itself is part of the cross-round contract
-    assert(Bench.StampRefMult === 1.25)
+  test("bench_detail min and spread ignore errored samples") {
+    // a query that failed one round used to read min -1, spread max + 1
+    assert(Bench.cleanMinSpread(Seq(2.0, -1.0, 3.5)) === ((2.0, 1.5)))
+    assert(Bench.cleanMinSpread(Seq(1.25)) === ((1.25, 0.0)))
+    assert(Bench.cleanMinSpread(Seq(-1.0, -1.0)) === ((-1.0, -1.0)))
+    assert(Bench.cleanMinSpread(Seq.empty) === ((-1.0, -1.0)))
   }
 
-  test("per-phase probes and the warmup-heat verdict ride every candidate") {
-    // r16 task 3: warmup read 49.6 s (bar ≤40) on a line whose run-level
-    // flag said calm — the warmup window's own probes and its heat
-    // verdict must be readable from the parsed line alone, even on the
-    // most-shed candidate
+  test("phases, isolated_families and stress_cursor ride every candidate") {
+    // r13's bench died with NO artifact (rc=124, parsed:null) — the
+    // budget's audit fields must survive even the most-shed line shape
+    // so a budget regression is always diagnosable from the artifact
     val line = Bench.renderParsedLine(
       total = 50.0,
       queryMedians = fakeQueries(500), errored = Seq.empty, rounds = 3,
       sharedSec = 2.0, stress = fakeStress(200),
-      probeBracket = fakeBrackets(9), contended = Seq.empty,
-      sfDir = "/root/testdata/sf0.1",
-      warmupProbe = (2.668, 3.184), queriesProbe = (0.684, 0.701),
-      warmupHot = true)
+      sfDir = "/data/sf0.1",
+      phases = Seq("warmup" -> 80.0, "stress" -> 590.0, "shared" -> 2.0,
+        "queries" -> 180.0),
+      stressCursor = "dedup")
     val node = mapper.readTree(line)
-    assert(node.get("warmup_probe").get(0).asDouble() === 2.668)
-    assert(node.get("warmup_probe").get(1).asDouble() === 3.184)
-    assert(node.get("queries_probe").get(0).asDouble() === 0.684)
-    assert(node.get("warmup_hot").asBoolean() === true)
+    assert(node.get("phases").get("stress").asDouble() === 590.0)
+    assert(node.get("stress_cursor").asText() === "dedup")
     assert(line.length <= Bench.MaxLineChars ||
       node.get("stress").size() === 0)
-  }
-
-  test("settle wait: bounded by heat-evidence age and remaining budget") {
-    // queue deferred at t=30 on a probe taken at t=25 → wait out the
-    // rest of the 60 s evidence window
-    assert(Bench.settleWaitSecs(lastHotAt = 25.0, elapsed = 30.0,
-      budget = 600.0) === 55.0)
-    // evidence already old (families ran in between) → no wait
-    assert(Bench.settleWaitSecs(lastHotAt = 25.0, elapsed = 200.0,
-      budget = 600.0) === 0.0)
-    // budget nearly spent → never sleep into the last 60 s
-    assert(Bench.settleWaitSecs(lastHotAt = 530.0, elapsed = 535.0,
-      budget = 600.0) === 5.0)
-    assert(Bench.settleWaitSecs(lastHotAt = 590.0, elapsed = 595.0,
-      budget = 600.0) === 0.0)
   }
 
   test("headline set is frozen: additions append-only, removals forbidden") {
@@ -251,42 +202,11 @@ class BenchLineSpec extends AnyFunSuite {
       "stress families changed — removals/renames need a SURVEY note")
   }
 
-  test("phases, isolated_families and stress_cursor ride every candidate") {
-    // r13's bench died with NO artifact (rc=124, parsed:null) — the
-    // budget's audit fields must survive even the most-shed line shape
-    // so a budget regression is always diagnosable from the artifact
-    val line = Bench.renderParsedLine(
-      total = 50.0,
-      queryMedians = fakeQueries(500), errored = Seq.empty, rounds = 3,
-      sharedSec = 2.0, stress = fakeStress(200),
-      probeBracket = fakeBrackets(9), contended = Seq("vec"),
-      sfDir = "/root/testdata/sf0.1",
-      phases = Seq("warmup" -> 80.0, "stress" -> 590.0, "shared" -> 2.0,
-        "queries" -> 180.0),
-      isolatedFamilies = 4, stressCursor = "dedup",
-      probeFloorRef = 0.684, runIsContended = true)
-    val node = mapper.readTree(line)
-    assert(node.get("phases").get("stress").asDouble() === 590.0)
-    assert(node.get("isolated_families").asInt() === 4)
-    assert(node.get("stress_cursor").asText() === "dedup")
-    // a poisoned-min verdict must survive every shed candidate too
-    assert(node.get("contended").get(0).asText() === "vec")
-    // r15 verdict task 2: the calm-floor reference and the whole-run
-    // heat verdict ride EVERY candidate — a judge classifies the run
-    // calm/hot from this line alone, no BENCH history needed
-    assert(node.get("probe_floor_ref").asDouble() === 0.684)
-    assert(node.get("run_contended").asBoolean() === true)
-    assert(line.length <= Bench.MaxLineChars ||
-      node.get("stress").size() === 0)
-  }
-
   test("stress budget: full runs early, min-of-2 past half, single-sample " +
       "past 80%, skip past full") {
     assert(Bench.familyRunsUnderBudget(0.0, 600.0, 3) === Some(3))
     assert(Bench.familyRunsUnderBudget(299.0, 600.0, 3) === Some(3))
     assert(Bench.familyRunsUnderBudget(301.0, 600.0, 3) === Some(2))
-    // r17 verdict task 2: a single-sample isolated datapoint with an
-    // honest bracket beats no datapoint for a six-round-starved family
     assert(Bench.familyRunsUnderBudget(481.0, 600.0, 3) === Some(1))
     assert(Bench.familyRunsUnderBudget(480.0, 600.0, 3) === Some(2))
     assert(Bench.familyRunsUnderBudget(600.0, 600.0, 3) === None)
@@ -295,331 +215,20 @@ class BenchLineSpec extends AnyFunSuite {
     assert(Bench.familyRunsUnderBudget(400.0, 600.0, 1) === Some(1))
   }
 
-  test("bracket tie-breaker: one straddling sample earns one confirmation " +
-      "probe; 2-of-3 decides (r17 task 1)") {
-    // the r17 driver's exact events shape: bracket [0.841, 0.980] vs
-    // bound 0.855 (= 1.25 × 0.684) — min under, max over by one sample
-    assert(Bench.tieBreakNeeded(0.841, 0.980, stampRef = 0.684))
-    assert(Bench.tieBreakNeeded(0.980, 0.841, stampRef = 0.684)) // pre-side too
-    // both calm / both hot: no tie-break — nothing to resolve
-    assert(!Bench.tieBreakNeeded(0.841, 0.850, stampRef = 0.684))
-    assert(!Bench.tieBreakNeeded(0.980, 2.2, stampRef = 0.684))
-    // no reference → never (ungated first run seeds the ref)
-    assert(!Bench.tieBreakNeeded(0.5, 9.0, stampRef = -1.0))
-    assert(!Bench.tieBreakNeeded(0.5, 9.0, stampRef = 0.0))
-
-    // calm confirmation: the blip loses its veto — bracket (head, last)
-    // = (0.841, 0.850) is now stamp-eligible; the raw hot sample stays
-    // in the vector for the floor population and the audit trail
-    val calm = Bench.resolveTieBreak(0.841, 0.980, 0.850, stampRef = 0.684)
-    assert(calm === Vector(0.841, 0.980, 0.850))
-    assert(Bench.stampEligibleVsRef((calm.head, calm.last), 0.684))
-    // hot confirmation: 2-of-3 hot — refusal stands, and the WORST hot
-    // sample takes the bracket position so heat is never understated
-    val hot = Bench.resolveTieBreak(0.841, 0.980, 1.4, stampRef = 0.684)
-    assert(hot === Vector(0.841, 0.980, 1.4))
-    assert(!Bench.stampEligibleVsRef((hot.head, hot.last), 0.684))
-    val hot2 = Bench.resolveTieBreak(0.841, 1.4, 0.980, stampRef = 0.684)
-    assert(hot2 === Vector(0.841, 0.980, 1.4))
-    // pre-side straddle (ungated re-attempt): calm side leads either way
-    val preHot = Bench.resolveTieBreak(0.980, 0.841, 0.850, stampRef = 0.684)
-    assert(preHot === Vector(0.841, 0.980, 0.850))
-    assert(Bench.stampEligibleVsRef((preHot.head, preHot.last), 0.684))
-  }
-
-  test("head-tail interleave: stalest still leads; every second slot " +
-      "from the freshest end (r17 task 2)") {
-    assert(Bench.interleaveHeadTail(Seq(1, 2, 3, 4, 5)) === Seq(1, 5, 2, 4, 3))
-    assert(Bench.interleaveHeadTail(Seq(1, 2, 3, 4)) === Seq(1, 4, 2, 3))
-    assert(Bench.interleaveHeadTail(Seq(1)) === Seq(1))
-    assert(Bench.interleaveHeadTail(Seq.empty[Int]) === Seq.empty)
-    // the r17 ledger shape: events/graph/metrics stalest (stamps 0,0,2),
-    // the six-family tail behind them — interleave gives token/langid
-    // (the freshest-stamped tail) slots 2 and 4 while events still leads
-    val ledger = Map(
-      "dedup" -> Bench.FamilyLedger(3, 0), "store" -> Bench.FamilyLedger(3, 0),
-      "index" -> Bench.FamilyLedger(3, 0), "vec" -> Bench.FamilyLedger(3, 0),
-      "media" -> Bench.FamilyLedger(3, 0),
-      "events" -> Bench.FamilyLedger(0, 0), "graph" -> Bench.FamilyLedger(0, 0),
-      "langid" -> Bench.FamilyLedger(4, 0), "token" -> Bench.FamilyLedger(5, 0),
-      "metrics" -> Bench.FamilyLedger(2, 0))
-    val ord = Bench.interleaveHeadTail(Bench.staleOrdered(ledger)).map(_._1)
-    assert(ord.take(6) === Seq("events", "token", "graph", "langid",
-      "metrics", "media"))
-    assert(ord.sorted === StressOps.families.map(_._1).sorted,
-      "nothing lost, nothing duplicated")
-  }
-
-  test("stress overshoot reason classifies the budget breach (r17 task 4)") {
-    // no overshoot → empty (the field must not cry wolf)
-    assert(Bench.overshootReason(599.0, 600.0, settled = true,
-      reAttempted = true, retried = true) === "")
-    // the r17 shape: settle wait + deferred re-attempts pushed 700.77 s
-    // against the 600 s budget
-    assert(Bench.overshootReason(700.77, 600.0, settled = true,
-      reAttempted = true, retried = false) === "settle+re-attempt")
-    assert(Bench.overshootReason(650.0, 600.0, settled = false,
-      reAttempted = false, retried = true) === "retry")
-    // none of the late-phase activities ran → the last main-loop family
-    // was simply in flight when the budget expired
-    assert(Bench.overshootReason(620.0, 600.0, settled = false,
-      reAttempted = false, retried = false) === "in-flight")
-  }
-
-  test("stress_overshoot_reason rides every shed candidate") {
-    val line = Bench.renderParsedLine(
-      total = 50.0,
-      queryMedians = fakeQueries(500), errored = Seq.empty, rounds = 3,
-      sharedSec = 2.0, stress = fakeStress(200),
-      probeBracket = fakeBrackets(9), contended = Seq.empty,
-      sfDir = "/root/testdata/sf0.1",
-      phases = Seq("warmup" -> 26.0, "stress" -> 700.8, "shared" -> 2.0,
-        "queries" -> 180.0),
-      stressOvershoot = "settle+re-attempt")
-    val node = mapper.readTree(line)
-    assert(node.get("stress_overshoot_reason").asText() === "settle+re-attempt")
-    assert(line.length <= Bench.MaxLineChars ||
-      node.get("stress").size() === 0)
-  }
-
-  test("staleness ledger orders families stalest-first, ties canonical") {
+  test("a budget-skipped family leads the next run; the rest follow in order") {
     val names = StressOps.families.map(_._1)
-    // empty ledger (first run / damaged file) → canonical order
-    assert(Bench.staleOrdered(Map.empty).map(_._1) === names)
-    // the r16 seed shape: events/graph stalest, then metrics, then the
-    // r14 batch in canonical order — the fix for the r15 verdict's
-    // structural finding (fixed rotation left events/graph 4 runs away)
-    val ledger = Map(
-      "dedup" -> Bench.FamilyLedger(3, 0), "store" -> Bench.FamilyLedger(3, 1),
-      "index" -> Bench.FamilyLedger(3, 0), "vec" -> Bench.FamilyLedger(3, 0),
-      "media" -> Bench.FamilyLedger(3, 0),
-      "events" -> Bench.FamilyLedger(0, 0), "graph" -> Bench.FamilyLedger(0, 0),
-      "langid" -> Bench.FamilyLedger(4, 0), "token" -> Bench.FamilyLedger(5, 0),
-      "metrics" -> Bench.FamilyLedger(2, 0))
-    val ord = Bench.staleOrdered(ledger).map(_._1)
-    assert(ord.take(3) === Seq("events", "graph", "metrics"))
-    assert(ord.sorted === names.sorted, "nothing lost, nothing duplicated")
-    // a family missing from the ledger reads stamp 0 — max priority
-    val partial = Bench.staleOrdered(ledger - "token").map(_._1)
-    assert(partial.take(3) === Seq("events", "graph", "token"))
-  }
-
-  test("ledger parse/render round-trips; garbage degrades, never crashes") {
-    val m = Map("events" -> Bench.FamilyLedger(7, 1),
-      "metrics" -> Bench.FamilyLedger(2, 0))
-    assert(Bench.parseLedger(Bench.renderLedger(m)) === m)
-    // malformed lines, unknown families and non-numeric fields drop out
-    val dirty = "events 7 1\nnot_a_family 3 0\nevents\ngraph x y\n  \n"
-    assert(Bench.parseLedger(dirty) === Map("events" -> Bench.FamilyLedger(7, 1)))
-    assert(Bench.parseLedger("") === Map.empty)
-    // out-of-range stamps read as damage — a stamp near Long.MaxValue
-    // would overflow maxStamp+1 and INVERT staleness (wedging the
-    // rotation), so it must degrade to "never certified" instead
-    assert(Bench.parseLedger(s"token ${Long.MaxValue} 0") === Map.empty)
-    assert(Bench.parseLedger("token -3 0\ngraph 2 -1") === Map.empty)
-    assert(Bench.parseLedger(s"token ${1L << 53} 0") ===
-      Map("token" -> Bench.FamilyLedger(1L << 53, 0)))
-  }
-
-  test("arm groups partition each family's op contract exactly") {
-    // an arm group that drops or invents an op key would silently shrink
-    // the cross-round datapoint contract — pin the partition property
-    val byFamily = StressOps.families.toMap
-    StressOps.armGroups.foreach { case (f, groups) =>
-      assert(byFamily.contains(f), s"armGroups names unknown family $f")
-      assert(groups.flatten.sorted === byFamily(f).sorted,
-        s"arm groups of $f do not partition its op list")
-      assert(groups.flatten.distinct.size === groups.flatten.size,
-        s"arm groups of $f overlap")
-      assert(groups.size >= 2, s"single-group armGroups entry $f is pointless")
-    }
-    // cursor rotation: modulo group count, never an index error
-    assert(StressOps.armsFor("metrics", 0) ===
-      Seq("stats_pct_exact", "stats_pct_approx"))
-    assert(StressOps.armsFor("metrics", 1) ===
-      Seq("stats_pct_exact_skew", "stats_pct_approx_skew"))
-    assert(StressOps.armsFor("metrics", 2) === StressOps.armsFor("metrics", 0))
-    // ungrouped family → all its ops
-    assert(StressOps.armsFor("token", 5) === Seq("bpe_encode", "ngram_lm_score"))
-    assert(StressOps.armsFor("no_such", 0) === Seq.empty)
-  }
-
-  test("whole-run contention flags vs the persisted calm-floor reference") {
-    // the r15 gap: token's bracket [1.95, 1.777] passed as clean on a
-    // run floor (1.777) that was itself 1.8× the calm reference — the
-    // run-level flag must catch exactly that shape
-    assert(Bench.runContended(runFloor = 1.777, floorRef = 0.684))
-    assert(Bench.runContended(runFloor = 0.992 * 1.51, floorRef = 0.992))
-    assert(!Bench.runContended(runFloor = 0.99, floorRef = 0.684 * 2)) // calm
-    assert(!Bench.runContended(runFloor = 0.7, floorRef = 0.684))
-    // no reference yet (first run) → never flags
-    assert(!Bench.runContended(runFloor = 9.9, floorRef = -1.0))
-  }
-
-  test("probe history parse/render round-trips; comments and garbage " +
-      "degrade, never crash (r18 task 1)") {
-    val recs = Vector(Bench.RunRecord("r17", 0.841, 0),
-      Bench.RunRecord("t1765000000", 0.702, 2))
-    val text = recs.map(Bench.renderHistoryLine).mkString
-    assert(Bench.parseHistory(text) === recs)
-    // comment lines, malformed rows, non-positive floors all drop out
-    val dirty = "# seeded from BENCH_r14-r18\nr14 0.992 0\nbad row\n" +
-      "r15 xx 0\nr16 -1 0\nr17 0.841 -2\nr18 1.037 3\n\n"
-    assert(Bench.parseHistory(dirty) === Vector(
-      Bench.RunRecord("r14", 0.992, 0), Bench.RunRecord("r18", 1.037, 3)))
-    assert(Bench.parseHistory("") === Vector.empty)
-    // NaN parses via toDouble and Infinity compares > 0 — both must read
-    // as damage, or one poisoned record wedges floorCandidate (min with
-    // NaN is NaN) and the hysteresis comparison forever
-    assert(Bench.parseHistory("r1 NaN 0\nr2 Infinity 0\nr3 0.9 1") ===
-      Vector(Bench.RunRecord("r3", 0.9, 1)))
-  }
-
-  test("rolling floor candidate: min probe of the last 5 recorded runs") {
-    def rec(f: Double) = Bench.RunRecord("x", f, 0)
-    assert(Bench.floorCandidate(Vector.empty) === -1.0)
-    assert(Bench.FloorWindow === 5)
-    // the committed r14-r18 seed: candidate = r17's 0.841
-    val seed = Vector(0.992, 1.777, 1.016, 0.841, 1.037).map(rec)
-    assert(Bench.floorCandidate(seed) === 0.841)
-    // a 6th run pushes r14 out of the window; the min tracks the tail
-    assert(Bench.floorCandidate(seed :+ rec(0.9)) === 0.841)
-    assert(Bench.floorCandidate(
-      Vector(0.7, 9.9, 9.9, 9.9, 9.9, 9.9).map(rec)) === 9.9)
-  }
-
-  test("hysteresis re-baseline: fires only on 3 consecutive over-bound " +
-      "runs — the seeded r16-r18 shape must NOT fire (r17 under bound)") {
-    def rec(f: Double) = Bench.RunRecord("x", f, 0)
-    assert(Bench.RebaselineStreak === 3)
-    // the honest r19 answer to the verdict's floor question: r17's
-    // driver floor 0.841 was UNDER the 0.855 bound — a stampable window
-    // existed within the last three rounds, so the 0.684 floor is not
-    // yet provably stale and the rule must hold its fire
-    val seeded = Vector(0.992, 1.777, 1.016, 0.841, 1.037).map(rec)
-    assert(!Bench.needsRebaseline(seeded, floorRef = 0.684))
-    // but if r19 and r20 also stay hot, the streak (r18, r19, r20) is
-    // finally 3 consecutive over-bound runs → re-baseline
-    assert(Bench.needsRebaseline(
-      seeded ++ Vector(rec(0.93), rec(1.1)), floorRef = 0.684))
-    // boundary: exactly at the bound is NOT over it
-    assert(!Bench.needsRebaseline(
-      Vector(rec(1.0), rec(0.684 * 1.25), rec(1.0)), floorRef = 0.684))
-    // fewer than 3 records or no reference → never
-    assert(!Bench.needsRebaseline(Vector(rec(9.0), rec(9.0)), 0.684))
-    assert(!Bench.needsRebaseline(seeded, floorRef = -1.0))
-  }
-
-  test("heat-memory reuse is capped: every 4th family must take its own " +
-      "probe (r18 task 3)") {
-    assert(Bench.MaxHotReuse === 3)
-    // fresh evidence, under the cap → free deferral
-    assert(Bench.reuseHeatMemory(sinceHot = 10.0, reuseCount = 0))
-    assert(Bench.reuseHeatMemory(sinceHot = 59.9, reuseCount = 2))
-    // the r18 failure shape: ONE stale bracket excused eight families —
-    // the 4th consecutive family must fork its own probe
-    assert(!Bench.reuseHeatMemory(sinceHot = 10.0, reuseCount = 3))
-    // old evidence never reuses, whatever the count
-    assert(!Bench.reuseHeatMemory(sinceHot = 60.0, reuseCount = 0))
-  }
-
-  test("hot-skip set: derived from calm bands, catches the r18 burn " +
-      "cases, spares the cheap arms (r18 task 2)") {
-    assert(StressOps.HotSkipCalmSecs === 5.0)
-    // the ops r18 burned ~100 s on (32.9 s / 65.7 s, both refused
-    // windows) must be in the skip set
-    assert(StressOps.hotSkipOps.contains("sessionize"))
-    assert(StressOps.hotSkipOps.contains("semdedup"))
-    assert(StressOps.hotSkipOps.contains("pagerank"))
-    // cheap arms still run on a hot window (bracket + key continuity).
-    // ngram_lm_score LEFT the skip set in r20: the broadcast-kernel +
-    // drain-fixed arm reads ~4.3-5.4 s calm (band 3.6-8.0), the same
-    // cost class as bpe_encode — the r18 65.7 s burn belonged to the
-    // lattice-explode plan that no longer exists.
-    assert(!StressOps.hotSkipOps.contains("ngram_lm_score"))
-    assert(!StressOps.hotSkipOps.contains("asof"))
-    assert(!StressOps.hotSkipOps.contains("bpe_encode"))
-    assert(!StressOps.hotSkipOps.contains("decode_pixels"))
-    assert(!StressOps.hotSkipOps.contains("retention"))
-    // derivation, not a second hand-kept list
-    assert(StressOps.hotSkipOps === StressOps.calmBands.collect {
-      case (k, (lo, _)) if lo >= StressOps.HotSkipCalmSecs => k
-    }.toSet)
-  }
-
-  test("every stress op in the cross-round contract has a calm band " +
-      "(r18 task 4)") {
-    val contract = StressOps.families.flatMap(_._2)
-    contract.foreach { op =>
-      val band = StressOps.calmBands.get(op)
-      assert(band.isDefined, s"op $op has no calm band")
-      val (lo, hi) = band.get
-      assert(lo > 0 && hi > lo, s"op $op band ($lo, $hi) is malformed")
-    }
-    // no stray bands for ops that do not exist
-    assert(StressOps.calmBands.keySet === contract.toSet)
-    // spot-check the r16-18 verdicts' quoted bands stayed inside ours
-    assert(StressOps.calmBands("sessionize") === (5.6, 8.8))
-    val pr = StressOps.calmBands("pagerank")
-    assert(pr._1 <= 14.7 && pr._2 >= 16.8)
-    val lm = StressOps.calmBands("ngram_lm_score")
-    assert(lm._2 < 30.0, "a band wide enough to absorb the r18 65.7 s " +
-      "heat artifact would defeat classification")
-  }
-
-  test("probe0, settle_probe, floor_candidate and floor_refresh ride " +
-      "every shed candidate (r18 task 1)") {
-    val line = Bench.renderParsedLine(
-      total = 50.0,
-      queryMedians = fakeQueries(500), errored = Seq.empty, rounds = 3,
-      sharedSec = 2.0, stress = fakeStress(200),
-      probeBracket = fakeBrackets(9), contended = Seq.empty,
-      sfDir = "/root/testdata/sf0.1",
-      probeFloorRef = 0.684,
-      probe0 = 0.712, settleProbe = 0.9,
-      floorCand = 0.841, floorRefresh = "0.684->0.841:3-runs-over-bound")
-    val node = mapper.readTree(line)
-    assert(node.get("probe0").asDouble() === 0.712)
-    assert(node.get("settle_probe").asDouble() === 0.9)
-    assert(node.get("floor_candidate").asDouble() === 0.841)
-    assert(node.get("floor_refresh").asText() ===
-      "0.684->0.841:3-runs-over-bound")
-    assert(line.length <= Bench.MaxLineChars ||
-      node.get("stress").size() === 0)
-    // absent values render as -1 / "" (never missing keys)
-    val bare = Bench.renderParsedLine(1.0, Seq.empty, Seq.empty, 3, 0.0,
-      Seq.empty, Seq.empty, Seq.empty, "/sf")
-    val bn = mapper.readTree(bare)
-    assert(bn.get("probe0").asDouble() === -1.0)
-    assert(bn.get("settle_probe").asDouble() === -1.0)
-    assert(bn.get("floor_candidate").asDouble() === -1.0)
-    assert(bn.get("floor_refresh").asText() === "")
-  }
-
-  test("certification requires every selected op attempted — a hot-skipped " +
-      "arm can never advance its cursor (r19 review finding 1)") {
-    // the tie-breaker can turn a hot-skipping attempt's bracket calm
-    // (hot pre-probe skips heavy ops, calm post + confirmation publish a
-    // clean bracket) — bracket cleanliness alone must not stamp ops
-    // that never ran
-    val ops = Seq("asof", "asof_skew", "sessionize", "sessionize_skew")
-    assert(Bench.armFullyAttempted(ops, ops.toSet))
-    // sessionize hot-skipped → published nothing → no stamp
-    assert(!Bench.armFullyAttempted(ops,
-      Set("asof", "asof_skew", "sessionize_skew")))
-    // an op that ran and ERRORED still publishes (-1 samples) and still
-    // counts as attempted — the usable-min condition governs that case
-    assert(Bench.armFullyAttempted(Seq("a"), Set("a", "b", "probe")))
-    // a family with no selected ops must never certify
-    assert(!Bench.armFullyAttempted(Seq.empty, Set("a")))
+    assert(Bench.rotatedFrom("graph").map(_._1) ===
+      names.dropWhile(_ != "graph") ++ names.takeWhile(_ != "graph"))
+    // no cursor yet, or a damaged one: canonical order
+    assert(Bench.rotatedFrom("").map(_._1) === names)
+    assert(Bench.rotatedFrom("no_such_family").map(_._1) === names)
   }
 
   test("errored queries are reported, never silently timed") {
     val line = Bench.renderParsedLine(
       total = 10.0, queryMedians = fakeQueries(5),
       errored = Seq("q_broken"), rounds = 3, sharedSec = 0.5,
-      stress = Seq.empty, probeBracket = Seq.empty, contended = Seq.empty,
-      sfDir = "/sf")
+      stress = Seq.empty, sfDir = "/sf")
     val node = mapper.readTree(line)
     assert(node.get("errors").get(0).asText() === "q_broken")
   }

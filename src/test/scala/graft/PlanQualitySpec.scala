@@ -746,4 +746,19 @@ class PlanQualitySpec extends SparkSpec {
       s"sketch is not partial-aggregated map-side:\n$plan")
     assert(!plan.contains("CartesianProduct"), plan)
   }
+
+  test("job counts: one-job counted append, coalesce(1) drain, " +
+      "checkpoint-first drain") {
+    // exact jobs of construction + count(), as the bench counts a query:
+    // an extra action in any of these shows here even where wall time
+    // would hide it in noise
+    val counter = new graft.streaming.Observability.JobCounter(spark)
+    def jobs(q: String): Int =
+      counter.count(q)(SparkEntry.queries(q)(spark, dir).count())._2.jobs
+    try {
+      val pinned = Seq("q_vocab_store", "q_dsir", "q_langid")
+      assert(pinned.map(q => q -> jobs(q)).toMap ==
+        Map("q_vocab_store" -> 12, "q_dsir" -> 9, "q_langid" -> 7))
+    } finally counter.close()
+  }
 }

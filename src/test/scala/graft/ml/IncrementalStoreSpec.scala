@@ -311,39 +311,15 @@ class IncrementalStoreSpec extends SparkSpec {
   }
 
   /** `body`'s result and the stage names (`<action> at <file>:<line>`, the
-    * call site) of every job launched while it runs — the LinkMetricSpec
-    * construction-guard pattern: job groups are thread-local, so
-    * concurrent suites' jobs don't carry this one, and a marker job
-    * bounds the wait. */
+    * call site) of every job launched while it runs, from the job
+    * counter: job groups are thread-local, so concurrent suites' jobs
+    * don't carry this one, and a marker job bounds the wait. */
   private def jobStagesDuring[T](body: => T): (T, List[Seq[String]]) = {
-    val sc = spark.sparkContext
-    val seen = scala.collection.mutable.ArrayBuffer.empty[(String, Seq[String])]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        seen.synchronized {
-          seen += (Option(js.properties)
-            .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-            .getOrElse("") -> js.stageInfos.map(_.name))
-        }
-    }
-    sc.addSparkListener(listener)
+    val counter = new graft.streaming.Observability.JobCounter(spark)
     try {
-      sc.setJobGroup("graft-build", "store read guard")
-      val result = body
-      sc.setJobGroup("graft-marker", "store read guard")
-      spark.range(1).count()
-      sc.clearJobGroup()
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (!seen.synchronized(seen.exists(_._1 == "graft-marker")) &&
-             System.nanoTime() < deadline) Thread.sleep(20)
-      assert(seen.synchronized(seen.exists(_._1 == "graft-marker")),
-        "marker job never observed")
-      (result, seen.synchronized(seen.filter(_._1 == "graft-build").map(_._2).toList))
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+      val (result, counts) = counter.count("store read guard")(body)
+      (result, counts.jobStages.toList)
+    } finally counter.close()
   }
 
   test("building dropSeenStore reads the store by its schema: no inference job") {

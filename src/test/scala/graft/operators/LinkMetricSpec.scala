@@ -251,42 +251,21 @@ class LinkMetricSpec extends SparkSpec {
   }
 
   test("constructing a reserveWindow metric stage launches no job") {
-    import scala.collection.mutable.ArrayBuffer
-    val sc = spark.sparkContext
-    val seen = ArrayBuffer.empty[String]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        seen.synchronized {
-          seen += Option(js.properties)
-            .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-            .getOrElse("")
-        }
-    }
-    sc.addSparkListener(listener)
+    val counter = new graft.streaming.Observability.JobCounter(spark)
     try {
       val df = Seq((ts("2024-01-01 00:00:10"), "a", 1.0)).toDF("@timestamp", "et", "v")
       // all three batch constructors, reserveWindow set: the bound must be
       // a broadcast 1-row frame inside the plan, not an eager max(ts).head.
-      // Job groups are thread-local, so any job launched DURING these
-      // calls carries "graft-construct" — concurrent suites' jobs don't.
-      sc.setJobGroup("graft-construct", "construction guard")
-      LinkMetric.batch(LinkMetric.Config("et", 60, reserveWindowSec = 3600))(df)
-      LinkStatsMetric.batch(LinkMetric.Config("et->v", 60, reserveWindowSec = 3600))(df)
-      LinkUniqMetric.batch(LinkMetric.Config("et->v", 60, reserveWindowSec = 3600))(df)
-      // marker job: listener events are ordered, so once the marker shows
-      // up, any construction-time job would already be in `seen`
-      sc.setJobGroup("graft-marker", "construction guard")
-      spark.range(1).count()
-      sc.clearJobGroup()
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (!seen.synchronized(seen.contains("graft-marker")) &&
-             System.nanoTime() < deadline) Thread.sleep(20)
-      val observed = seen.synchronized(seen.toList)
-      assert(observed.contains("graft-marker"), "marker job never observed")
-      assert(!observed.contains("graft-construct"),
-        s"stage construction launched jobs: $observed")
-    } finally sc.removeSparkListener(listener)
+      // Job groups are thread-local, so concurrent suites' jobs are not
+      // counted; the counter's marker job bounds the listener wait.
+      val (_, jobs) = counter.count("graft-construct") {
+        LinkMetric.batch(LinkMetric.Config("et", 60, reserveWindowSec = 3600))(df)
+        LinkStatsMetric.batch(LinkMetric.Config("et->v", 60, reserveWindowSec = 3600))(df)
+        LinkUniqMetric.batch(LinkMetric.Config("et->v", 60, reserveWindowSec = 3600))(df)
+      }
+      assert(jobs.jobs == 0,
+        s"stage construction launched jobs: ${jobs.jobStages}")
+    } finally counter.close()
   }
 
   test("LinkUniqMetric sketch partials union-merge to the exact distinct") {
