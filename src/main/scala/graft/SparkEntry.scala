@@ -86,35 +86,45 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q1_pricing")(spark, "/root/testdata/sf0.001")
 
-  /** The verified minhash pair frame is consumed by BOTH q_dedup_minhash
-    * and q_dedup_clusters in a Verify/Bench run — memoize the (tiny,
-    * post-threshold) result behind an eager localCheckpoint so the
-    * expensive shingle+band+verify plan executes once per (session, dir).
-    * WEAKLY keyed by the session object: a stopped session's entries (and
-    * their checkpointed blocks) become collectable instead of leaking for
-    * the JVM lifetime, and identity-hash reuse can't alias two sessions. */
-  private val pairsMemo =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, DataFrame]]()
-
-  /** Memo lookup that builds OUTSIDE the map lock: [[prebuildShared]]
-    * overlaps independent fixture builds from a small thread pool (guide
-    * §2.6 — one small job's tail leaves 31 cores idle), and holding the
-    * global lock during a build would serialize them again. Races are
-    * benign-but-wasteful (two identical eager frames, one wins the
-    * putIfAbsent); the only concurrent caller is prebuildShared itself,
-    * which submits each key exactly once. */
-  private def memoFrame(s: SparkSession, key: String)(
-      build: => DataFrame): DataFrame = {
-    val m = pairsMemo.synchronized {
-      pairsMemo.computeIfAbsent(s, _ => scala.collection.mutable.Map.empty)
-    }
-    m.synchronized(m.get(key)) match {
-      case Some(df) => df
-      case None =>
-        val built = build
-        m.synchronized(m.getOrElseUpdate(key, built))
+  /** Session-keyed fixture memo: the verified minhash pair frame is
+    * consumed by BOTH q_dedup_minhash and q_dedup_clusters in a
+    * Verify/Bench run, and the encode-churn media corpora and seen-store
+    * fixtures by several gates each, so each is built once per (session,
+    * key). WEAKLY keyed by the session object: a stopped session's
+    * entries (and their cut blocks) become collectable instead of
+    * leaking for the JVM lifetime, and identity-hash reuse can't alias
+    * two sessions.
+    *
+    * Builds run OUTSIDE the map lock: [[prebuildShared]] overlaps
+    * independent fixture builds from a small thread pool (guide §2.6 —
+    * one small job's tail leaves 31 cores idle), and holding the lock
+    * during a build would serialize them again. Races are
+    * benign-but-wasteful (two identical builds, the first stored wins);
+    * the only concurrent caller is prebuildShared itself, which submits
+    * each key exactly once. */
+  private final class SessionMemo[V] {
+    private val bySession =
+      new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, V]]()
+    def apply(s: SparkSession, key: String)(build: => V): V = {
+      val m = bySession.synchronized {
+        bySession.computeIfAbsent(s, _ => scala.collection.mutable.Map.empty)
+      }
+      m.synchronized(m.get(key)) match {
+        case Some(v) => v
+        case None =>
+          val built = build
+          m.synchronized(m.getOrElseUpdate(key, built))
+      }
     }
   }
+  private val frameMemo = new SessionMemo[DataFrame]
+  private val storeMemo = new SessionMemo[String]
+
+  /** A shared fixture frame: built once per (session, key) behind an
+    * eager cut, so consumers read materialized rows. */
+  private def memoFrame(s: SparkSession, key: String)(
+      build: => DataFrame): DataFrame =
+    frameMemo(s, key)(graft.core.CacheRegistry.cut(build))
 
   /** Throwaway seen-store fixtures for the q_dedup_store_* gates,
     * memoized per (session, dir) like [[sharedMinhashPairs]]: the
@@ -128,24 +138,14 @@ object SparkEntry {
     * the probe result over the memoized store is row-identical). The
     * one-time BUILD cost stays measured: stress family `store`
     * (store_build / near_store_build) times it at 100× in a fresh JVM. */
-  private val storeMemo =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, String]]()
   private def sharedStorePath(s: SparkSession, key: String)(
-      build: String => Unit): String = {
-    val m = storeMemo.synchronized {
-      storeMemo.computeIfAbsent(s, _ => scala.collection.mutable.Map.empty)
+      build: String => Unit): String =
+    storeMemo(s, key) {
+      val store = gateTmpDir("store-" + key.replaceAll("[^A-Za-z0-9]", "_")) +
+        "/store"
+      build(store)
+      store
     }
-    // build outside the lock so prebuildShared's pool overlaps fixture
-    // builds (see memoFrame); each key is submitted exactly once there
-    m.synchronized(m.get(key)) match {
-      case Some(p) => p
-      case None =>
-        val store = gateTmpDir("store-" + key.replaceAll("[^A-Za-z0-9]", "_")) +
-          "/store"
-        build(store)
-        m.synchronized(m.getOrElseUpdate(key, store))
-    }
-  }
   private def exactStoreFixture(s: SparkSession, dir: String): String =
     sharedStorePath(s, dir + "#exact") { path =>
       graft.ml.Dedup.appendToSeenStore(
@@ -163,7 +163,7 @@ object SparkEntry {
     memoFrame(s, dir)(
       graft.ml.Dedup.minhashPairs(Tables.load(s, dir, "documents"),
         "text", "doc_id", shingleSize = 3, numHashes = 64, bands = 32,
-        threshold = 0.9).localCheckpoint())
+        threshold = 0.9))
 
   /** The synthesized-PNG fixture for q_multimodal_decode is pure ImageIO
     * *encode* churn — identical bytes every build (dims are a function of
@@ -172,8 +172,7 @@ object SparkEntry {
   private def sharedSynthImages(s: SparkSession, dir: String): DataFrame =
     memoFrame(s, dir + "#synth_images")(
       graft.ml.Multimodal.synthesizeImages(
-        Tables.load(s, dir, "documents").select(col("doc_id")), "doc_id")
-        .localCheckpoint())
+        Tables.load(s, dir, "documents").select(col("doc_id")), "doc_id"))
 
   /** The mixed-modality fixture (PNG+WAV+MP4+FLAC+Ogg+WebM by doc_id%6)
     * memoized for the same reason: q_multimodal_mixed times the
@@ -191,7 +190,6 @@ object SparkEntry {
             .unionByName(mm.synthesizeFlacs(part(3), "doc_id"))
             .unionByName(mm.synthesizeOggs(part(4), "doc_id"))
             .unionByName(mm.synthesizeMkvs(part(5), "doc_id"))
-            .localCheckpoint()
         })
 
   /** The brightness-variant PNG corpus is shared by q_image_phash and
@@ -201,8 +199,7 @@ object SparkEntry {
   private def sharedSynthVariants(s: SparkSession, dir: String): DataFrame =
     memoFrame(s, dir + "#synth_variants")(
       graft.ml.Multimodal.synthesizeImageVariants(
-        Tables.load(s, dir, "documents").select(col("doc_id")), "doc_id")
-        .localCheckpoint())
+        Tables.load(s, dir, "documents").select(col("doc_id")), "doc_id"))
 
   /** q_script_profile's planted script samples, indexed by doc_id%8 —
     * ONE definition feeds the Spark gate, the generated oracle CASE and
@@ -236,8 +233,7 @@ object SparkEntry {
   private[graft] def sharedSynthSmooth(s: SparkSession, dir: String): DataFrame =
     memoFrame(s, dir + "#synth_smooth")(
       graft.ml.Multimodal.synthesizeSmoothImages(
-        Tables.load(s, dir, "documents").select(col("doc_id")), "doc_id")
-        .localCheckpoint())
+        Tables.load(s, dir, "documents").select(col("doc_id")), "doc_id"))
 
   /** The smooth corpus PIXEL-DECODED — the reference side of the two
     * transcode gates. q_image_formats compares two transcode arms
@@ -247,8 +243,7 @@ object SparkEntry {
     * 7 decode passes across the pair). */
   private[graft] def sharedSmoothDecoded(s: SparkSession, dir: String): DataFrame =
     memoFrame(s, dir + "#smooth_px")(
-      graft.ml.Multimodal.decodeImagePixels(sharedSynthSmooth(s, dir))
-        .localCheckpoint())
+      graft.ml.Multimodal.decodeImagePixels(sharedSynthSmooth(s, dir)))
 
   /** BMP/GIF re-encodes of the smooth corpus for q_image_formats. The
     * gate's seam is DECODING the re-encoded bytes; the encode is fixture
@@ -258,8 +253,7 @@ object SparkEntry {
   private[graft] def sharedSmoothTranscoded(s: SparkSession, dir: String,
       fmt: String): DataFrame =
     memoFrame(s, dir + "#smooth_" + fmt)(
-      graft.ml.Multimodal.transcodeImages(sharedSynthSmooth(s, dir), fmt)
-        .localCheckpoint())
+      graft.ml.Multimodal.transcodeImages(sharedSynthSmooth(s, dir), fmt))
 
   /** Force-build the memoized shared frames for (session, dir). Bench
     * times this call as its own JSON line so the per-query numbers are
@@ -289,7 +283,7 @@ object SparkEntry {
             // (minhashPairs' docs persist, joinBackOnce drop sets) would
             // otherwise sit on the pool thread's queue for the session
             // lifetime. Safe here because every build is EAGER (the
-            // localCheckpoint/append materializes inside the task), so
+            // cut/append materializes inside the task), so
             // the memos' consuming action has completed by the finally.
             override def call(): Any =
               try b() finally graft.core.CacheRegistry.drain()
@@ -297,7 +291,7 @@ object SparkEntry {
         futs.foreach(_.get()) // propagate the first failure
       }
       runAll(Seq(
-        () => sharedMinhashPairs(s, dir), // eager localCheckpoint: building IS materializing
+        () => sharedMinhashPairs(s, dir), // eager cut: building IS materializing
         // store-gate fixtures: the backfill lands in `shared`, the gates
         // time the recurring probe (see sharedStorePath's scaladoc)
         () => exactStoreFixture(s, dir),
@@ -1035,13 +1029,13 @@ object SparkEntry {
       // the exact top-k base is consumed by all three recall arms, whose
       // union subtrees execute CONCURRENTLY — a lazy memo never gets hit
       // (each arm computes it before any fill lands; measured r20:
-      // 0.788→1.744 med). Eager localCheckpoint instead (the
+      // 0.788→1.744 med). An eager cut instead (the
       // sharedMinhashPairs precedent): the brute-force pass runs exactly
-      // once, and the arms consume the tiny (25-row) checkpointed frame.
+      // once, and the arms consume the tiny (25-row) cut frame.
       val exact = graft.ml.Similarity.bruteForceTopK(
           emb, qs, "embedding", "vec_id", k = 5)
         .select($"query_id", $"vec_id")
-        .localCheckpoint()
+        .transform(graft.core.CacheRegistry.cut)
       def arm(name: String, approx: DataFrame) =
         exact.join(approx.select($"query_id", $"vec_id", lit(1).as("hit")),
             Seq("query_id", "vec_id"), "left")

@@ -223,10 +223,11 @@ object StressOps {
         // PIXEL-DECODE THROUGHPUT: reads EVERY payload byte — full PNG
         // decode plus the aHash/dHash reduction. The fixture is
         // PNG-*encode*-heavy, so it is built and checkpointed OUTSIDE the
-        // timed region (the localCheckpoint survives the between-sample
+        // timed region (the cut survives the between-sample
         // cache clears); the datapoint times decode+hash only.
         val bigPngs = mm.synthesizeImageVariants(
-          bigDocs.select(col("doc_id")), "doc_id").localCheckpoint()
+          bigDocs.select(col("doc_id")), "doc_id")
+          .transform(graft.core.CacheRegistry.cut)
         timed("decode_pixels")(
           mm.decodeImagePixels(bigPngs)
             .agg(sum(col("px.px_sum"))).head().getLong(0))
@@ -357,11 +358,11 @@ object StressOps {
         timed("bpe_encode")(
           graft.ml.Bpe.tokenCount(bigDocs, "text", merges)
             .agg(sum(col("n_bpe_tokens"))).head().getLong(0))
-        // localCheckpoint: the model frame must survive the
+        // cut: the model frame must survive the
         // between-sample cache clears and not re-derive inside the
         // timed region
         val model = graft.ml.NgramLm.train(d1, "text", order = 3,
-          minCount = 2).localCheckpoint()
+          minCount = 2).transform(graft.core.CacheRegistry.cut)
         // head() + sum_prob: the scoring FOLDS are projections over the
         // per-doc lattice — count() would run the lattice for
         // cardinality but prune the folds, under-measuring the kernel

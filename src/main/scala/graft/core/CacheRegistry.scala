@@ -1,9 +1,33 @@
 package graft.core
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
-/** Owned lifecycle for the corpus-sized persisted memos the dedup/ANN
+/** The one barrier module: the lazy registered memo (`memo`,
+  * `memoBroadcast`, drained by `drain()`) and the eager lineage cut
+  * (`cut`). No other main source calls `localCheckpoint`/`checkpoint`
+  * (SourceGuardSpec pins it), so `spark.sql.graft.checkpointDir` covers
+  * every eager barrier.
+  *
+  * **Bounded driver drains.** A drain is `take(cap + 1)`: one row
+  * past the cap proves the bounded-model contract violated without an
+  * unbounded driver pull. `take` scans incrementally (1, 4, 16, …
+  * partitions) and pays one job per step, so each drain puts one prefix
+  * in front of it that makes the take a single job:
+  *   - `coalesce(1)` when a shuffle sits directly below (a bounded
+  *     aggregate spread over the session's shuffle partitions): one task
+  *     reads every reducer output (Dsir.model, the QualityClassifier
+  *     gradient);
+  *   - otherwise `cut` first: with no shuffle below, `coalesce(1)` would
+  *     collapse the upstream scan into one task, while the cut computes
+  *     the plan once at full parallelism and the take steps read
+  *     materialized blocks (LangId profiles, the DatasetOps centroid
+  *     panel, the NgramLm model). A contract-violating input then
+  *     materializes on the executors before the cap trips; driver
+  *     memory stays bounded.
+  *
+  * Owned lifecycle for the corpus-sized persisted memos the dedup/ANN
   * family pins (joinBackOnce drop sets, hashed-shingle tables, semantic
   * assignment memos) and the metric stages' reserve-bound input. Spark's CacheManager holds strong references, so a
   * long-lived session looping corpora (`graft.Main --watch`) would
@@ -42,6 +66,54 @@ object CacheRegistry {
     val p = df.persist(StorageLevel.MEMORY_AND_DISK)
     local.get.add(p)
     p
+  }
+
+  /** Eager lineage cut: materialize `df` now and return a frame that
+    * scans the materialized rows through an RDD barrier (`LogicalRDD`).
+    * Used where a plan must run exactly once (a count and a write that
+    * must see the same rows while a store changes underneath, loop
+    * iterations whose lineage would otherwise grow, session fixtures),
+    * where its inputs are about to be deleted, and in front of exploding
+    * SELF-joins. The last must NOT be `persist`ed: a cached
+    * InMemoryRelation advertises its true (tiny) size and AQE then
+    * coalesces the join's exchanges to a handful of partitions while the
+    * join OUTPUT explodes — measured 17 s → 100 s at 500k docs
+    * (tools/profile.scala hamming64-2x2). The RDD scan reports unknown
+    * size, keeping full parallelism.
+    *
+    * Which barrier is a deployment choice: `localCheckpoint()` (default)
+    * is fast but trades fault tolerance — a lost executor fails the job.
+    * On a real cluster set `spark.sql.graft.checkpointDir` to a DFS path
+    * and every cut goes through reliable `checkpoint()` instead:
+    * identical plan shape (LogicalRDD, unknown stats ⇒ no AQE coalesce),
+    * executor loss recovers from the checkpoint files, at the cost of
+    * writing each cut to that directory.
+    *
+    * A cut is NOT registered for `drain()`: its blocks are freed when the
+    * frame becomes unreachable (ContextCleaner), because session
+    * fixtures and stress frames must survive the drain that runs between
+    * queries. A caller that knows nothing reads the cut again frees it
+    * early with [[release]]. */
+  def cut(df: DataFrame): DataFrame = {
+    val ss = df.sparkSession
+    ss.conf.getOption("spark.sql.graft.checkpointDir").filter(_.nonEmpty) match {
+      case Some(dir) =>
+        val sc = ss.sparkContext
+        // setCheckpointDir appends a per-context UUID subdir; only set it
+        // when unset so repeated calls (and user-owned settings) stick
+        if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
+        df.checkpoint()
+      case None => df.localCheckpoint()
+    }
+  }
+
+  /** Free a [[cut]]'s local-checkpoint blocks now. Only for a cut that
+    * nothing reads again: a later read of a released local cut fails
+    * ("Checkpoint block … not found"). A reliable cut keeps reading its
+    * checkpoint files. */
+  def release(cut: DataFrame): Unit = cut.queryExecution.logical match {
+    case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+    case _ => ()
   }
 
   /** Register a hand-built Broadcast (kernel models: NgramLm's LmModel,

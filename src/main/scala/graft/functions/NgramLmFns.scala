@@ -43,38 +43,28 @@ object NgramLmFns {
   /** Drain bound for the broadcast model — the model-as-frame contract
     * keeps it at vocabulary scale (the 100× stress corpus trains 28k
     * rows); one row past the cap proves a violation without an unbounded
-    * driver materialization (the LangId profile-drain precedent). */
+    * driver materialization (the drain rule in graft.core.CacheRegistry). */
   val MaxModelRows = 4000000
 
   private val Ws = java.util.regex.Pattern.compile("\\s+")
   private val WsUnicode = java.util.regex.Pattern.compile("\\s+",
     java.util.regex.Pattern.UNICODE_CHARACTER_CLASS)
 
-  /** The model frame projected to (lvl:int, gram:string, cnt:long) and
-    * eagerly localCheckpoint'ed — the shared drain prefix. Checkpoint
-    * BEFORE take (r20): take()'s incremental scale-up scan (1, 4, 16, …
-    * partitions) re-runs the train plan's final stage once per step
-    * (the LangId profile-drain measurement); the checkpoint computes the
-    * train plan exactly once and take/score read materialized blocks. */
-  def checkpointedModel(
-      model: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    model.select(
-      org.apache.spark.sql.functions.col("lvl").cast("int"),
-      org.apache.spark.sql.functions.col("gram").cast("string"),
-      org.apache.spark.sql.functions.col("cnt").cast("long"))
-      .localCheckpoint()
-
   /** Build the driver-side model from a (lvl, gram, cnt) frame: levels
     * 1..order into per-level maps (duplicates summed), lvl-0 rows summed
     * into N. Throws past [[MaxModelRows]] — callers that can degrade
     * gracefully (NgramLm.score falls back to the composed join plan)
-    * drain via [[checkpointedModel]] + [[buildModelFromRows]] instead. */
+    * drain themselves and fold with [[buildModelFromRows]] instead. */
   def buildModel(model: org.apache.spark.sql.DataFrame, order: Int): LmModel = {
-    val rows = checkpointedModel(model).take(MaxModelRows + 1)
+    import org.apache.spark.sql.functions.col
+    val ck = graft.core.CacheRegistry.cut(model.select(
+      col("lvl").cast("int"), col("gram").cast("string"), col("cnt").cast("long")))
+    val rows = ck.take(MaxModelRows + 1)
     require(rows.length <= MaxModelRows,
       s"NgramLm model frame exceeds $MaxModelRows rows — not a bounded " +
         "model-as-frame (train with a minCount, or raise the bound " +
         "deliberately)")
+    graft.core.CacheRegistry.release(ck) // nothing reads the cut again
     buildModelFromRows(rows, order)
   }
 

@@ -18,8 +18,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * interpreted `transform(…, xxhash64)` per-element eval disappears);
   * hash bytes/seed are exactly Spark's XxHash64 over the gram string.
   *
-  * Semantics are EXACTLY `Dedup.shinglesComposed` (ShingleFnsSpec pins
-  * the equivalence on an edge battery): Java `\s+` split with -1 limit
+  * Semantics are EXACTLY the test-scope twin
+  * `graft.ReferenceTwins.shinglesComposed` (ShingleFnsSpec pins the
+  * equivalence on an edge battery): Java `\s+` split with -1 limit
   * (leading empty token on leading whitespace, unicode spaces NOT \s),
   * grams joined with ' ', docs shorter than n clip to their single
   * space-joined gram, distinct keeps first-occurrence order.

@@ -368,46 +368,6 @@ object DatasetOps {
   def normalizeUrl(u0: Column): Column =
     graft.functions.UrlFns.urlNormalize(u0)
 
-  /** The composed-expression formulation normalizeUrl used before the
-    * native kernel — kept as the executable SEMANTICS REFERENCE (the
-    * UrlFnsSpec equivalence battery runs both and diffs). Five parses +
-    * an interpreted higher-order function per row vs the kernel's one
-    * parse: ~5× slower at 100k rows; do not use on the hot path. */
-  private[graft] def normalizeUrlComposed(u0: Column): Column = {
-    def part(p: String): Column = try_parse_url(u0, lit(p))
-    // Columns are expression TREES: binding `val scheme = …` and
-    // referencing it three times embeds three copies of the parse — the
-    // naive form cost 14 url parses and two query filter+sorts PER ROW
-    // (measured ~6× the whole projection). transform-over-a-1-element-
-    // array is the public let-binding idiom: the struct of parts is
-    // evaluated once, and the lambda reads fields.
-    val parts = struct(
-      lower(part("PROTOCOL")).as("scheme"),
-      lower(part("HOST")).as("host"),
-      // parse_url has no PORT part; a digits-only anchored match on the
-      // AUTHORITY is safe past userinfo colons and bracketed IPv6 literals
-      regexp_extract(coalesce(part("AUTHORITY"), lit("")), ":([0-9]+)$", 1)
-        .as("port"),
-      part("PATH").as("rawpath"),
-      array_sort(filter(split(coalesce(part("QUERY"), lit("")), "&"),
-        p => p =!= "" && !p.startsWith("utm_"))).as("params"))
-    element_at(transform(array(parts), { s =>
-      val scheme = s.getField("scheme")
-      val host = s.getField("host")
-      val port = s.getField("port")
-      val rawPath = s.getField("rawpath")
-      val params = s.getField("params")
-      val portOut = when(port === "" ||
-          (scheme === "http" && port === "80") ||
-          (scheme === "https" && port === "443"), lit(""))
-        .otherwise(concat(lit(":"), port))
-      val path = when(rawPath.isNull || rawPath === "", lit("/")).otherwise(rawPath)
-      val query = when(size(params) === 0, lit(""))
-        .otherwise(concat(lit("?"), array_join(params, "&")))
-      concat(scheme, lit("://"), host, portOut, path, query)
-    }), 1)
-  }
-
   /** URL-level dedup over [[normalizeUrl]]: one row per canonical URL
     * with the smallest id as keeper and the duplicate count. Shuffle key
     * is the canonical URL string; at web scale swap the key for its
@@ -682,21 +642,12 @@ object DatasetOps {
     require(!df.columns.contains("cluster_id"),
       "balanceByCluster emits 'cluster_id' but the input already has it — " +
         "rename or drop the existing column first")
-    // bounded drain (take, not collect): one row past the cap proves the
-    // panel violates the bounded-model contract without an unbounded
-    // DRIVER pull. NO coalesce(1) here (unlike the Dsir.model drain):
-    // the panel may be a raw filtered scan of an unbounded table with no
-    // shuffle boundary below, and coalesce would collapse that scan to
-    // one task. localCheckpoint FIRST instead (the LangId drain fix): a
-    // selective panel never fills take's cap, so the incremental
-    // scale-up scan (1, 4, 16, … partitions) walks EVERY partition
-    // across ~4 job floors; the eager checkpoint scans once in parallel
-    // and the take reads materialized blocks. A contract-violating
-    // caller materializes the oversized panel on the executors before
-    // the cap trips (driver boundedness unchanged).
+    // bounded drain of the centroid panel, cut first: the panel may be a
+    // raw filtered scan with no shuffle below (the drain rule in
+    // graft.core.CacheRegistry)
     val rows = centroids
       .select(col("cell_id").cast("long"), col("centroid").cast("array<double>"))
-      .localCheckpoint()
+      .transform(graft.core.CacheRegistry.cut)
       .take(4097)
     require(rows.nonEmpty, "balanceByCluster: empty centroid panel")
     require(rows.length <= 4096,

@@ -24,33 +24,6 @@ object Dedup {
 
   def tokens(text: Column): Column = split(text, """\s+""")
 
-  /** Materialization barrier for memos that feed exploding SELF-JOINs
-    * (banded fingerprint tables). These must NOT be `persist`ed: a cached
-    * InMemoryRelation advertises its true (tiny) size and AQE then
-    * coalesces the join's exchanges to a handful of partitions while the
-    * join OUTPUT explodes — measured 17 s → 100 s at 500k docs
-    * (tools/profile.scala hamming64-2x2). An RDD-scan barrier reports
-    * unknown size, keeping full parallelism.
-    *
-    * Which barrier is a deployment choice: `localCheckpoint()` (default)
-    * is fast but trades fault tolerance — a lost executor fails the job.
-    * On a real cluster set `spark.sql.graft.checkpointDir` to a DFS path
-    * and the same memo goes through reliable `checkpoint()` instead:
-    * identical plan shape (LogicalRDD, unknown stats ⇒ no AQE coalesce),
-    * executor loss recovers from the checkpoint files. */
-  private[graft] def explodingMemo(df: DataFrame): DataFrame = {
-    val ss = df.sparkSession
-    ss.conf.getOption("spark.sql.graft.checkpointDir").filter(_.nonEmpty) match {
-      case Some(dir) =>
-        val sc = ss.sparkContext
-        // setCheckpointDir appends a per-context UUID subdir; only set it
-        // when unset so repeated calls (and user-owned settings) stick
-        if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
-        df.checkpoint()
-      case None => df.localCheckpoint()
-    }
-  }
-
   /** Distinct word n-gram shingles.
     *
     * Built from zipped shifted arrays instead of a per-position
@@ -61,17 +34,6 @@ object Dedup {
     * clipped shingle the slice-based formulation produced. */
   def shingles(text: Column, n: Int): Column =
     graft.functions.ShingleFns.shingles(text, n)
-
-  /** The composed-expression formulation shingles used before the native
-    * kernel — kept as the executable SEMANTICS REFERENCE
-    * (ShingleFnsSpec diffs kernel vs this on the edge battery). */
-  private[graft] def shinglesComposed(text: Column, n: Int): Column = {
-    val toks = tokens(text)
-    // shared zipped-shifted-slices core (TextAnalysis.ngramsAll); docs
-    // shorter than n tokens contribute their single clipped shingle
-    array_distinct(when(size(toks) < n, array(array_join(toks, " ")))
-      .otherwise(TextAnalysis.ngramsAllComposed(text, n)))
-  }
 
   /** Exact dedup: one representative (min id) + count per identical value.
     * At scale the groupBy key should be a digest, not the full text — the
@@ -360,13 +322,9 @@ object Dedup {
   /** Per-token 32-bit hashes: low 8 hex chars of md5 — deliberately
     * reproducible in any engine (the oracle recomputes it in SQL).
     * Native fused kernel; ShingleFnsSpec pins it against the composed
-    * form below. */
+    * form in test scope (graft.ReferenceTwins). */
   def simhashTokenHashes(text: Column): Column =
     graft.functions.ShingleFns.md5TokenHashes(text)
-
-  private[graft] def simhashTokenHashesComposed(text: Column): Column =
-    transform(array_distinct(tokens(text)),
-      t => conv(substring(md5(t), 25, 8), 16, 10).cast("long"))
 
   /** Band-configuration audit for SimHash hamming-k blocking — the
     * [[minhashBandStats]] twin over the bit-slice banding
@@ -460,8 +418,8 @@ object Dedup {
       df.select(col(idCol).as("id"), col(textCol).as("__t")), col("id"))
       .select(col("id"), simhashFromHashes(simhashTokenHashes(col("__t"))).as("sim"))
       // exploding-self-join memo: RDD barrier, never persist (AQE would
-      // coalesce under the quadratic pair output — see explodingMemo)
-      .transform(explodingMemo)
+      // coalesce under the quadratic pair output — see CacheRegistry.cut)
+      .transform(graft.core.CacheRegistry.cut)
     // deliberately NOT simChunk: this 32-bit variant's chunks must stay
     // bit-identical to the oracle SQL's `>> b*bits % 2^bits` (signed
     // shift is safe — md5-derived sims are non-negative 32-bit values)
@@ -511,8 +469,8 @@ object Dedup {
       df.select(col(idCol).as("id"), col(textCol).as("__t")), col("id"))
       .select(col("id"), simhash64Fingerprint(col("__t")).as("sim"))
       // exploding-self-join memo: RDD barrier, never persist (AQE would
-      // coalesce under the quadratic pair output — see explodingMemo)
-      .transform(explodingMemo)
+      // coalesce under the quadratic pair output — see CacheRegistry.cut)
+      .transform(graft.core.CacheRegistry.cut)
     def chunk(sim: Column, b: Int): Column = simChunk(sim, b, bits)
     val banded = sh.select(col("id"), col("sim"),
         posexplode(array((0 until bands).map(b => chunk(col("sim"), b)): _*)))
@@ -579,7 +537,7 @@ object Dedup {
     // one barrier, after the rep-tagging window (the window's sim-shuffle
     // already materializes the fingerprints once; a second memo on `sh`
     // would just double the checkpoint): exploding-self-join memo — RDD
-    // barrier, never persist (see explodingMemo)
+    // barrier, never persist (see CacheRegistry.cut)
     // null fingerprints (null/absent text) are each their own rep: the
     // banded join below can never match them (null chunks fail the
     // equi-join), so pre-collapse they were always KEPT — collapsing the
@@ -591,7 +549,7 @@ object Dedup {
     val w = Window.partitionBy(col("sim"),
       when(col("sim").isNull, col("id")))
     val tagged = sh.withColumn("__rep", min(col("id")).over(w))
-      .transform(explodingMemo)
+      .transform(graft.core.CacheRegistry.cut)
     val memberDrops = tagged.filter(col("id") =!= col("__rep"))
       .select(col("id").as("__drop"))
     val reps = tagged.filter(col("id") === col("__rep")).select("id", "sim")
@@ -719,7 +677,7 @@ object Dedup {
     *
     * Iterative min-label propagation — each round is one shuffle join, the
     * round count is the graph diameter (near-dup clusters are shallow, so
-    * a handful). `localCheckpoint` every few rounds truncates lineage so
+    * a handful). A `CacheRegistry.cut` every round truncates lineage so
     * plans don't grow exponentially at scale; the per-round driver action
     * reads ONE count, not the data.
     *
@@ -744,8 +702,8 @@ object Dedup {
       .distinct().persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // every consumer of `edges` finishes INSIDE this function (the local
     // union-find iterates it; the distributed loop's surviving labels are
-    // localCheckpoint'd, cutting their lineage from it) — so its persist
-    // is owned here, not registry-drained: unpersist on every exit.
+    // cut, losing their lineage to it) — so its persist is owned here,
+    // not registry-drained: unpersist on every exit.
     if (edges.count() <= driverEdgeLimit)
       try return clustersLocal(edges) finally edges.unpersist(blocking = false)
     // seed with min(id, min neighbor): round one of propagation happens
@@ -759,7 +717,7 @@ object Dedup {
         .select(edges("src").as("id"), col("rep"))
       val updated = labels.select("id", "rep").union(nbr)
         .groupBy("id").agg(min("rep").as("rep"))
-        .localCheckpoint()
+        .transform(graft.core.CacheRegistry.cut)
       val changed = updated.as("n").join(labels.as("o"), "id")
         .filter(col("n.rep") =!= col("o.rep")).limit(1).count()
       labels = updated
@@ -1390,9 +1348,9 @@ object Dedup {
               // whole nested tree per branch (a 211 MB plan string); the
               // checkpoint cuts lineage so each branch anti-joins a
               // broadcast of a plain RDD scan. matched ≤ bcastRows, so
-              // the checkpoint is increment-sized; explodingMemo's
+              // the checkpoint is increment-sized; the cut's
               // checkpointDir switch keeps the cluster-reliable form.
-              val matched = explodingMemo(
+              val matched = graft.core.CacheRegistry.cut(
                 seen.join(broadcast(cand), Seq("fp"), "left_semi"))
               df.join(broadcast(matched), fpc === matched("fp"), "left_anti")
             } else dropSeen(df, seen, textCol)

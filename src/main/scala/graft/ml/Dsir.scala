@@ -66,7 +66,7 @@ object Dsir {
     * [[ngramCounts]] calls explode + partial-agg the corpus twice — at
     * 100 TB that pass IS the model-build cost, so fusing halves it. The
     * single pass materializes one bounded (≤ 2^logBuckets rows) frame
-    * via localCheckpoint; both returned frames are projections of it
+    * via CacheRegistry.cut; both returned frames are projections of it
     * and are BIT-IDENTICAL to ngramCounts over the equivalent inputs
     * (same long groupBy-sum lattice, order-free; -1 total sentinels
     * included) — gate oracles are unaffected. */
@@ -81,7 +81,7 @@ object Dsir {
         sum(when(col("t"), col("f.cnt")).otherwise(lit(0)).cast("long"))
           .as("cnt_t"),
         sum(col("f.cnt").cast("long")).as("cnt_r"))
-      .localCheckpoint()
+      .transform(graft.core.CacheRegistry.cut)
     def side(c: String) = {
       val pb = perBucket.select(col("bucket"), col(s"`$c`").as("cnt"))
       val total = pb.agg(coalesce(sum(col("cnt")), lit(0L)).as("cnt"))
@@ -136,11 +136,8 @@ object Dsir {
       logBuckets: Int = 12, bigrams: Boolean = true): DsirModel = {
     val b = 1 << logBuckets
     def drain(counts: DataFrame, which: String): (Array[Long], Long) = {
-      // coalesce(1) before take (r20): the frame is bounded (≤ 2^logB+1
-      // rows) but spread over the session's partitions, and take()'s
-      // incremental scale-up scan (1, 4, 16, … partitions) pays one job
-      // floor per step — ~4 jobs per drain, ×2 drains per model. One
-      // partition → one job; driver boundedness unchanged (still take).
+      // bounded drain over a shuffle output: coalesce(1) first (the
+      // drain rule in graft.core.CacheRegistry)
       val rows = counts.select(col("bucket").cast("int"),
         col("cnt").cast("long")).coalesce(1).take(b + 2)
       require(rows.length <= b + 1,

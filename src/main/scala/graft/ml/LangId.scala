@@ -77,21 +77,12 @@ object LangId {
         s"LangId.annotate emits '$c' but the input already has it — " +
           "rename or drop the existing column first")
     }
-    // bounded drain (take, not collect): the model contract is
-    // ≤ |langs| × topK rows; one row past the cap proves a violation
-    // without ever materializing an unbounded frame on the driver.
-    // localCheckpoint FIRST (r20): take()'s incremental scale-up scan
-    // (1, 4, 16, … partitions) re-runs the profile plan's final stage
-    // once per step — ~4 job floors on a ~500-row frame (measured
-    // q_langid 1.24 med vs 0.98 for train+classify run separately); the
-    // eager checkpoint computes the train plan exactly once and the take
-    // steps read materialized blocks. A contract-violating caller now
-    // materializes the oversized frame on the EXECUTORS before the cap
-    // trips (driver boundedness unchanged).
+    // bounded drain of ≤ |langs| × topK profile rows, cut first (the
+    // drain rule in graft.core.CacheRegistry)
     val profRows = profiles
       .select(col("lang").cast("string"), col("gram").cast("string"),
         col("rank").cast("int"))
-      .localCheckpoint()
+      .transform(graft.core.CacheRegistry.cut)
       .take(2000001)
     require(profRows.length <= 2000000,
       s"profile table too large to embed in the plan: >${profRows.length - 1} " +

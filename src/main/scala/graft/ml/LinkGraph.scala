@@ -155,18 +155,18 @@ object LinkGraph {
     val base = (100 - dampingPct) * one / 100
     // Materialize the loop INVARIANTS once and CUT each iteration's
     // lineage (the trainKmeansCentroids pattern): without the
-    // localCheckpoints, iteration k's plan re-derives the edge table and
+    // cuts, iteration k's plan re-derives the edge table and
     // every previous iteration from scratch — quadratic total work that
     // count()-consumed benchmarks silently hid (the r13 head() audit
     // measured the un-cut chain at 4× the honest linear cost). Values
     // are unchanged: fixed-point integer arithmetic, bit-reproducible at
     // any partition count.
     val e = edges.select(col(s"`$srcCol`").as("src"), col(s"`$dstCol`").as("dst"))
-      .distinct().localCheckpoint()
+      .distinct().transform(graft.core.CacheRegistry.cut)
     // Adaptive strategy switch (r19, the Dedup.clusters precedent): when
     // the distinct edge list is bounded, the fixed-point loop runs on
     // the driver over toLocalIterator — 5 iterations of join + groupBy +
-    // localCheckpoint on a tiny graph pay ~10 small jobs of pure
+    // cut on a tiny graph pay ~10 small jobs of pure
     // scheduling latency (measured ~1.3 s of q_pagerank's 1.4 s at
     // sf0.1, a 13-node graph). The arithmetic is the identical scaled-
     // integer div/% lattice, bit-reproducible on either path (spec'd in
@@ -176,7 +176,8 @@ object LinkGraph {
     if (e.count() <= driverEdgeLimit)
       return pageRankLocal(e, iterations, one, base, dampingPct)
     val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().localCheckpoint()
+      .union(e.select(col("dst").as("node"))).distinct()
+      .transform(graft.core.CacheRegistry.cut)
     val outDeg = e.groupBy("src").agg(count(lit(1)).as("out_deg"))
     val withDeg = e.join(outDeg, "src")
 
@@ -198,7 +199,7 @@ object LinkGraph {
           (lit(base) + coalesce(damped, lit(0L))).as("rank_scaled"))
       // node-sized frame: each round materializes |nodes| rows, the last
       // round stays lazy for the caller's plan to consume
-      ranks = if (i < iterations) next.localCheckpoint() else next
+      ranks = if (i < iterations) graft.core.CacheRegistry.cut(next) else next
     }
     ranks
   }

@@ -97,7 +97,7 @@ object NgramLm {
     // ADVICE r19): a model past MaxModelRows no longer throws, it scores
     // through the join plan that handled arbitrarily large models before
     // r19 (same values — the spec's kernel==composed battery is the
-    // proof), reusing the already-checkpointed projection.
+    // proof), reusing the already-cut projection.
     val fns = graft.functions.NgramLmFns
     scoreBounded(corpus, model, textCol, idCol, order, alpha, unicode,
       fns.MaxModelRows)
@@ -109,12 +109,15 @@ object NgramLm {
   private[graft] def scoreBounded(corpus: DataFrame, model: DataFrame,
       textCol: String, idCol: String, order: Int, alpha: Double,
       unicode: Boolean, cap: Int): DataFrame = {
-    val fns = graft.functions.NgramLmFns
-    val ck = fns.checkpointedModel(model)
+    // bounded drain, cut first (the drain rule in graft.core.CacheRegistry)
+    val ck = graft.core.CacheRegistry.cut(model.select(
+      col("lvl").cast("int"), col("gram").cast("string"), col("cnt").cast("long")))
     val rows = ck.take(cap + 1)
     if (rows.length > cap)
       return scoreComposed(corpus, ck, textCol, idCol, order, alpha, unicode)
-    val lm = fns.buildModelFromRows(rows, order)
+    // fast path: the model now lives on the driver, nothing reads the cut
+    graft.core.CacheRegistry.release(ck)
+    val lm = graft.functions.NgramLmFns.buildModelFromRows(rows, order)
     // registered for drain (unpersist, not destroy) — repeated score()
     // calls in a long-lived session no longer accumulate broadcast
     // blocks (r19 ADVICE)

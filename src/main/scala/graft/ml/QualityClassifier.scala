@@ -48,14 +48,13 @@ object QualityClassifier {
     *
     * One agg per epoch: rows → (error, exploded feature counts + bias
     * sentinel) → groupBy(bucket) partial-agg → ≤ buckets+1 decimal sums
-    * drained with the bounded-take contract. The labeled frame is
-    * localCheckpointed once so epochs re-scan materialized rows, not the
-    * source plan. */
+    * drained with the bounded-take contract. The labeled frame is cut
+    * once so epochs re-scan materialized rows, not the source plan. */
   def train(labeled: DataFrame, textCol: String, labelCol: String,
       logBuckets: Int = 12, bigrams: Boolean = true, epochs: Int = 20,
       lr: Double = 0.5, l2: Double = 0.0): QualityClfModel = {
     val base = featurize(labeled, textCol, labelCol, logBuckets, bigrams)
-      .localCheckpoint()
+      .transform(graft.core.CacheRegistry.cut)
     trainOnFeatures(base, logBuckets, bigrams, epochs, lr, l2)
   }
 
@@ -73,7 +72,7 @@ object QualityClassifier {
 
   /** The epoch loop over a pre-featurized (y, f) frame. Gradient sums
     * are decimal(38,18) — ORDER-INDEPENDENT, so any frame holding the
-    * same multiset of (y, f) rows (one localCheckpoint, a parquet store
+    * same multiset of (y, f) rows (one cut, a parquet store
     * re-read, any partitioning) trains to bit-identical weights. */
   private def trainOnFeatures(base: DataFrame, logBuckets: Int,
       bigrams: Boolean, epochs: Int, lr: Double, l2: Double): QualityClfModel = {
@@ -105,9 +104,8 @@ object QualityClassifier {
         .groupBy(col("fb.bucket").as("bucket"))
         .agg(sum((col("e") * col("fb.cnt")).cast("decimal(38,18)")).as("g"),
           sum(col("fb.cnt").cast("long")).as("n"))
-      // coalesce(1) before take (r20): bounded frame spread over the
-      // session's partitions — take's scale-up scan pays ~4 job floors
-      // PER TRAIN ITERATION without it (the Dsir.model drain fix)
+      // bounded drain over a shuffle output: coalesce(1) first (the
+      // drain rule in graft.core.CacheRegistry)
       val rows = grad.coalesce(1).take(buckets + 2)
       require(rows.length <= buckets + 1,
         "gradient returned more buckets than the model has — kernel drift")
@@ -165,9 +163,8 @@ object QualityClassifier {
           .as("f"))
       .filter(col("id").isNotNull && col("y").isNotNull && size(col("f")) > 0)
     // count + write must see the SAME frame while the store changes
-    // under the anti-join — the seen-store barrier (explodingMemo: a
-    // reliable DFS checkpoint when spark.sql.graft.checkpointDir is set)
-    val fresh = Dedup.explodingMemo(
+    // under the anti-join — the seen-store barrier
+    val fresh = graft.core.CacheRegistry.cut(
       graft.core.Stores.readParquetIfExists(spark, s"$storePath/rows")
         .map(st => fresh0.join(st.select("id"), Seq("id"), "left_anti"))
         .getOrElse(fresh0))
@@ -204,7 +201,7 @@ object QualityClassifier {
   def trainFromFeatureStore(spark: SparkSession, storePath: String,
       epochs: Int = 20, lr: Double = 0.5, l2: Double = 0.0): QualityClfModel = {
     val (logBuckets, bigrams) = readStoreMeta(spark, storePath)
-    // localCheckpoint, as train() does: epochs re-scan materialized
+    // cut, as train() does: epochs re-scan materialized
     // rows — not the store files, which a concurrent append could grow
     // MID-TRAIN (epochs would then disagree about the row multiset)
     val base = graft.core.Stores
@@ -214,7 +211,7 @@ object QualityClassifier {
           "has no rows yet — append a labeled increment first " +
           "(appendToFeatureStore)"))
       .select(col("y"), col("f"))
-      .localCheckpoint()
+      .transform(graft.core.CacheRegistry.cut)
     trainOnFeatures(base, logBuckets, bigrams, epochs, lr, l2)
   }
 

@@ -269,10 +269,10 @@ object Similarity {
         .groupBy("cell_id")
         .agg(array_sort(collect_list(struct(col("pos"), col("mean"))))
           .getField("mean").as("centroid"))
-        .localCheckpoint()
+        .transform(graft.core.CacheRegistry.cut)
     }
     // every consumer of `vecs` ran inside the loop (each round's cents is
-    // localCheckpoint'd, cutting its lineage from vecs) — owned persist,
+    // cut, losing its lineage to vecs) — owned persist,
     // freed on exit rather than left for a registry drain
     vecs.unpersist(blocking = false)
     cents
@@ -398,8 +398,8 @@ object Similarity {
       .join(idx.assigned.select("vec_id"), Seq("vec_id"), "left_anti")
       .filter(col("vec_id").isNotNull)
       // count + write must see the SAME rows (the store grows under the
-      // plan): localCheckpoint is the barrier, as in the seen-store append
-      .localCheckpoint(true)
+      // plan): the cut is the barrier, as in the seen-store append
+      .transform(graft.core.CacheRegistry.cut)
     val n = fresh.count()
     if (n > 0) fresh.write.mode("append").partitionBy("cell_id")
       .parquet(s"$path/assigned")
@@ -486,7 +486,7 @@ object Similarity {
     // cut lineage from the files the swap will delete — the new index
     // must be fully materialized (save) before any old file goes away
     val corpus = idx.assigned.select(col("vec_id"), col("cv"))
-      .localCheckpoint()
+      .transform(graft.core.CacheRegistry.cut)
     val cents = trainKmeansCentroids(corpus, "cv", "vec_id", k, iters)
     buildIvfIndex(corpus, "cv", "vec_id", k, Some(cents)).save(tmp.toString)
     finishSwap()
@@ -721,15 +721,14 @@ object Similarity {
     * (same fused shape as Dedup.dropDuplicatesHammingBy).
     *
     * The assignment memo is the EAGER RDD barrier
-    * ([[graft.ml.Dedup.explodingMemo]]) since r20, not a lazy persist:
-    * the self-join's two sides scan it concurrently (a lazy cache gets
-    * no hits there — each side computes the assignment before any fill
+    * ([[graft.core.CacheRegistry.cut]]), not a lazy persist: the
+    * self-join's two sides scan it concurrently (a lazy cache gets no
+    * hits there — each side computes the assignment before any fill
     * lands), and a persisted join input advertises true size, inviting
-    * AQE to coalesce the pair join's exchanges under a quadratic output
-    * (the hamming2x2 profile's 17 s → 100 s regression at 500k docs).
+    * AQE to coalesce the pair join's exchanges under a quadratic output.
     * The RDD barrier computes the assignment once and reports unknown
-    * stats. Fault-tolerance trade is the explodingMemo contract: fast
-    * localCheckpoint by default (a lost executor fails the job), or set
+    * stats. Fault tolerance is the cut's contract: fast localCheckpoint
+    * by default (a lost executor fails the job), or set
     * `spark.sql.graft.checkpointDir` for the cluster-reliable DFS
     * checkpoint with identical plan shape.
     *
@@ -748,15 +747,8 @@ object Similarity {
       numCells: Int = 16, threshold: Double = 0.95,
       centroids: Option[DataFrame] = None,
       maxCellSize: Long = 0L, dim: Int = 64): DataFrame = {
-    // explodingMemo, not a lazy persist (r20): the SELF-join's two sides
-    // scan `base` concurrently, so a lazy cache gets zero hits there
-    // (each side computes the assignment before any fill lands — the
-    // r20 tf/ann_recall measurement), and a persisted input advertises
-    // true size, inviting AQE to coalesce the pair join's exchanges
-    // under a quadratic output (the hamming2x2 profile, 17 s → 100 s at
-    // 500k docs). The eager RDD barrier computes the assignment ONCE
-    // and reports unknown stats — full parallelism for the pair stage.
-    val base = Dedup.explodingMemo(
+    // eager cut, not a lazy persist: see the scaladoc above
+    val base = graft.core.CacheRegistry.cut(
       buildIvfIndex(df, vecCol, idCol, numCells, centroids).assigned)
     val assigned =
       if (maxCellSize <= 0L) base.withColumn("sub", lit(0L))

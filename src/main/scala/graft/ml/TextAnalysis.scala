@@ -57,14 +57,9 @@ object TextAnalysis {
     // r19: one fused kernel pass (TextStatsFns.qualityScore) — the
     // composed form re-ran split() in each ratio leg via CollapseProject
     // and paid interpreted HOF eval in aggregate/filter; doubles are
-    // bit-identical (same ops, same order; spec'd in TextStatsFnsSpec).
-    // The composed twin stays below for the spec to pin against.
+    // bit-identical (same ops, same order; TextStatsFnsSpec pins it
+    // against the composed twin in test scope, graft.ReferenceTwins).
     graft.functions.TextStatsFns.qualityScore(text)
-
-  private[graft] def qualityScoreComposed(text: Column): Column =
-    distinctTokenRatio(text) * 0.5 +
-      (lit(1.0) - abs(meanWordLen(text) - 5.0) / 10.0) * 0.3 +
-      stopwordRatio(text) * 0.2
 
   /** Marker-token language ID: score each language by marker hits, take
     * the argmax (ties broken by the fixed language order). N-gram-free but
@@ -167,19 +162,6 @@ object TextAnalysis {
     * tokens. Native one-pass kernel (ShingleFns). */
   def ngramsAll(text: Column, n: Int, unicode: Boolean = false): Column =
     graft.functions.ShingleFns.ngramsAll(text, n, unicode)
-
-  /** The composed formulation ngramsAll used before the native kernel —
-    * kept as the executable SEMANTICS REFERENCE (ShingleFnsSpec diffs
-    * kernel vs this; shinglesComposed builds on it). Zipped shifted
-    * slices: positions past `size-n` concat a null tail element and are
-    * swept by array_compact. */
-  private[graft] def ngramsAllComposed(text: Column, n: Int): Column = {
-    val toks = tokens(text)
-    val shifted = (1 until n).map(k =>
-      slice(toks, lit(k + 1), greatest(size(toks) - k, lit(0))))
-    array_compact(shifted.foldLeft(toks)((acc, s) =>
-      zip_with(acc, s, (a, b) => concat(a, lit(" "), b))))
-  }
 
   /** Repetition scoring (the Gopher-rules family of quality signals):
     *   - top2_frac: characters covered by the most frequent word 2-gram,
@@ -550,8 +532,8 @@ object TextAnalysis {
       minAlphaFrac: Double = 0.8, minStopHits: Int = 2,
       drop: Boolean = false): DataFrame = {
     // r19: the whole rule lattice is ONE fused kernel pass
-    // (TextStatsFns.gopherRules) — the composed form below (kept as
-    // gopherRulesComposed for the equivalence spec) paid interpreted
+    // (TextStatsFns.gopherRules) — the composed form (kept in test scope
+    // as graft.ReferenceTwins.gopherRulesComposed) paid interpreted
     // filter/aggregate HOFs plus per-line/per-word regex Columns.
     // Identical metrics and booleans (TextStatsFnsSpec battery + the
     // unchanged oracle hashes); same output column order.
@@ -565,66 +547,6 @@ object TextAnalysis {
     val bound = df.withColumn("__graft_qr", g)
     val out = fields.foldLeft(bound)((d, f) =>
       d.withColumn(f, col(s"__graft_qr.$f"))).drop("__graft_qr")
-    if (drop) out.filter(col("keep")).select(df.columns.map(c => col(s"`$c`")): _*)
-    else out
-  }
-
-  private[graft] def gopherRulesComposed(df: DataFrame, textCol: String,
-      minWords: Int = 50, maxWords: Int = 100000,
-      minMeanWordLen: Double = 3.0, maxMeanWordLen: Double = 10.0,
-      maxSymbolRatio: Double = 0.1,
-      maxBulletFrac: Double = 0.9, maxEllipsisFrac: Double = 0.3,
-      minAlphaFrac: Double = 0.8, minStopHits: Int = 2,
-      drop: Boolean = false): DataFrame = {
-    val t = col(s"`$textCol`")
-    val words = col("__graft_qr_words")
-    val lines = col("__graft_qr_lines")
-    val nw = col("n_words")
-    val nl = size(lines)
-    val bound = df
-      .withColumn("__graft_qr_words", filter(tokens(t), w => length(w) > 0))
-      .withColumn("__graft_qr_lines", split(t, "\n", -1))
-      .withColumn("n_words", size(words))
-      .withColumn("stop_hits", size(array_intersect(
-        array_distinct(transform(words, w => lower(w))),
-        array(gopherStopwords.map(lit(_)): _*))))
-    // every ratio rule is in MULTIPLY form (count vs threshold × denom),
-    // never count/denom: (a) no division by an empty doc's zero word
-    // count — under ANSI mode, subexpression elimination in a fused
-    // Filter predicate evaluates shared subexpressions BEFORE the
-    // `nonEmpty &&` short-circuit, so a guarded division still throws
-    // DIVIDE_BY_ZERO (found live: a streaming drop-mode chain died on a
-    // page whose lines were all filtered); (b) exact — threshold × int
-    // is one correctly-rounded double op, where count/denom ROUNDS and
-    // can flip a knife-edge comparison
-    val sumLen = aggregate(words, lit(0L), (acc, w) => acc + length(w))
-    val symCnt = (size(split(t, "#", -1)) - 1) +
-      (size(split(t, """\.\.\.""", -1)) - 1)
-    val alphaCnt = size(filter(words, w => w.rlike("[A-Za-z]")))
-    val bulletCnt = size(filter(lines, l => ltrim(l).rlike("^[-*•]")))
-    val ellipsisCnt =
-      size(filter(lines, l => rtrim(l).rlike("""(\.\.\.|…)$""")))
-    val nonEmpty = nw > 0
-    val flagged = bound
-      .withColumn("rule_word_count", nw >= minWords && nw <= maxWords)
-      .withColumn("rule_mean_word_len", nonEmpty &&
-        sumLen.cast("double") >= lit(minMeanWordLen) * nw &&
-        sumLen.cast("double") <= lit(maxMeanWordLen) * nw)
-      .withColumn("rule_symbol_ratio", nonEmpty &&
-        symCnt.cast("double") < lit(maxSymbolRatio) * nw)
-      .withColumn("rule_alpha", nonEmpty &&
-        alphaCnt.cast("double") >= lit(minAlphaFrac) * nw)
-      .withColumn("rule_bullet",
-        bulletCnt.cast("double") < lit(maxBulletFrac) * nl)
-      .withColumn("rule_ellipsis",
-        ellipsisCnt.cast("double") < lit(maxEllipsisFrac) * nl)
-      .withColumn("rule_stopwords", col("stop_hits") >= minStopHits)
-      .withColumn("rule_no_brace", !t.contains("{"))
-      .withColumn("rule_no_lorem", !lower(t).contains("lorem ipsum"))
-    val ruleCols = flagged.columns.filter(_.startsWith("rule_"))
-    val keep = ruleCols.map(col).reduce(_ && _)
-    val out = flagged.withColumn("keep", keep)
-      .drop("__graft_qr_words", "__graft_qr_lines")
     if (drop) out.filter(col("keep")).select(df.columns.map(c => col(s"`$c`")): _*)
     else out
   }

@@ -30,6 +30,25 @@ class SourceGuardSpec extends AnyFunSuite {
       s"driver-side collect in main sources: ${offenders.mkString(", ")}")
   }
 
+  test("no eager barrier outside CacheRegistry") {
+    // every localCheckpoint/checkpoint goes through CacheRegistry.cut, so
+    // spark.sql.graft.checkpointDir covers every eager barrier. Comments
+    // do not count: scaladoc and comment lines are skipped and a trailing
+    // ` //` comment is cut (line-wise, so a "/*" glob inside a string
+    // cannot hide the code after it)
+    val call = """\.(localCheckpoint|checkpoint)\s*\(""".r
+    def code(text: String): Iterator[String] = text.linesIterator
+      .map(_.trim)
+      .filterNot(l => l.startsWith("//") || l.startsWith("/*") || l.startsWith("*"))
+      .map(_.replaceAll("""\s//.*$""", ""))
+    val offenders = mainSources.collect {
+      case (p, text) if !p.endsWith(Paths.get("core", "CacheRegistry.scala")) &&
+          code(text).exists(call.findFirstIn(_).isDefined) => p
+    }
+    assert(offenders.isEmpty,
+      s"eager barrier outside CacheRegistry.cut: ${offenders.mkString(", ")}")
+  }
+
   test("no NUL or other raw control bytes in main sources") {
     // a raw control byte makes git treat the file as binary (no diff or
     // review); escape sequences express the same value as text

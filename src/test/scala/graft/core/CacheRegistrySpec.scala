@@ -1,0 +1,124 @@
+package graft.core
+
+import graft.SparkSpec
+import graft.ml.{Dsir, IvfIndex, LangId, LinkGraph, Similarity}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions._
+
+/** `CacheRegistry.cut` is the one eager barrier: every operator that
+  * materializes goes through it, so `spark.sql.graft.checkpointDir`
+  * turns each of them into a reliable checkpoint that survives executor
+  * loss. */
+class CacheRegistrySpec extends SparkSpec {
+  import spark.implicits._
+
+  private val Key = "spark.sql.graft.checkpointDir"
+
+  private def countFiles(f: java.io.File): Int =
+    if (f.isFile) 1 else Option(f.listFiles).toSeq.flatten.map(countFiles).sum
+
+  /** Run `body` with the setting on; return its result and how many
+    * files it left under the EFFECTIVE checkpoint root. The JVM-shared
+    * SparkContext keeps whatever root the first reliable cut pinned (cut
+    * only sets it when unset), so growth is measured there, not under
+    * this call's directory. */
+  private def underCheckpointDir[T](body: => T): (T, Int) = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    def root() = new java.io.File(spark.sparkContext.getCheckpointDir
+      .map(u => new org.apache.hadoop.fs.Path(u).toUri.getPath)
+      .getOrElse(dir))
+    spark.conf.set(Key, dir)
+    try {
+      val before = countFiles(root())
+      val out = body
+      (out, countFiles(root()) - before)
+    } finally spark.conf.unset(Key)
+  }
+
+  /** Same rows with and without the setting, and the set run wrote
+    * reliable checkpoint files. */
+  private def assertCovered(what: String)(run: => Set[Row]): Unit = {
+    val unset = run
+    val (set, newFiles) = underCheckpointDir(run)
+    assert(set == unset, s"$what: rows differ under $Key")
+    assert(newFiles > 0, s"$what: no reliable checkpoint files under $Key")
+  }
+
+  test("LangId.annotate's profile drain honors checkpointDir") {
+    val train = Seq(
+      ("en", "the quick brown fox jumps over the lazy dog and the cat"),
+      ("de", "der schnelle braune fuchs springt über den faulen hund"))
+      .toDF("lang", "text")
+    val docs = Seq((0L, "the dog and the cat"), (1L, "der hund und die katze"))
+      .toDF("id", "text")
+    assertCovered("LangId.annotate") {
+      LangId.annotate(docs, "text", LangId.trainProfiles(train, "text", "lang"))
+        .collect().toSet
+    }
+  }
+
+  test("Dsir.ngramCountsWithTarget's shared count pass honors checkpointDir") {
+    val pool = (0 until 40).map(i => (i.toLong, s"w${i % 7} w${i % 5} w${i % 3}"))
+      .toDF("id", "text")
+    assertCovered("Dsir.ngramCountsWithTarget") {
+      val (t, r) = Dsir.ngramCountsWithTarget(pool, "text",
+        col("id") % 2 === 0, logBuckets = 8)
+      t.withColumn("side", lit("t")).unionByName(r.withColumn("side", lit("r")))
+        .collect().toSet
+    }
+  }
+
+  test("LinkGraph.pageRank's edge cut honors checkpointDir") {
+    val edges = Seq(("A", "B"), ("A", "C"), ("B", "C"), ("C", "A")).toDF("s", "d")
+    assertCovered("LinkGraph.pageRank") {
+      LinkGraph.pageRank(edges, "s", "d", iterations = 2).collect().toSet
+    }
+  }
+
+  test("Similarity.rebuildIvfIndex's corpus cut honors checkpointDir") {
+    val vecs = (0 until 60).map(i => (i.toLong,
+      Array.tabulate(8)(d => math.sin(i * 8 + d).toFloat))).toDF("vec_id", "embedding")
+    assertCovered("Similarity.rebuildIvfIndex") {
+      val dir = java.nio.file.Files.createTempDirectory("graft_ivf_cut").toString
+      Similarity.buildIvfIndex(vecs, "embedding", "vec_id", numCells = 4).save(dir)
+      val n = Similarity.rebuildIvfIndex(spark, dir, iters = 2)
+      IvfIndex.load(spark, dir).assigned.select("vec_id", "cell_id")
+        .collect().toSet + Row(-1L, n)
+    }
+  }
+
+  test("executor loss on a cut: fails without checkpointDir, same rows with it") {
+    // losing an executor loses the blocks it held; unpersisting the cut's
+    // RDD drops every block the same way
+    def loseBlocks(cut: DataFrame): Unit = cut.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = true)
+      case other => fail(s"a cut scans a LogicalRDD, got ${other.nodeName}")
+    }
+    val src = spark.range(0, 200, 1, 4).select((col("id") * 3).as("v"))
+    val expected = src.as[Long].collect().sorted.toSeq
+
+    val local = CacheRegistry.cut(src)
+    loseBlocks(local)
+    val err = intercept[Exception](local.as[Long].collect())
+    val msgs = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .map(e => String.valueOf(e.getMessage)).mkString("\n")
+    assert(msgs.contains("Checkpoint block") && msgs.contains("not found"), msgs)
+
+    val (rows, newFiles) = underCheckpointDir {
+      val reliable = CacheRegistry.cut(src)
+      loseBlocks(reliable)
+      reliable.as[Long].collect().sorted.toSeq
+    }
+    assert(rows == expected)
+    assert(newFiles > 0)
+  }
+
+  test("a cut is not registered for drain") {
+    CacheRegistry.drain()
+    val c = CacheRegistry.cut(spark.range(10).toDF("id"))
+    assert(CacheRegistry.size == 0)
+    CacheRegistry.drain()
+    assert(c.count() == 10, "a drain between queries must not free a cut")
+  }
+}

@@ -60,7 +60,7 @@ class ShingleFnsSpec extends SparkSpec {
     val df = battery.toDF("t")
     val rows = df.select(
       ShingleFns.md5TokenHashes($"t").as("k"),
-      graft.ml.Dedup.simhashTokenHashesComposed($"t").as("c")).collect()
+      graft.ReferenceTwins.simhashTokenHashesComposed($"t").as("c")).collect()
     for ((r, t) <- rows.zip(battery)) {
       val k = if (r.isNullAt(0)) null else r.getSeq[Long](0)
       val c = if (r.isNullAt(1)) null else r.getSeq[Long](1)
@@ -86,7 +86,7 @@ class ShingleFnsSpec extends SparkSpec {
       val df = battery.toDF("t")
       val rows = df.select(
         ShingleFns.shingles($"t", n).as("k"),
-        graft.ml.Dedup.shinglesComposed($"t", n).as("c")).collect()
+        graft.ReferenceTwins.shinglesComposed($"t", n).as("c")).collect()
       for ((r, t) <- rows.zip(battery)) {
         val k = if (r.isNullAt(0)) null else r.getSeq[String](0)
         val c = if (r.isNullAt(1)) null else r.getSeq[String](1)
@@ -98,7 +98,7 @@ class ShingleFnsSpec extends SparkSpec {
       val df = battery.toDF("t")
       val rows = df.select(
         ShingleFns.hashedShingles($"t", n).as("k"),
-        transform(graft.ml.Dedup.shinglesComposed($"t", n),
+        transform(graft.ReferenceTwins.shinglesComposed($"t", n),
           s => xxhash64(s)).as("c")).collect()
       for ((r, t) <- rows.zip(battery)) {
         val k = if (r.isNullAt(0)) null else r.getSeq[Long](0)
@@ -111,7 +111,7 @@ class ShingleFnsSpec extends SparkSpec {
       val df = battery.toDF("t")
       val rows = df.select(
         ShingleFns.ngramsAll($"t", n).as("k"),
-        graft.ml.TextAnalysis.ngramsAllComposed($"t", n).as("c")).collect()
+        graft.ReferenceTwins.ngramsAllComposed($"t", n).as("c")).collect()
       for ((r, t) <- rows.zip(battery)) {
         val k = if (r.isNullAt(0)) null else r.getSeq[String](0)
         val c = if (r.isNullAt(1)) null else r.getSeq[String](1)
@@ -123,7 +123,7 @@ class ShingleFnsSpec extends SparkSpec {
       val df = battery.toDF("t")
       val rows = df.select(
         ShingleFns.hashedNgramsAll($"t", n).as("k"),
-        transform(graft.ml.TextAnalysis.ngramsAllComposed($"t", n),
+        transform(graft.ReferenceTwins.ngramsAllComposed($"t", n),
           g => xxhash64(g)).as("c")).collect()
       for ((r, t) <- rows.zip(battery)) {
         val k = if (r.isNullAt(0)) null else r.getSeq[Long](0)

@@ -40,7 +40,7 @@ class TextStatsFnsSpec extends SparkSpec {
     val df = batteryDf
     val r = df.select(
       graft.ml.TextAnalysis.qualityScore($"t").as("k"),
-      graft.ml.TextAnalysis.qualityScoreComposed($"t").as("c")).collect()
+      graft.ReferenceTwins.qualityScoreComposed($"t").as("c")).collect()
     r.foreach { row =>
       assert(row.isNullAt(0) == row.isNullAt(1), row.toString)
       if (!row.isNullAt(0))
@@ -95,7 +95,7 @@ class TextStatsFnsSpec extends SparkSpec {
     val allStops = graft.ml.TextAnalysis.stopwords.map(_.toUpperCase).mkString(" ")
     val r = Seq(allStops).toDF("t").select(
       graft.ml.TextAnalysis.qualityScore($"t").as("k"),
-      graft.ml.TextAnalysis.qualityScoreComposed($"t").as("c")).head()
+      graft.ReferenceTwins.qualityScoreComposed($"t").as("c")).head()
     assert(r.getDouble(0) == r.getDouble(1))
   }
 
@@ -121,14 +121,14 @@ class TextStatsFnsSpec extends SparkSpec {
     for (minStop <- Seq(1, 2)) {
       val k = graft.ml.TextAnalysis.gopherRules(df, "t", minStopHits = minStop)
         .orderBy("doc_id").collect()
-      val c = graft.ml.TextAnalysis.gopherRulesComposed(df, "t", minStopHits = minStop)
+      val c = graft.ReferenceTwins.gopherRulesComposed(df, "t", minStopHits = minStop)
         .orderBy("doc_id").collect()
       assert(k.length == c.length)
       k.zip(c).foreach { case (a, b) => assert(a == b, s"$a vs $b") }
       // drop mode keeps the original schema and the same survivors
       val kd = graft.ml.TextAnalysis.gopherRules(df, "t",
         minStopHits = minStop, drop = true).orderBy("doc_id").collect()
-      val cd = graft.ml.TextAnalysis.gopherRulesComposed(df, "t",
+      val cd = graft.ReferenceTwins.gopherRulesComposed(df, "t",
         minStopHits = minStop, drop = true).orderBy("doc_id").collect()
       assert(kd.toSeq == cd.toSeq)
     }
@@ -139,7 +139,7 @@ class TextStatsFnsSpec extends SparkSpec {
       .mkString(" ")
     val df = Seq(allStops).toDF("t")
     val k = graft.ml.TextAnalysis.gopherRules(df, "t").select("stop_hits").head()
-    val c = graft.ml.TextAnalysis.gopherRulesComposed(df, "t").select("stop_hits").head()
+    val c = graft.ReferenceTwins.gopherRulesComposed(df, "t").select("stop_hits").head()
     assert(k == c && k.getInt(0) == graft.ml.TextAnalysis.gopherStopwords.size)
   }
 

@@ -37,7 +37,7 @@ class UrlFnsSpec extends SparkSpec {
     val df = battery.toDF("u")
     val rows = df.select(
       graft.functions.UrlFns.urlNormalize($"u").as("kernel"),
-      graft.ml.DatasetOps.normalizeUrlComposed($"u").as("composed")).collect()
+      graft.ReferenceTwins.normalizeUrlComposed($"u").as("composed")).collect()
     for ((r, u) <- rows.zip(battery)) {
       val k = if (r.isNullAt(0)) null else r.getString(0)
       val c = if (r.isNullAt(1)) null else r.getString(1)

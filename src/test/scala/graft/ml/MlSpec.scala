@@ -679,7 +679,7 @@ class MlSpec extends SparkSpec {
     // with the config set, the hamming fingerprint memo goes through
     // reliable checkpoint() — same survivors, checkpoint files on disk
     // (the cluster-scale alternative to localCheckpoint's lost-executor-
-    // kills-job trade; plan shape unchanged, see Dedup.explodingMemo)
+    // kills-job trade; plan shape unchanged, see CacheRegistry.cut)
     val df = Seq(
       (0L, "the quick brown fox jumps over the lazy dog again and again"),
       (1L, "the quick brown fox jumps over the lazy dog again and again!"),
@@ -692,7 +692,7 @@ class MlSpec extends SparkSpec {
     spark.conf.set("spark.sql.graft.checkpointDir", dir)
     try {
       // the JVM-shared SparkContext keeps whatever checkpoint root the
-      // FIRST explodingMemo call pinned (suite order isn't ours to pick):
+      // FIRST CacheRegistry.cut call pinned (suite order isn't ours to pick):
       // assert growth under the EFFECTIVE root, not under `dir`
       def countFiles(f: java.io.File): Int =
         if (f.isFile) 1 else Option(f.listFiles).toSeq.flatten.map(countFiles).sum

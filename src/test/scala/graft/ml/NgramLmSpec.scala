@@ -182,4 +182,18 @@ class NgramLmSpec extends SparkSpec {
     graft.core.CacheRegistry.drain()
     assert(graft.core.CacheRegistry.size == 0)
   }
+
+  test("fast-path score frees its cut model's blocks") {
+    // the drained model lives on the driver (a broadcast); nothing reads
+    // the cut frame again, so its blocks go at once instead of waiting
+    // for the frame to become unreachable
+    val model = NgramLm.train(refDf, "text", order = 3, minCount = 1)
+    val docs = Seq((1L, "a b c")).toDF("doc_id", "text")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val scored = NgramLm.score(docs, model, "text", "doc_id", order = 3)
+    val added = sc.getPersistentRDDs.keySet -- before
+    assert(added.isEmpty, s"score left persisted RDDs ${added.mkString(",")}")
+    assert(scored.count() == 1)
+  }
 }

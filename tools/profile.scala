@@ -134,8 +134,8 @@ if (want("url")) {
 
 if (want("shingle")) {
   val docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet").localCheckpoint()
-  // the pre-kernel slice-based HOF formulation (Dedup.shinglesComposed is
-  // private[graft]; this inline twin is only a cost reference - the
+  // the pre-kernel slice-based HOF formulation (ReferenceTwins.shinglesComposed is
+  // test-scoped; this inline twin is only a cost reference - the
   // value-equivalence spec lives in ShingleFnsSpec)
   def composed(text: Column, n: Int): Column = {
     val toks = split(text, "\\s+")
