@@ -98,21 +98,42 @@ object CacheRegistry {
     val ss = df.sparkSession
     ss.conf.getOption("spark.sql.graft.checkpointDir").filter(_.nonEmpty) match {
       case Some(dir) =>
-        val sc = ss.sparkContext
-        // setCheckpointDir appends a per-context UUID subdir; only set it
-        // when unset so repeated calls (and user-owned settings) stick
-        if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
+        pointCheckpointDir(ss.sparkContext, dir)
         df.checkpoint()
       case None => df.localCheckpoint()
     }
   }
 
-  /** Free a [[cut]]'s local-checkpoint blocks now. Only for a cut that
-    * nothing reads again: a later read of a released local cut fails
-    * ("Checkpoint block … not found"). A reliable cut keeps reading its
-    * checkpoint files. */
+  /** (setting, context checkpoint dir) that [[cut]] last applied. */
+  private var applied: Option[(String, String)] = None
+
+  /** Point the context's checkpoint dir at `dir` when it is unset, or
+    * when [[cut]] set it from a different value of the setting.
+    * setCheckpointDir appends a per-context UUID subdir, so the value is
+    * compared with what cut last applied, not with the context's dir. A
+    * dir the user set directly is never cut's, and it sticks. */
+  private def pointCheckpointDir(sc: org.apache.spark.SparkContext,
+      dir: String): Unit = synchronized {
+    val current = sc.getCheckpointDir
+    if (current.isEmpty || applied.exists { case (setting, ctxDir) =>
+        current.contains(ctxDir) && setting != dir }) {
+      sc.setCheckpointDir(dir)
+      applied = sc.getCheckpointDir.map(dir -> _)
+    }
+  }
+
+  /** Free a [[cut]] now: its local-checkpoint blocks, or a reliable
+    * cut's checkpoint files. Only for a cut that nothing reads again: a
+    * later read of a released cut fails. Cuts never released stay on
+    * disk for the context's lifetime unless
+    * `spark.cleaner.referenceTracking.cleanCheckpoints` is on. */
   def release(cut: DataFrame): Unit = cut.queryExecution.logical match {
-    case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+    case r: LogicalRDD =>
+      r.rdd.unpersist(blocking = false)
+      r.rdd.getCheckpointFile.foreach { f =>
+        val p = new org.apache.hadoop.fs.Path(f)
+        p.getFileSystem(r.rdd.sparkContext.hadoopConfiguration).delete(p, true)
+      }
     case _ => ()
   }
 

@@ -50,26 +50,10 @@ object NgramLmFns {
   private val WsUnicode = java.util.regex.Pattern.compile("\\s+",
     java.util.regex.Pattern.UNICODE_CHARACTER_CLASS)
 
-  /** Build the driver-side model from a (lvl, gram, cnt) frame: levels
-    * 1..order into per-level maps (duplicates summed), lvl-0 rows summed
-    * into N. Throws past [[MaxModelRows]] — callers that can degrade
-    * gracefully (NgramLm.score falls back to the composed join plan)
-    * drain themselves and fold with [[buildModelFromRows]] instead. */
-  def buildModel(model: org.apache.spark.sql.DataFrame, order: Int): LmModel = {
-    import org.apache.spark.sql.functions.col
-    val ck = graft.core.CacheRegistry.cut(model.select(
-      col("lvl").cast("int"), col("gram").cast("string"), col("cnt").cast("long")))
-    val rows = ck.take(MaxModelRows + 1)
-    require(rows.length <= MaxModelRows,
-      s"NgramLm model frame exceeds $MaxModelRows rows — not a bounded " +
-        "model-as-frame (train with a minCount, or raise the bound " +
-        "deliberately)")
-    graft.core.CacheRegistry.release(ck) // nothing reads the cut again
-    buildModelFromRows(rows, order)
-  }
-
-  /** The fold behind [[buildModel]], over already-drained
-    * (lvl:int, gram:string, cnt:long) rows. */
+  /** Build the driver-side model from drained (lvl:int, gram:string,
+    * cnt:long) rows ([[graft.ml.NgramLm.scoreBounded]] drains them):
+    * levels 1..order into per-level maps (duplicates summed), lvl-0 rows
+    * summed into N. */
   def buildModelFromRows(rows: Array[org.apache.spark.sql.Row],
       order: Int): LmModel = {
     val levels = Array.fill(order)(new java.util.HashMap[String, java.lang.Long]())

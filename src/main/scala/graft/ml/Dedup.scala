@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
+import graft.core.Stores
+
 /** Deduplication operators for large-scale training-data pipelines.
   *
   * Everything is built from codegen'd built-ins (array/lambda functions,
@@ -1093,7 +1095,7 @@ object Dedup {
     // Null keys (null/absent text) never leave the anti-join's left side
     // (null = null is null), so unfiltered they'd re-append one null row
     // EVERY run; they also can't match any future probe — drop them.
-    val deduped = readStoreOpt(spark, storePath, Some(schema))
+    val deduped = Stores.readParquetIfExists(spark, storePath, Some(schema))
       .map(s => fresh.join(s, Seq(keyCol), "left_anti"))
       .getOrElse(fresh)
       .filter(col(keyCol).isNotNull)
@@ -1104,34 +1106,19 @@ object Dedup {
     // contract. The sidecar updates re-read EXACTLY the appended rows
     // from the renamed files (never the plan again, whose anti-join
     // would see the grown store and return empty).
-    val (n, files) = graft.core.Stores.appendCountedFiles(deduped, storePath)
+    val (n, files) = Stores.appendCountedFiles(deduped, storePath)
     val newFps =
       if (files.nonEmpty) spark.read.schema(schema).parquet(files: _*)
       else deduped.limit(0)
     (n, newFps)
   }
 
-  /** Only a genuinely ABSENT store counts as empty — a transient read
-    * failure must propagate, or dedup would silently run against an empty
-    * set and leak every known duplicate (and an append would re-write
-    * every fingerprint). Existence is probed via the FS API, never by
-    * catching PATH_NOT_FOUND — see [[graft.core.Stores]]. A known
-    * `schema` skips the footer-inference job and is checked against one
-    * data file's footer instead. */
-  private[ml] def readStoreOpt(spark: org.apache.spark.sql.SparkSession,
-      storePath: String,
-      schema: Option[StructType] = None): Option[DataFrame] =
-    graft.core.Stores.readParquetIfExists(spark, storePath, schema)
-
   /** The exact seen store's row format ([[contentFingerprints]]). */
   private val seenSchema = StructType(Seq(StructField("fp", StringType)))
 
   private def readSeenStore(spark: org.apache.spark.sql.SparkSession,
       storePath: String): Option[DataFrame] =
-    readStoreOpt(spark, storePath, Some(seenSchema))
-
-  private def hadoopFs(spark: org.apache.spark.sql.SparkSession, path: String) =
-    graft.core.Stores.hadoopFs(spark, path)
+    Stores.readParquetIfExists(spark, storePath, Some(seenSchema))
 
   private def bloomPath(storePath: String) = s"$storePath/_bloom/bloom.bin"
 
@@ -1172,22 +1159,13 @@ object Dedup {
 
   private def writeBloomSidecar(spark: org.apache.spark.sql.SparkSession,
       storePath: String, rows: Long,
-      bf: org.apache.spark.util.sketch.BloomFilter): Unit = {
-    // write to a sibling then rename: the marker leads the filter bytes in
-    // one file, so an in-place write killed mid-filter would leave a VALID
-    // 8-byte marker over a truncated body — and the cheap marker-only
-    // validity check would then trust it forever (the full-deserialize
-    // check used to heal this by IOException). A crash now leaves either
-    // the old intact sidecar or a dangling .tmp nobody reads.
-    val fs = hadoopFs(spark, storePath)
-    val p = new org.apache.hadoop.fs.Path(bloomPath(storePath))
-    val tmp = new org.apache.hadoop.fs.Path(bloomPath(storePath) + ".tmp")
-    val out = new java.io.DataOutputStream(fs.create(tmp, true))
-    try { out.writeLong(rows); bf.writeTo(out) } finally out.close()
-    if (fs.exists(p)) fs.delete(p, false)
-    if (!fs.rename(tmp, p))
-      sys.error(s"writeBloomSidecar: rename failed for $tmp")
-  }
+      bf: org.apache.spark.util.sketch.BloomFilter): Unit =
+    // atomic: the marker leads the filter bytes, so a truncated body under
+    // a valid marker would pass the marker-only validity check forever
+    Stores.writeFileAtomic(spark,
+        new org.apache.hadoop.fs.Path(bloomPath(storePath)), ".tmp") { out =>
+      out.writeLong(rows); bf.writeTo(out)
+    }
 
   /** How many items a filter of this size holds at the target fpp —
     * inverted from the optimal-bits formula (bits = −n·ln p / ln²2), so
@@ -1247,7 +1225,7 @@ object Dedup {
       storePath: String): Option[Long] =
     try {
       val p = new org.apache.hadoop.fs.Path(bloomPath(storePath))
-      val f = hadoopFs(spark, storePath)
+      val f = Stores.hadoopFs(spark, storePath)
       if (!f.exists(p)) None
       else {
         val in = new java.io.DataInputStream(f.open(p))
@@ -1259,7 +1237,7 @@ object Dedup {
       storePath: String): Option[(Long, org.apache.spark.util.sketch.BloomFilter)] =
     try {
       val p = new org.apache.hadoop.fs.Path(bloomPath(storePath))
-      val f = hadoopFs(spark, storePath)
+      val f = Stores.hadoopFs(spark, storePath)
       if (!f.exists(p)) None
       else {
         val in = new java.io.DataInputStream(f.open(p))
@@ -1371,20 +1349,10 @@ object Dedup {
 
   // ---- store maintenance --------------------------------------------------
 
-  /** Data files of a seen store's compact level (excludes `_`-prefixed
-    * sidecars and hidden files) — the count a compaction policy gates on:
-    * every daily append adds a file set, and by day-300 reads are paying
-    * hundreds of parquet footers before any real work. */
+  /** [[graft.core.Stores.dataFiles]] under the name the benchmark calls. */
   def storeDataFiles(spark: org.apache.spark.sql.SparkSession,
-      storePath: String): Seq[org.apache.hadoop.fs.Path] = {
-    val fs = hadoopFs(spark, storePath)
-    val root = new org.apache.hadoop.fs.Path(storePath)
-    if (!fs.exists(root)) Nil
-    else fs.listStatus(root).toSeq
-      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith("."))
-      .map(_.getPath)
-  }
+      storePath: String): Seq[org.apache.hadoop.fs.Path] =
+    Stores.dataFiles(spark, storePath)
 
   /** Compact an EXACT seen store in place: rewrite the fingerprint rows
     * (distinct — a crashed append's double-write heals here) into at most
@@ -1392,13 +1360,8 @@ object Dedup {
     * max(1, N/2), see Planner) and force-rebuild the Bloom sidecar. The
     * rebuild takes its row count from the rewrite's own observation —
     * under the single-writer contract that IS the store's row count — so
-    * it pays no count job. Loss-free at every crash point: the new files
-    * land in the store BEFORE the old ones are deleted, and the
-    * in-between state is duplicate rows, which every reader already
-    * tolerates (dropSeen distincts, appendFps anti-joins, sidecar
-    * validity markers detect the row-count change and mark themselves
-    * stale). Single-writer, same contract as append. Returns the store's
-    * distinct row count. */
+    * it pays no count job. Crash contract: [[graft.core.Stores]]. Returns
+    * the store's distinct row count. */
   def compactSeenStore(spark: org.apache.spark.sql.SparkSession,
       storePath: String, targetFiles: Int = 32): Long =
     compactStore(spark, storePath, "fp", targetFiles, Some(seenSchema))(rows =>
@@ -1418,54 +1381,8 @@ object Dedup {
       storePath: String, keyCol: String, targetFiles: Int,
       schema: Option[StructType] = None)
       (refreshSidecars: Long => Unit): Long =
-    compactStoreWith(spark, storePath, targetFiles, schema)(
+    Stores.compact(spark, storePath, targetFiles, schema)(
       _.select(keyCol).distinct())(refreshSidecars)
-
-  /** The tmp+rename compaction contract with a caller-chosen rewrite
-    * (distinct for the key stores, groupBy-sum for the vocabulary
-    * store). Crash windows leave either the tmp dir (invisible to
-    * readers, cleaned next run) or duplicated rows (tolerated by every
-    * store's read semantics). A known `schema` reads the store without
-    * the footer-inference job ([[readStoreOpt]]); `refreshSidecars` gets
-    * the rewrite's row count. */
-  private[ml] def compactStoreWith(spark: org.apache.spark.sql.SparkSession,
-      storePath: String, targetFiles: Int,
-      schema: Option[StructType] = None)
-      (rewrite: DataFrame => DataFrame)(refreshSidecars: Long => Unit): Long =
-    readStoreOpt(spark, storePath, schema) match {
-      case None => 0L
-      case Some(s0) =>
-        val fs = hadoopFs(spark, storePath)
-        val root = new org.apache.hadoop.fs.Path(storePath)
-        val oldFiles = storeDataFiles(spark, storePath) // listed BEFORE the new files land
-        val tmp = new org.apache.hadoop.fs.Path(root, "_compact_tmp")
-        if (fs.exists(tmp)) fs.delete(tmp, true) // prior crashed compaction
-        // the returned row count rides the rewrite action (Observation)
-        // instead of a trailing read-back count job: under the stores'
-        // single-writer contract the rows written ARE the store's rows
-        // once the rename lands
-        val obs = org.apache.spark.sql.Observation()
-        rewrite(s0)
-          .observe(obs, count(lit(1)).as("n"))
-          .repartition(math.max(targetFiles, 1))
-          .write.mode("overwrite").parquet(tmp.toString)
-        // land new files under a unique prefix, THEN delete the old set —
-        // the only crash windows leave either the tmp dir (invisible to
-        // readers, cleaned next run) or duplicated rows (tolerated)
-        val tag = java.util.UUID.randomUUID().toString.take(8)
-        fs.listStatus(tmp).filter(st => st.isFile &&
-            st.getPath.getName.startsWith("part-"))
-          .foreach { st =>
-            if (!fs.rename(st.getPath,
-                new org.apache.hadoop.fs.Path(root, s"compact-$tag-${st.getPath.getName}")))
-              sys.error(s"compactStore: rename failed for ${st.getPath}")
-          }
-        fs.delete(tmp, true)
-        oldFiles.foreach(p => fs.delete(p, false))
-        val n = obs.get("n").asInstanceOf[Long]
-        refreshSidecars(n)
-        n
-    }
 
   /** Append NEW simhash fingerprints to a near-dup seen store AND keep
     * its banded sidecar current: the fresh sims' (band, chunk) rows are
@@ -1500,7 +1417,7 @@ object Dedup {
       storePath: String): Option[(Int, Int, Long)] =
     try {
       val p = new org.apache.hadoop.fs.Path(bandedMetaPath(storePath))
-      val f = hadoopFs(spark, storePath)
+      val f = Stores.hadoopFs(spark, storePath)
       if (!f.exists(p)) None
       else {
         val in = f.open(p)
@@ -1515,13 +1432,10 @@ object Dedup {
     } catch { case _: java.io.IOException => None }
 
   private def writeBandedMeta(spark: org.apache.spark.sql.SparkSession,
-      storePath: String, totalBits: Int, bands: Int, rows: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(bandedMetaPath(storePath))
-    val out = hadoopFs(spark, storePath).create(p, true)
-    try out.write(
-      s"""{"bits":$totalBits,"bands":$bands,"rows":$rows}""".getBytes("UTF-8"))
-    finally out.close()
-  }
+      storePath: String, totalBits: Int, bands: Int, rows: Long): Unit =
+    Stores.writeFileAtomic(spark,
+        new org.apache.hadoop.fs.Path(bandedMetaPath(storePath)), ".tmp")(
+      _.write(s"""{"bits":$totalBits,"bands":$bands,"rows":$rows}""".getBytes("UTF-8")))
 
   /** Keep the banded sidecar covering the compact store. Normal appends
     * add only the fresh sims' banded rows; an absent, stale, or
@@ -1533,7 +1447,7 @@ object Dedup {
   private def refreshBandedSidecar(spark: org.apache.spark.sql.SparkSession,
       storePath: String, newSims: DataFrame, nNew: Long,
       totalBits: Int, bands: Int, force: Boolean = false): Unit = {
-    val rows = readStoreOpt(spark, storePath).map(_.count()).getOrElse(0L)
+    val rows = Stores.readParquetIfExists(spark, storePath).map(_.count()).getOrElse(0L)
     if (rows == 0) return
     def write(sims: DataFrame, append: Boolean): Unit = {
       // directory-partition by BAND only (≤ `bands` dirs): per-(band,
@@ -1636,7 +1550,7 @@ object Dedup {
     require(bands > k, "need more bands than allowed bit flips (pigeonhole)")
     require(totalBits % bands == 0, "bands must divide the fingerprint width")
     val spark = df.sparkSession
-    readStoreOpt(spark, storePath) match {
+    Stores.readParquetIfExists(spark, storePath) match {
       case None => df
       case Some(compact) =>
         val rows = compact.count()

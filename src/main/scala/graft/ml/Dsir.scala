@@ -111,7 +111,7 @@ object Dsir {
   /** The merged bucket-count view of a counts store (partials summed;
     * empty frame with the Dsir schema for an absent store). */
   def countsFromStore(spark: SparkSession, storePath: String): DataFrame =
-    Dedup.readStoreOpt(spark, storePath)
+    graft.core.Stores.readParquetIfExists(spark, storePath)
       .map(_.groupBy(col("bucket").cast("int").as("bucket"))
         .agg(sum(col("cnt").cast("long")).as("cnt")))
       .getOrElse {
@@ -120,11 +120,11 @@ object Dsir {
       }
 
   /** Fold a counts store's accumulated partials into one summed row per
-    * bucket across `targetFiles` files. Idempotent; the seen-store
-    * compaction crash contract. */
+    * bucket across `targetFiles` files. Idempotent; crash contract:
+    * [[graft.core.Stores]]. */
   def compactCountsStore(spark: SparkSession, storePath: String,
       targetFiles: Int = 8): Long =
-    Dedup.compactStoreWith(spark, storePath, targetFiles)(
+    graft.core.Stores.compact(spark, storePath, targetFiles, None)(
       _.groupBy("bucket").agg(sum(col("cnt")).as("cnt")))(_ => ())
 
   /** Driver-side model from the two bounded count frames. Arrays are

@@ -75,7 +75,7 @@ object LinkGraph {
     * store. The store is SCANNED and aggregated, never joined raw. */
   def readHostGraphStore(spark: org.apache.spark.sql.SparkSession,
       storePath: String): DataFrame =
-    Dedup.readStoreOpt(spark, storePath)
+    graft.core.Stores.readParquetIfExists(spark, storePath)
       .map(_.groupBy("src_host", "dst_host").agg(sum("n_links").as("n_links")))
       .getOrElse {
         import spark.implicits._
@@ -83,10 +83,11 @@ object LinkGraph {
       }
 
   /** Fold a host-graph store's partials into one summed row per edge
-    * across `targetFiles` files. Idempotent; shared crash contract. */
+    * across `targetFiles` files. Idempotent; crash contract:
+    * [[graft.core.Stores]]. */
   def compactHostGraphStore(spark: org.apache.spark.sql.SparkSession,
       storePath: String, targetFiles: Int = 32): Long =
-    Dedup.compactStoreWith(spark, storePath, targetFiles)(
+    graft.core.Stores.compact(spark, storePath, targetFiles, None)(
       _.groupBy("src_host", "dst_host").agg(sum(col("n_links")).as("n_links")))(_ => ())
 
   /** Fixed-point PageRank over an edge list: returns (node, rank_scaled)

@@ -217,10 +217,8 @@ object QualityClassifier {
 
   private def checkStoreMeta(spark: SparkSession, storePath: String,
       logBuckets: Int, bigrams: Boolean): Unit = {
-    val fs = fs0(storePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val metaPath = new org.apache.hadoop.fs.Path(storePath, "_clf_store_meta")
-    if (fs.exists(metaPath)) {
+    if (graft.core.Stores.hadoopFs(spark, storePath).exists(metaPath)) {
       val (lb, bg) = readStoreMeta(spark, storePath)
       require(lb == logBuckets && bg == bigrams,
         s"QualityClassifier.appendToFeatureStore: store at $storePath " +
@@ -232,30 +230,17 @@ object QualityClassifier {
 
   private def writeStoreMetaIfAbsent(spark: SparkSession, storePath: String,
       logBuckets: Int, bigrams: Boolean): Unit = {
-    val fs = fs0(storePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val metaPath = new org.apache.hadoop.fs.Path(storePath, "_clf_store_meta")
-    if (!fs.exists(metaPath)) {
-      fs.mkdirs(fs0(storePath))
-      // tmp+rename (the store-sidecar idiom): a crash mid-write must
-      // leave either no meta or a complete one, never a truncated file
-      // later reads die parsing
-      val tmp = new org.apache.hadoop.fs.Path(storePath,
-        "_clf_store_meta.tmp-" + java.util.UUID.randomUUID().toString)
-      val out = fs.create(tmp, true)
-      try out.write(
-        s"""{"log_buckets":$logBuckets,"bigrams":$bigrams}""".getBytes("UTF-8"))
-      finally out.close()
-      require(fs.rename(tmp, metaPath),
-        s"QualityClassifier.appendToFeatureStore: could not commit " +
-          s"$metaPath")
-    }
+    // atomic: a truncated meta would fail every later read's parse
+    if (!graft.core.Stores.hadoopFs(spark, storePath).exists(metaPath))
+      graft.core.Stores.writeFileAtomic(spark, metaPath,
+          ".tmp-" + java.util.UUID.randomUUID().toString)(
+        _.write(s"""{"log_buckets":$logBuckets,"bigrams":$bigrams}""".getBytes("UTF-8")))
   }
 
   private def readStoreMeta(spark: SparkSession,
       storePath: String): (Int, Boolean) = {
-    val fs = fs0(storePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.core.Stores.hadoopFs(spark, storePath)
     val metaPath = new org.apache.hadoop.fs.Path(storePath, "_clf_store_meta")
     require(fs.exists(metaPath),
       s"QualityClassifier: no feature store at $storePath (missing " +
@@ -303,28 +288,23 @@ object QualityClassifier {
     else agg.getLong(0).toDouble / agg.getLong(1)
   }
 
-  /** Persist (tmp+rename like the seen stores): weights parquet rows
-    * (bucket, weight) + a `_clf_meta` JSON sidecar (logBuckets, bigrams,
-    * bias).
-    *
-    * Commit order (the IVF-rebuild swap contract — a crash must never
-    * lose BOTH generations): build complete under `<path>.tmp-<uuid>`,
-    * retire any current model to `<path>.old`, rename tmp in, delete
-    * old. A crash between the retire and the commit leaves old+tmp on
-    * disk; [[load]] restores `<path>.old` when the path is absent, and
-    * the next save sweeps stranded `.tmp-*` siblings. */
+  /** Persist: weights parquet rows (bucket, weight) + a `_clf_meta`
+    * JSON sidecar (logBuckets, bigrams, bias), built complete under
+    * `<path>.tmp-<uuid>` and swapped in with `<path>.old` as the retired
+    * generation ([[graft.core.Stores.swapDir]] holds the crash
+    * contract; [[load]] restores `<path>.old` when the path is absent).
+    * Each save first sweeps `.tmp-*` siblings stranded by crashed saves. */
   def save(spark: SparkSession, model: QualityClfModel, path: String): Unit = {
     import spark.implicits._
-    val fs = fs0(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // sweep stranded tmps from prior crashed saves (bounded: only this
-    // model's name prefix, never the whole parent)
-    val parent = fs0(path).getParent
-    if (parent != null && fs.exists(parent))
-      fs.listStatus(parent).map(_.getPath)
-        .filter(_.getName.startsWith(fs0(path).getName + ".tmp-"))
+    import graft.core.Stores
+    val fs = Stores.hadoopFs(spark, path)
+    // bounded sweep: only this model's name prefix, never the whole parent
+    val name = new org.apache.hadoop.fs.Path(path)
+    if (name.getParent != null && fs.exists(name.getParent))
+      fs.listStatus(name.getParent).map(_.getPath)
+        .filter(_.getName.startsWith(name.getName + ".tmp-"))
         .foreach(p => fs.delete(p, true))
-    val tmp = sibling(path, ".tmp-" + java.util.UUID.randomUUID().toString)
+    val tmp = Stores.sibling(path, ".tmp-" + java.util.UUID.randomUUID().toString)
     model.weights.zipWithIndex.map { case (w, b) => (b, w) }.toSeq
       .toDF("bucket", "weight")
       .repartition(1)
@@ -333,42 +313,14 @@ object QualityClassifier {
       String.format(java.util.Locale.ROOT, "%.17g", Double.box(model.bias))}}"""
     val out = fs.create(new org.apache.hadoop.fs.Path(tmp, "_clf_meta"), true)
     try out.write(meta.getBytes("UTF-8")) finally out.close()
-    val old = sibling(path, ".old")
-    // finish a previously crashed save FIRST (the load() recovery): if
-    // `.old` is the only surviving generation, restore it before the
-    // retire below — deleting it up front would leave a window where a
-    // rename failure loses BOTH generations
-    if (!fs.exists(fs0(path)) && fs.exists(old))
-      require(fs.rename(old, fs0(path)),
-        s"QualityClassifier.save: could not restore the retired model at $path")
-    if (fs.exists(fs0(path))) {
-      if (fs.exists(old)) fs.delete(old, true)
-      require(fs.rename(fs0(path), old),
-        s"QualityClassifier.save: could not retire the old model at $path")
-    }
-    if (!fs.rename(tmp, fs0(path))) {
-      // restore the previous generation before failing — the path must
-      // never be left empty by a failed save
-      if (fs.exists(old)) fs.rename(old, fs0(path))
-      sys.error(s"QualityClassifier.save: could not commit $path")
-    }
-    fs.delete(old, true)
+    Stores.swapDir(spark, path, tmp, Stores.sibling(path, ".old"))
   }
 
-  private def sibling(path: String, suffix: String): org.apache.hadoop.fs.Path =
-    graft.core.Stores.sibling(path, suffix)
-
-  private def fs0(p: String) = new org.apache.hadoop.fs.Path(p)
-
   def load(spark: SparkSession, path: String): QualityClfModel = {
-    val fs = fs0(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // finish a crashed save: the old model was retired but the new one
-    // never committed — restore the retired generation (the save that
-    // crashed never returned success, so serving the OLD model is the
-    // correct contract)
-    if (!fs.exists(fs0(path)) && fs.exists(sibling(path, ".old")))
-      require(fs.rename(sibling(path, ".old"), fs0(path)),
-        s"QualityClassifier.load: could not restore the retired model at $path")
+    val fs = graft.core.Stores.hadoopFs(spark, path)
+    // a save that crashed between retire and commit never returned
+    // success, so serving the retired (old) model is the correct contract
+    graft.core.Stores.restoreRetired(spark, path, graft.core.Stores.sibling(path, ".old"))
     val in = fs.open(new org.apache.hadoop.fs.Path(path, "_clf_meta"))
     val meta = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close()

@@ -412,40 +412,26 @@ object Similarity {
     * trips (appends assign against centroids trained before they
     * existed, so recall decays as drift grows; retraining re-centers).
     *
-    * Commit is ONE whole-directory swap (the r13 layout swapped
-    * assigned/centroids/_base_counts one rename at a time, and a crash
-    * BETWEEN renames left a root mixing new postings with old centroids
-    * that the next call mistook for healthy — searches then silently
-    * probed stale centroids until drift re-tripped): the new index
-    * builds completely under the SIBLING dir `<path>.rebuild_tmp`
-    * (readers of `path` never see it; completeness marker `_base_counts`
-    * is written last by save), then rename(path → `<path>.rebuild_old`),
-    * rename(tmp → path), delete(old). Components can no longer mix
-    * generations. Every crash window leaves exactly one recoverable
-    * state: a COMPLETE tmp (next call finishes the swap — never
-    * retrains), an INCOMPLETE tmp (cleaned, full retrain), or a
-    * retired-old/absent-root pair (old restored first). A concurrent
-    * load() during the two-rename window fails loudly on the absent
-    * root — the single-writer contract; loud beats silently-wrong.
+    * Commit is ONE whole-directory swap ([[graft.core.Stores.swapDir]],
+    * which holds the crash contract): the new index builds completely
+    * under the sibling `<path>.rebuild_tmp` (completeness marker
+    * `_base_counts` is written last by save), then swaps in with
+    * `<path>.rebuild_old` as the retired generation, so components never
+    * mix generations. A crashed rebuild leaves a COMPLETE tmp (the next
+    * call finishes the swap — never retrains), an INCOMPLETE tmp
+    * (cleaned, full retrain), or a retired-old/absent-root pair (old
+    * restored first).
     *
     * Returns the rebuilt index size. */
   def rebuildIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       iters: Int = 5): Long = {
+    import graft.core.Stores
     val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // siblings via the shared helper (trailing-slash-safe — see
-    // graft.core.Stores.sibling)
-    val tmp = graft.core.Stores.sibling(path, ".rebuild_tmp")
-    val old = graft.core.Stores.sibling(path, ".rebuild_old")
+    val fs = Stores.hadoopFs(spark, path)
+    val tmp = Stores.sibling(path, ".rebuild_tmp")
+    val old = Stores.sibling(path, ".rebuild_old")
     def finishSwap(): Long = {
-      if (fs.exists(root)) {
-        if (fs.exists(old)) fs.delete(old, true)
-        require(fs.rename(root, old),
-          s"rebuildIvfIndex: could not retire the old index at $path")
-      }
-      require(fs.rename(tmp, root),
-        s"rebuildIvfIndex: could not commit the rebuilt index into $path")
-      fs.delete(old, true)
+      Stores.swapDir(spark, path, tmp, old)
       IvfIndex.load(spark, path).assigned.count()
     }
     // recovery ladder (order matters): finish a complete crashed swap
@@ -457,9 +443,7 @@ object Similarity {
     }
     // crash after retiring old, before committing tmp (tmp incomplete or
     // lost): restore the retired generation — never train from nothing
-    if (!fs.exists(root) && fs.exists(old))
-      require(fs.rename(old, root),
-        s"rebuildIvfIndex: could not restore the retired index at $path")
+    Stores.restoreRetired(spark, path, old)
     // legacy (pre-sibling-tmp) in-root tmp: finish a complete-but-
     // unswapped one component-wise ONCE (the old commit path), then the
     // layout is current; anything else there is stale
@@ -467,12 +451,9 @@ object Similarity {
     if (fs.exists(legacy)) {
       if (fs.exists(new org.apache.hadoop.fs.Path(legacy, "_base_counts")) &&
           !fs.exists(new org.apache.hadoop.fs.Path(root, "assigned"))) {
-        Seq("assigned", "centroids", "_base_counts").foreach { c =>
-          val dst = new org.apache.hadoop.fs.Path(root, c)
-          if (fs.exists(dst)) fs.delete(dst, true)
-          require(fs.rename(new org.apache.hadoop.fs.Path(legacy, c), dst),
-            s"rebuildIvfIndex: could not finish legacy swap of $c into $path")
-        }
+        Seq("assigned", "centroids", "_base_counts").foreach(c =>
+          Stores.moveOver(spark, new org.apache.hadoop.fs.Path(legacy, c),
+            new org.apache.hadoop.fs.Path(root, c)))
         fs.delete(legacy, true)
         return IvfIndex.load(spark, path).assigned.count()
       }

@@ -693,7 +693,7 @@ object TextAnalysis {
     * token, partials summed. Empty frame for an absent store. */
   def readVocabStore(spark: org.apache.spark.sql.SparkSession,
       storePath: String): DataFrame =
-    Dedup.readStoreOpt(spark, storePath)
+    graft.core.Stores.readParquetIfExists(spark, storePath)
       .map(_.groupBy("token").agg(sum(col("cnt")).as("cnt")))
       .getOrElse {
         import spark.implicits._
@@ -715,11 +715,11 @@ object TextAnalysis {
   }
 
   /** Fold a vocabulary store's accumulated partials into one summed row
-    * per token across `targetFiles` files. Idempotent; same crash
-    * contract as the seen-store compactions. */
+    * per token across `targetFiles` files. Idempotent; crash contract:
+    * [[graft.core.Stores]]. */
   def compactVocabStore(spark: org.apache.spark.sql.SparkSession,
       storePath: String, targetFiles: Int = 32): Long =
-    Dedup.compactStoreWith(spark, storePath, targetFiles)(
+    graft.core.Stores.compact(spark, storePath, targetFiles, None)(
       _.groupBy("token").agg(sum(col("cnt")).as("cnt")))(_ => ())
 
   /** Inverted-index build: one row per (token, posting) with the token's

@@ -293,52 +293,16 @@ object AsOfJoin {
     * daily appends otherwise accumulate small files forever, and at
     * 100 TB the store scan's task count grows with file count, not
     * data. Also drops crash-duplicated rows (same keys + ts; by the
-    * append contract such rows are full duplicates).
-    *
-    * Crash safety mirrors the seen-store compactor (Dedup.compactStore):
-    * the rewrite lands in an invisible `_compact_tmp` dir, its files
-    * rename under a unique `compact-` prefix, THEN the old set is
-    * deleted. A crash leaves either the tmp dir (ignored by readers,
-    * cleaned next run) or old+new files together — duplicated rows,
-    * which as-of enrichment is insensitive to (the window's last() picks
-    * the same version) and the next compaction removes. Idempotent: a
-    * re-run compacts the compacted store to itself. Returns the row
-    * count after compaction. */
+    * append contract such rows are full duplicates), which as-of
+    * enrichment is insensitive to meanwhile (the window's last() picks
+    * the same version). Crash contract: [[graft.core.Stores]].
+    * Idempotent: a re-run compacts the compacted store to itself.
+    * Returns the row count after compaction. */
   def compactTemporalStore(spark: org.apache.spark.sql.SparkSession,
       storePath: String, keys: Seq[String], tsCol: String,
-      targetFiles: Int = 32): Long = {
-    val root = new org.apache.hadoop.fs.Path(storePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return 0L
-    val oldFiles = fs.listStatus(root).toSeq // listed BEFORE new files land
-      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith("."))
-      .map(_.getPath)
-    if (oldFiles.isEmpty) return 0L
-    val tmp = new org.apache.hadoop.fs.Path(root, "_compact_tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, true) // prior crashed compaction
-    // row count rides the rewrite action (Observation) — single-writer
-    // contract makes it the post-compaction store count, without the
-    // trailing read-back count job
-    val obs = org.apache.spark.sql.Observation()
-    spark.read.parquet(storePath)
-      .dropDuplicates(keys :+ tsCol)
-      .observe(obs, org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("n"))
-      .repartition(math.max(targetFiles, 1))
-      .write.mode("overwrite").parquet(tmp.toString)
-    val tag = java.util.UUID.randomUUID().toString.take(8)
-    fs.listStatus(tmp).filter(st => st.isFile &&
-        st.getPath.getName.startsWith("part-"))
-      .foreach { st =>
-        if (!fs.rename(st.getPath, new org.apache.hadoop.fs.Path(root,
-            s"compact-$tag-${st.getPath.getName}")))
-          sys.error(s"compactTemporalStore: rename failed for ${st.getPath}")
-      }
-    fs.delete(tmp, true)
-    oldFiles.foreach(p => fs.delete(p, false))
-    obs.get("n").asInstanceOf[Long]
-  }
+      targetFiles: Int = 32): Long =
+    graft.core.Stores.compact(spark, storePath, targetFiles, None)(
+      _.dropDuplicates(keys :+ tsCol))(_ => ())
 
   /** As-of enrich `left` against the accumulated store: for each left
     * row, the most recent stored version at-or-before `leftTs` per key.

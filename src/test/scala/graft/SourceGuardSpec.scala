@@ -19,6 +19,14 @@ class SourceGuardSpec extends AnyFunSuite {
       .toSeq
   }
 
+  // Code lines only: scaladoc and comment lines are skipped and a
+  // trailing ` //` comment is cut (line-wise, so a "/*" glob inside a
+  // string cannot hide the code after it)
+  private def code(text: String): Iterator[String] = text.linesIterator
+    .map(_.trim)
+    .filterNot(l => l.startsWith("//") || l.startsWith("/*") || l.startsWith("*"))
+    .map(_.replaceAll("""\s//.*$""", ""))
+
   test("no driver-side collect() in main sources") {
     // collect() pulls the whole distributed result into the driver — any
     // sink or operator doing it OOMs at real scale. toLocalIterator /
@@ -32,21 +40,29 @@ class SourceGuardSpec extends AnyFunSuite {
 
   test("no eager barrier outside CacheRegistry") {
     // every localCheckpoint/checkpoint goes through CacheRegistry.cut, so
-    // spark.sql.graft.checkpointDir covers every eager barrier. Comments
-    // do not count: scaladoc and comment lines are skipped and a trailing
-    // ` //` comment is cut (line-wise, so a "/*" glob inside a string
-    // cannot hide the code after it)
+    // spark.sql.graft.checkpointDir covers every eager barrier
     val call = """\.(localCheckpoint|checkpoint)\s*\(""".r
-    def code(text: String): Iterator[String] = text.linesIterator
-      .map(_.trim)
-      .filterNot(l => l.startsWith("//") || l.startsWith("/*") || l.startsWith("*"))
-      .map(_.replaceAll("""\s//.*$""", ""))
     val offenders = mainSources.collect {
       case (p, text) if !p.endsWith(Paths.get("core", "CacheRegistry.scala")) &&
           code(text).exists(call.findFirstIn(_).isDefined) => p
     }
     assert(offenders.isEmpty,
       s"eager barrier outside CacheRegistry.cut: ${offenders.mkString(", ")}")
+  }
+
+  test("no rename outside Stores") {
+    // every store append, compaction, directory swap and sidecar write
+    // commits through graft.core.Stores, which holds the crash contract.
+    // WarcReader's per-task-attempt part commit runs on executors and
+    // stays its own
+    val allowed = Set(Paths.get("core", "Stores.scala"),
+      Paths.get("sources", "WarcReader.scala"))
+    val offenders = mainSources.collect {
+      case (p, text) if !allowed.exists(p.endsWith) &&
+          code(text).exists(_.contains(".rename(")) => p
+    }
+    assert(offenders.isEmpty,
+      s"rename outside graft.core.Stores: ${offenders.mkString(", ")}")
   }
 
   test("no NUL or other raw control bytes in main sources") {

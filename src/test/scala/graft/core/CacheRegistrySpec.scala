@@ -1,7 +1,7 @@
 package graft.core
 
 import graft.SparkSpec
-import graft.ml.{Dsir, IvfIndex, LangId, LinkGraph, Similarity}
+import graft.ml.{Dsir, IvfIndex, LangId, LinkGraph, NgramLm, Similarity}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
@@ -18,21 +18,14 @@ class CacheRegistrySpec extends SparkSpec {
   private def countFiles(f: java.io.File): Int =
     if (f.isFile) 1 else Option(f.listFiles).toSeq.flatten.map(countFiles).sum
 
-  /** Run `body` with the setting on; return its result and how many
-    * files it left under the EFFECTIVE checkpoint root. The JVM-shared
-    * SparkContext keeps whatever root the first reliable cut pinned (cut
-    * only sets it when unset), so growth is measured there, not under
-    * this call's directory. */
+  /** Run `body` with the setting on a fresh directory; return its result
+    * and how many files it left there. */
   private def underCheckpointDir[T](body: => T): (T, Int) = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    def root() = new java.io.File(spark.sparkContext.getCheckpointDir
-      .map(u => new org.apache.hadoop.fs.Path(u).toUri.getPath)
-      .getOrElse(dir))
-    spark.conf.set(Key, dir)
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toFile
+    spark.conf.set(Key, dir.toString)
     try {
-      val before = countFiles(root())
       val out = body
-      (out, countFiles(root()) - before)
+      (out, countFiles(dir))
     } finally spark.conf.unset(Key)
   }
 
@@ -120,5 +113,46 @@ class CacheRegistrySpec extends SparkSpec {
     assert(CacheRegistry.size == 0)
     CacheRegistry.drain()
     assert(c.count() == 10, "a drain between queries must not free a cut")
+  }
+
+  test("a changed checkpointDir re-points the next reliable cut") {
+    val a = java.nio.file.Files.createTempDirectory("graft-ckpt-a").toFile
+    val b = java.nio.file.Files.createTempDirectory("graft-ckpt-b").toFile
+    try {
+      spark.conf.set(Key, a.toString)
+      assert(CacheRegistry.cut(spark.range(20).toDF("id")).count() == 20)
+      val underA = countFiles(a)
+      assert(underA > 0, s"the first cut wrote nothing under $a")
+      spark.conf.set(Key, b.toString)
+      assert(CacheRegistry.cut(spark.range(30).toDF("id")).count() == 30)
+      assert(countFiles(b) > 0, s"the second cut wrote nothing under $b")
+      assert(countFiles(a) == underA, s"the second cut still wrote under $a")
+    } finally spark.conf.unset(Key)
+  }
+
+  test("a checkpoint dir set on the context directly is kept") {
+    val sc = spark.sparkContext
+    val user = java.nio.file.Files.createTempDirectory("graft-ckpt-user").toFile
+    val conf = java.nio.file.Files.createTempDirectory("graft-ckpt-conf").toFile
+    sc.setCheckpointDir(user.toString)
+    spark.conf.set(Key, conf.toString)
+    try {
+      assert(CacheRegistry.cut(spark.range(10).toDF("id")).count() == 10)
+      assert(countFiles(user) > 0 && countFiles(conf) == 0)
+    } finally {
+      spark.conf.unset(Key)
+      sc.setCheckpointDir(null) // hand the context back unset
+    }
+  }
+
+  test("releasing a reliable cut deletes its checkpoint files") {
+    val model = NgramLm.train(Seq((0L, "a b c a b c a b d")).toDF("doc_id", "text"),
+      "text", order = 3, minCount = 1)
+    val docs = Seq((1L, "a b c")).toDF("doc_id", "text")
+    val (n, newFiles) = underCheckpointDir {
+      NgramLm.score(docs, model, "text", "doc_id", order = 3).count()
+    }
+    assert(n == 1)
+    assert(newFiles == 0, s"a fast-path score left $newFiles checkpoint files")
   }
 }

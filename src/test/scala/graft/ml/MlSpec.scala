@@ -691,21 +691,13 @@ class MlSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     spark.conf.set("spark.sql.graft.checkpointDir", dir)
     try {
-      // the JVM-shared SparkContext keeps whatever checkpoint root the
-      // FIRST CacheRegistry.cut call pinned (suite order isn't ours to pick):
-      // assert growth under the EFFECTIVE root, not under `dir`
       def countFiles(f: java.io.File): Int =
         if (f.isFile) 1 else Option(f.listFiles).toSeq.flatten.map(countFiles).sum
-      def effectiveRoot() = new java.io.File(
-        spark.sparkContext.getCheckpointDir
-          .map(u => new org.apache.hadoop.fs.Path(u).toUri.getPath)
-          .getOrElse(dir))
-      val before = countFiles(effectiveRoot())
       val got = Dedup.dropDuplicatesHamming64(df, "text", "id")
         .select("id").as[Long].collect().toSet
       assert(got == expected)
-      assert(countFiles(effectiveRoot()) > before,
-        s"no new reliable checkpoint files under ${effectiveRoot()}")
+      assert(countFiles(new java.io.File(dir)) > 0,
+        s"no reliable checkpoint files under $dir")
     } finally spark.conf.unset("spark.sql.graft.checkpointDir")
   }
 
