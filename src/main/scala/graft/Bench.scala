@@ -140,7 +140,8 @@ object Bench {
       def med[N: Ordering](f: JobCounts => N): N =
         xs.map(f).sorted.apply((xs.size - 1) / 2)
       JobCounts(med(_.jobs), med(_.stages), med(_.tasks), med(_.cpuNs),
-        med(_.shuffleReadBytes), med(_.shuffleWriteBytes))
+        med(_.shuffleReadBytes), med(_.shuffleWriteBytes),
+        med(_.memoryBytesSpilled), med(_.diskBytesSpilled))
     }
 
   /** Render the one driver-parsed JSON line. Pure so a spec can pin the

@@ -1,6 +1,9 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
@@ -10,22 +13,13 @@ import org.apache.spark.storage.StorageLevel
   * (SourceGuardSpec pins it), so `spark.sql.graft.checkpointDir` covers
   * every eager barrier.
   *
-  * **Bounded driver drains.** A drain is `take(cap + 1)`: one row
-  * past the cap proves the bounded-model contract violated without an
-  * unbounded driver pull. `take` scans incrementally (1, 4, 16, …
-  * partitions) and pays one job per step, so each drain puts one prefix
-  * in front of it that makes the take a single job:
-  *   - `coalesce(1)` when a shuffle sits directly below (a bounded
-  *     aggregate spread over the session's shuffle partitions): one task
-  *     reads every reducer output (Dsir.model, the QualityClassifier
-  *     gradient);
-  *   - otherwise `cut` first: with no shuffle below, `coalesce(1)` would
-  *     collapse the upstream scan into one task, while the cut computes
-  *     the plan once at full parallelism and the take steps read
-  *     materialized blocks (LangId profiles, the DatasetOps centroid
-  *     panel, the NgramLm model). A contract-violating input then
-  *     materializes on the executors before the cap trips; driver
-  *     memory stays bounded.
+  * **Bounded driver pulls.** Every bounded model (a profile table, a
+  * count frame, a gradient, an edge list, a merge list) leaves the
+  * executors through [[pull]], one job of one task that lets at most
+  * `cap + 1` rows out (SourceGuardSpec pins it). The one-task shape also
+  * bounds the driver in bytes: `spark.driver.maxResultSize` applies to
+  * that task's result, so an oversized pull fails on the executor,
+  * before the driver fetches it.
   *
   * Owned lifecycle for the corpus-sized persisted memos the dedup/ANN
   * family pins (joinBackOnce drop sets, hashed-shingle tables, semantic
@@ -135,6 +129,42 @@ object CacheRegistry {
         p.getFileSystem(r.rdd.sparkContext.hadoopConfiguration).delete(p, true)
       }
     case _ => ()
+  }
+
+  /** Drain a bounded frame to the driver: `read` gets its rows, lazily,
+    * and the result comes back as `Some`; a frame of more than `cap` rows
+    * gives `None`, after at most `cap + 1` rows left the executors. `read`
+    * sees the first `cap` rows before the overflow is known, and what it
+    * made of them is dropped, so `read` only gathers rows (an array, a
+    * streamed fold) and the caller builds its model from the `Some`. The
+    * pull is `coalesce(1).limit(cap + 1)`, one job of one task, behind a
+    * prefix chosen from `df`'s optimized plan (no job):
+    *   - none when an aggregate or a global limit (or a union of them)
+    *     sits below the top projections and filters, or the frame reads
+    *     a cut, a memo or a leaf scan: the one task reads the bounded
+    *     reducer outputs, the blocks or the files. A window is cut: its
+    *     reducers hold every input row of a partition, not just those the
+    *     filter above keeps;
+    *   - otherwise a [[cut]], so the plan runs once at full parallelism
+    *     instead of collapsing into the one task. */
+  def pull[A](df: DataFrame, cap: Long)(read: Iterator[Row] => A): Option[A] = {
+    val n = math.min(cap, Int.MaxValue - 1L).toInt
+    val all = (if (settled(df)) df else cut(df)).coalesce(1).limit(n + 1)
+      .toLocalIterator().asScala
+    val rows = all.take(n)
+    val a = read(rows)
+    rows.foreach(_ => ())
+    if (all.hasNext) None else Some(a)
+  }
+
+  /** Whether [[pull]] reads `df` without a cut in front (see there). */
+  private def settled(df: DataFrame): Boolean = {
+    def go(p: LogicalPlan): Boolean = p match {
+      case _: Project | _: Filter | _: Union => p.children.forall(go)
+      case _: Aggregate | _: GlobalLimit | _: LeafNode => true
+      case _ => false
+    }
+    go(df.queryExecution.optimizedPlan)
   }
 
   /** Register a hand-built Broadcast (kernel models: NgramLm's LmModel,

@@ -10,10 +10,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * columns into the scan, which is what keeps this viable at 100 TB.
   */
 object Tables {
-  val all: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     if (name == "events") loadEvents(spark, s"$sfDir/$name.parquet")
     else spark.read.parquet(s"$sfDir/$name.parquet")
@@ -49,9 +45,4 @@ object Tables {
         else df.withColumn("ts", col("ts").cast("timestamp"))
     }
   }
-
-  /** Register every table as a temp view so `spark.sql` mirrors the
-    * DuckDB oracle's view of the world. */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    all.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
 }

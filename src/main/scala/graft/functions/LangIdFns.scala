@@ -51,8 +51,6 @@ final case class LangIdModel(langs: Seq[(String, Map[String, Int])],
       t
     }.toArray
 
-  def nLangs: Int = langs.size
-
   /** struct(lang, distance) of the best language, or null when the text
     * has no trigrams. Called from generated code. */
   def bestKernel(text: UTF8String): InternalRow = {

@@ -42,8 +42,8 @@ object NgramLmFns {
 
   /** Drain bound for the broadcast model — the model-as-frame contract
     * keeps it at vocabulary scale (the 100× stress corpus trains 28k
-    * rows); one row past the cap proves a violation without an unbounded
-    * driver materialization (the drain rule in graft.core.CacheRegistry). */
+    * rows); a larger model is refused by its one bounded
+    * [[graft.core.CacheRegistry.pull]] and scores through the join plan. */
   val MaxModelRows = 4000000
 
   private val Ws = java.util.regex.Pattern.compile("\\s+")

@@ -1,7 +1,5 @@
 package graft.ml
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -36,22 +34,24 @@ import graft.functions.{BpeCodec, BpeFns}
   * symbols), not O(merges × vocabulary). */
 object Bpe {
 
+  /** Largest word table or merge list held on the driver. */
+  private val MaxDriverRows = 2000000
+
   /** Learn a merge list from a (token, cnt) word-frequency frame.
     * @return merges in rank order (rank = position). */
   def trainFromCounts(counts: DataFrame, numMerges: Int,
       maxWords: Int = 50000, minFrequency: Long = 2L): Seq[(String, String)] = {
     require(numMerges >= 0, s"Bpe.train: numMerges must be >= 0, got $numMerges")
-    require(maxWords > 0 && maxWords <= 2000000,
+    require(maxWords > 0 && maxWords <= MaxDriverRows,
       s"Bpe.train: maxWords must be in (0, 2e6] (driver-side table), got $maxWords")
-    // bounded driver materialization: top-maxWords by count is
-    // TakeOrderedAndProject (per-task top-N merged on the driver — the
-    // vocabulary never lands on one node even when the corpus is 100 TB);
-    // drained via toLocalIterator like every other bounded driver pull
-    val top = counts.groupBy("token").agg(sum(col("cnt")).as("cnt"))
-      .filter(col("token").isNotNull && length(col("token")) > 0)
-      .orderBy(col("cnt").desc, col("token"))
-      .limit(maxWords)
-      .toLocalIterator().asScala.toArray
+    // top-maxWords by count is TakeOrderedAndProject (per-task top-N
+    // merged in one task — the vocabulary never lands on one node even
+    // when the corpus is 100 TB); the limit bounds the pull
+    val top = graft.core.CacheRegistry.pull(
+      counts.groupBy("token").agg(sum(col("cnt")).as("cnt"))
+        .filter(col("token").isNotNull && length(col("token")) > 0)
+        .orderBy(col("cnt").desc, col("token"))
+        .limit(maxWords), maxWords)(_.toArray).get
 
     // mutable word symbol sequences + frequency
     val words = top.map(r => toSyms(r.getString(0)))
@@ -162,12 +162,13 @@ object Bpe {
       .coalesce(1).write.mode("overwrite").parquet(path)
   }
 
-  /** Load a merge list saved by [[saveModel]] (bounded drain: the model
-    * is numMerges rows by construction). */
+  /** Load a merge list saved by [[saveModel]]: one bounded pull, sorted
+    * by rank on the driver. */
   def loadModel(spark: SparkSession, path: String): Seq[(String, String)] =
-    spark.read.parquet(path).orderBy("rank")
-      .select("l", "r").toLocalIterator().asScala
-      .map(r => (r.getString(0), r.getString(1))).toSeq
+    graft.core.CacheRegistry.pull(spark.read.parquet(path)
+        .select(col("rank").cast("long"), col("l"), col("r")), MaxDriverRows)(_.toArray)
+      .getOrElse(sys.error(s"Bpe.loadModel: more than $MaxDriverRows merges at $path"))
+      .sortBy(_.getLong(0)).toSeq.map(r => (r.getString(1), r.getString(2)))
 
   // ---- application --------------------------------------------------------
 

@@ -642,17 +642,12 @@ object DatasetOps {
     require(!df.columns.contains("cluster_id"),
       "balanceByCluster emits 'cluster_id' but the input already has it — " +
         "rename or drop the existing column first")
-    // bounded drain of the centroid panel, cut first: the panel may be a
-    // raw filtered scan with no shuffle below (the drain rule in
-    // graft.core.CacheRegistry)
-    val rows = centroids
-      .select(col("cell_id").cast("long"), col("centroid").cast("array<double>"))
-      .transform(graft.core.CacheRegistry.cut)
-      .take(4097)
-    require(rows.nonEmpty, "balanceByCluster: empty centroid panel")
-    require(rows.length <= 4096,
+    val rows = graft.core.CacheRegistry.pull(centroids.select(
+      col("cell_id").cast("long"), col("centroid").cast("array<double>")),
+      4096)(_.toArray).getOrElse(throw new IllegalArgumentException(
       "balanceByCluster: more than 4096 centroids is too many to embed " +
-        "as plan literals — assign with buildIvfIndex/ivfSearch instead")
+        "as plan literals — assign with buildIvfIndex/ivfSearch instead"))
+    require(rows.nonEmpty, "balanceByCluster: empty centroid panel")
     // validate the panel before building plan literals: a NULL row would
     // NPE in the norm fold below, and a duplicate cell_id would silently
     // hand one cluster two quota slots

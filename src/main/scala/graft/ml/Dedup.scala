@@ -1,8 +1,6 @@
 package graft.ml
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -68,15 +66,6 @@ object Dedup {
   def fingerprint(df: DataFrame, textCol: String, idCol: String): DataFrame =
     df.groupBy(fingerprintCol(col(textCol)).as("fingerprint"))
       .agg(min(col(idCol)).as("rep_id"), count(lit(1)).as("cnt"))
-
-  /** MinHash signature: k independent permutations approximated by k seeded
-    * re-hashes of the 64-bit shingle hashes; sig_i = min over shingles of
-    * xxhash64(shingleHash, i). The string is hashed to a long ONCE; the k
-    * permutations only touch 8-byte longs, so total cost is
-    * O(|shingles| * (strlen + k)) not O(|shingles| * k * strlen). */
-  def minhashSignature(shingleHashes: Column, numHashes: Int): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)),
-      seed => array_min(transform(shingleHashes, h => xxhash64(h, seed))))
 
   /** LSH candidate generation + exact-jaccard verification.
     *
@@ -692,11 +681,11 @@ object Dedup {
     *
     * Adaptive: when the (already-thresholded, tiny-schema) edge list fits
     * under `driverEdgeLimit`, connectivity runs as a driver union-find
-    * over `toLocalIterator` — graph connectivity on a few thousand edges
-    * should not pay per-round shuffle fixed costs. The distributed loop
-    * is the ≥limit path; same AQE-style size-based strategy switch as a
-    * broadcast-join decision, and the iterator keeps driver memory
-    * bounded by the checked count. */
+    * over one [[graft.core.CacheRegistry.pull]] — graph connectivity on a
+    * few thousand edges should not pay per-round shuffle fixed costs. The
+    * distributed loop is the over-limit path; same AQE-style size-based
+    * strategy switch as a broadcast-join decision, and the pull keeps
+    * driver memory bounded by the limit. */
   def clusters(pairs: DataFrame, maxIters: Int = 20,
       driverEdgeLimit: Long = 1000000L): DataFrame = {
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
@@ -706,39 +695,39 @@ object Dedup {
     // union-find iterates it; the distributed loop's surviving labels are
     // cut, losing their lineage to it) — so its persist is owned here,
     // not registry-drained: unpersist on every exit.
-    if (edges.count() <= driverEdgeLimit)
-      try return clustersLocal(edges) finally edges.unpersist(blocking = false)
-    // seed with min(id, min neighbor): round one of propagation happens
-    // inside the initial aggregation
-    var labels = edges.groupBy("src").agg(min("dst").as("__mn"))
-      .select(col("src").as("id"), least(col("src"), col("__mn")).as("rep"))
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIters) {
-      val nbr = edges.join(labels, edges("dst") === labels("id"))
-        .select(edges("src").as("id"), col("rep"))
-      val updated = labels.select("id", "rep").union(nbr)
-        .groupBy("id").agg(min("rep").as("rep"))
-        .transform(graft.core.CacheRegistry.cut)
-      val changed = updated.as("n").join(labels.as("o"), "id")
-        .filter(col("n.rep") =!= col("o.rep")).limit(1).count()
-      labels = updated
-      converged = changed == 0
-      i += 1
-    }
-    edges.unpersist(blocking = false)
-    if (!converged) throw new IllegalStateException(
-      s"clusters: label propagation did not converge within $maxIters " +
-        "iterations — the pair graph's diameter exceeds maxIters and some " +
-        "ids still carry non-minimal representatives. Raise maxIters.")
-    labels
+    try {
+      val local = graft.core.CacheRegistry.pull(edges, driverEdgeLimit)(_.toArray)
+      if (local.isDefined) return clustersLocal(edges, local.get)
+      // seed with min(id, min neighbor): round one of propagation happens
+      // inside the initial aggregation
+      var labels = edges.groupBy("src").agg(min("dst").as("__mn"))
+        .select(col("src").as("id"), least(col("src"), col("__mn")).as("rep"))
+      var converged = false
+      var i = 0
+      while (!converged && i < maxIters) {
+        val nbr = edges.join(labels, edges("dst") === labels("id"))
+          .select(edges("src").as("id"), col("rep"))
+        val updated = labels.select("id", "rep").union(nbr)
+          .groupBy("id").agg(min("rep").as("rep"))
+          .transform(graft.core.CacheRegistry.cut)
+        val changed = updated.as("n").join(labels.as("o"), "id")
+          .filter(col("n.rep") =!= col("o.rep")).limit(1).count()
+        labels = updated
+        converged = changed == 0
+        i += 1
+      }
+      if (!converged) throw new IllegalStateException(
+        s"clusters: label propagation did not converge within $maxIters " +
+          "iterations — the pair graph's diameter exceeds maxIters and some " +
+          "ids still carry non-minimal representatives. Raise maxIters.")
+      labels
+    } finally edges.unpersist(blocking = false)
   }
 
   /** Driver union-find over a bounded edge list (see `clusters`): path-
     * halving find, min-id representative per component, result re-
     * parallelized with the same (id, rep) schema as the distributed path. */
-  private def clustersLocal(edges: DataFrame): DataFrame = {
-    import org.apache.spark.sql.Row
+  private def clustersLocal(edges: DataFrame, rows: Array[Row]): DataFrame = {
     import org.apache.spark.sql.types._
     val spark = edges.sparkSession
     val idType = edges.schema.head.dataType
@@ -762,14 +751,7 @@ object Dedup {
       while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
       r
     }
-    // coalesce(1): toLocalIterator launches ONE JOB PER PARTITION, and a
-    // few-hundred-row edge list spread over 32 shuffle partitions pays
-    // ~25 ms scheduling per partition — 0.8 s of fixed cost measured at
-    // sf0.1. One narrow coalesce reads the cached blocks in one task;
-    // driver memory stays bounded by driverEdgeLimit either way.
-    val it = edges.coalesce(1).toLocalIterator()
-    while (it.hasNext) {
-      val row = it.next()
+    rows.foreach { row =>
       val s = row.get(0); val d = row.get(1)
       if (!parent.contains(s)) parent(s) = s
       if (!parent.contains(d)) parent(d) = d
@@ -781,9 +763,9 @@ object Dedup {
       val r = find(x)
       if (!minOfRoot.contains(r) || lt(x, minOfRoot(r))) minOfRoot(r) = x
     }
-    val rows = parent.keysIterator.map(x => Row(x, minOfRoot(find(x)))).toSeq
+    val reps = parent.keysIterator.map(x => Row(x, minOfRoot(find(x)))).toSeq
     spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, math.max(1, rows.length / 500000)),
+      spark.sparkContext.parallelize(reps, math.max(1, reps.length / 500000)),
       StructType(Seq(StructField("id", idType), StructField("rep", idType))))
   }
 
@@ -1202,16 +1184,12 @@ object Dedup {
           if nNew > 0 && covered == rows - nNew && nNew <= incrMax =>
         loadBloomSidecar(spark, storePath) match {
           case Some((c2, bf)) if c2 == covered && rows <= bloomCapacity(bf, fpp) =>
-            // bounded drain (nNew ≤ incrMax) off the just-appended files,
-            // streamed — never a whole-frame collect. coalesce(1): a
-            // toLocalIterator launches ONE JOB PER PARTITION (the
-            // LinkGraph driver loop learned this the hard way), and the
-            // hash projection is cheap enough that one task beats n
-            // scheduling floors.
-            newFps.select(xxhash64(col("fp")).as("h"))
-              .coalesce(1).toLocalIterator().asScala
-              .foreach(r => bf.putLong(r.getLong(0)))
-            writeBloomSidecar(spark, storePath, rows, bf)
+            // the nNew ≤ incrMax just-appended rows, streamed into the filter
+            val folded = graft.core.CacheRegistry.pull(
+              newFps.select(xxhash64(col("fp"))), nNew)(
+              _.foreach(r => bf.putLong(r.getLong(0))))
+            if (folded.isDefined) writeBloomSidecar(spark, storePath, rows, bf)
+            else refreshBloomSidecar(spark, storePath)
           case _ => refreshBloomSidecar(spark, storePath)
         }
       case _ => refreshBloomSidecar(spark, storePath)

@@ -136,13 +136,11 @@ object Dsir {
       logBuckets: Int = 12, bigrams: Boolean = true): DsirModel = {
     val b = 1 << logBuckets
     def drain(counts: DataFrame, which: String): (Array[Long], Long) = {
-      // bounded drain over a shuffle output: coalesce(1) first (the
-      // drain rule in graft.core.CacheRegistry)
-      val rows = counts.select(col("bucket").cast("int"),
-        col("cnt").cast("long")).coalesce(1).take(b + 2)
-      require(rows.length <= b + 1,
-        s"Dsir.model: $which count frame has more than 2^$logBuckets+1 " +
-          "buckets — built with a different logBuckets?")
+      val rows = graft.core.CacheRegistry.pull(counts.select(
+        col("bucket").cast("int"), col("cnt").cast("long")), b + 1)(_.toArray)
+        .getOrElse(throw new IllegalArgumentException(
+          s"Dsir.model: $which count frame has more than 2^$logBuckets+1 " +
+            "buckets — built with a different logBuckets?"))
       val c = new Array[Long](b)
       var total = -1L
       rows.foreach { r =>

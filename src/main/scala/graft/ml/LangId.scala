@@ -77,16 +77,12 @@ object LangId {
         s"LangId.annotate emits '$c' but the input already has it — " +
           "rename or drop the existing column first")
     }
-    // bounded drain of ≤ |langs| × topK profile rows, cut first (the
-    // drain rule in graft.core.CacheRegistry)
-    val profRows = profiles
+    // ≤ |langs| × topK profile rows
+    val profRows = graft.core.CacheRegistry.pull(profiles
       .select(col("lang").cast("string"), col("gram").cast("string"),
-        col("rank").cast("int"))
-      .transform(graft.core.CacheRegistry.cut)
-      .take(2000001)
-    require(profRows.length <= 2000000,
-      s"profile table too large to embed in the plan: >${profRows.length - 1} " +
-        "rows (expected <= |langs| * topK)")
+        col("rank").cast("int")), 2000000)(_.toArray).getOrElse(
+      throw new IllegalArgumentException("profile table too large to embed " +
+        "in the plan: >2000000 rows (expected <= |langs| * topK)"))
     val byLang: Seq[(String, Map[String, Int])] = profRows
       .groupBy(_.getString(0))
       .map { case (l, rs) =>

@@ -1,6 +1,6 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Crawl link-graph analysis: outlink extraction → host-level graph →
@@ -166,16 +166,16 @@ object LinkGraph {
       .distinct().transform(graft.core.CacheRegistry.cut)
     // Adaptive strategy switch (r19, the Dedup.clusters precedent): when
     // the distinct edge list is bounded, the fixed-point loop runs on
-    // the driver over toLocalIterator — 5 iterations of join + groupBy +
-    // cut on a tiny graph pay ~10 small jobs of pure
+    // the driver over one CacheRegistry.pull — 5 iterations of join +
+    // groupBy + cut on a tiny graph pay ~10 small jobs of pure
     // scheduling latency (measured ~1.3 s of q_pagerank's 1.4 s at
     // sf0.1, a 13-node graph). The arithmetic is the identical scaled-
     // integer div/% lattice, bit-reproducible on either path (spec'd in
-    // LinkGraphSpec both ways); the ≥limit path is byte-identical to the
-    // pre-r19 distributed loop. The count reads the already-materialized
-    // checkpoint — one metadata-cheap job.
-    if (e.count() <= driverEdgeLimit)
-      return pageRankLocal(e, iterations, one, base, dampingPct)
+    // LinkGraphSpec both ways); the over-limit path is byte-identical to
+    // the pre-r19 distributed loop.
+    val local = graft.core.CacheRegistry.pull(e, driverEdgeLimit)(_.toArray)
+    if (local.isDefined)
+      return pageRankLocal(e, local.get, iterations, one, base, dampingPct)
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
       .transform(graft.core.CacheRegistry.cut)
@@ -215,22 +215,13 @@ object LinkGraph {
     * Scala `/`/`%` equal Spark's integral `div`/`%`. Result is
     * re-parallelized with the distributed path's (node, rank_scaled)
     * schema. */
-  private def pageRankLocal(e: DataFrame, iterations: Int, one: Long,
-      base: Long, dampingPct: Int): DataFrame = {
-    import org.apache.spark.sql.Row
+  private def pageRankLocal(e: DataFrame, edgeRows: Array[Row], iterations: Int,
+      one: Long, base: Long, dampingPct: Int): DataFrame = {
     import org.apache.spark.sql.types._
     val spark = e.sparkSession
     val idType = e.schema.head.dataType
-    val src = scala.collection.mutable.ArrayBuffer.empty[Any]
-    val dst = scala.collection.mutable.ArrayBuffer.empty[Any]
-    // coalesce(1): one job, not one per shuffle partition (the
-    // clustersLocal lesson); memory bounded by driverEdgeLimit
-    val it = e.coalesce(1).toLocalIterator()
-    while (it.hasNext) {
-      val row = it.next()
-      src += row.get(0)
-      dst += row.get(1)
-    }
+    val src = edgeRows.map(_.get(0))
+    val dst = edgeRows.map(_.get(1))
     val nodes = new java.util.LinkedHashSet[Any]()
     var i = 0
     while (i < src.length) { nodes.add(src(i)); nodes.add(dst(i)); i += 1 }

@@ -99,11 +99,6 @@ object Multimodal {
     array((0 until dim).map(i =>
       (xxhash64(content, lit(i)).cast("double") / lit(Long.MaxValue.toDouble))): _*)
 
-  /** "Resize": real impl re-encodes pixels; stub keeps a byte-budget crop
-    * (substr on binary) so downstream size accounting stays realistic. */
-  def resizeStub(content: Column, maxBytes: Int): Column =
-    substring(content, 1, maxBytes)
-
   /** Sample `n` fixed-width frames at evenly spaced byte offsets — the
     * frame-sampling access pattern of a video pipeline, over fake bytes. */
   def frameSampleStub(content: Column, n: Int, frameBytes: Int): Column = {

@@ -109,15 +109,15 @@ object NgramLm {
   private[graft] def scoreBounded(corpus: DataFrame, model: DataFrame,
       textCol: String, idCol: String, order: Int, alpha: Double,
       unicode: Boolean, cap: Int): DataFrame = {
-    // bounded drain, cut first (the drain rule in graft.core.CacheRegistry)
+    // one model evaluation serves the pull and the join fallback
     val ck = graft.core.CacheRegistry.cut(model.select(
       col("lvl").cast("int"), col("gram").cast("string"), col("cnt").cast("long")))
-    val rows = ck.take(cap + 1)
-    if (rows.length > cap)
+    val rows = graft.core.CacheRegistry.pull(ck, cap)(_.toArray)
+    if (rows.isEmpty)
       return scoreComposed(corpus, ck, textCol, idCol, order, alpha, unicode)
     // fast path: the model now lives on the driver, nothing reads the cut
     graft.core.CacheRegistry.release(ck)
-    val lm = graft.functions.NgramLmFns.buildModelFromRows(rows, order)
+    val lm = graft.functions.NgramLmFns.buildModelFromRows(rows.get, order)
     // registered for drain (unpersist, not destroy) — repeated score()
     // calls in a long-lived session no longer accumulate broadcast
     // blocks (r19 ADVICE)

@@ -79,10 +79,10 @@ object QualityClassifier {
     require(epochs >= 1 && epochs <= 1000, s"epochs must be 1..1000, got $epochs")
     require(lr > 0, s"lr must be positive, got $lr")
     val buckets = 1 << logBuckets
-    val badLabel = base.filter(col("y") =!= 0.0 && col("y") =!= 1.0).take(1)
+    val badLabel = firstRow(base.filter(col("y") =!= 0.0 && col("y") =!= 1.0))
     require(badLabel.isEmpty,
       s"QualityClassifier.train: label must be 0/1, found ${
-        if (badLabel.isEmpty) "" else badLabel.head.getDouble(0)}")
+        badLabel.fold("")(_.getDouble(0).toString)}")
 
     var weights = new Array[Double](buckets)
     var bias = 0.0
@@ -104,11 +104,9 @@ object QualityClassifier {
         .groupBy(col("fb.bucket").as("bucket"))
         .agg(sum((col("e") * col("fb.cnt")).cast("decimal(38,18)")).as("g"),
           sum(col("fb.cnt").cast("long")).as("n"))
-      // bounded drain over a shuffle output: coalesce(1) first (the
-      // drain rule in graft.core.CacheRegistry)
-      val rows = grad.coalesce(1).take(buckets + 2)
-      require(rows.length <= buckets + 1,
-        "gradient returned more buckets than the model has — kernel drift")
+      val rows = graft.core.CacheRegistry.pull(grad, buckets + 1)(_.toArray)
+        .getOrElse(throw new IllegalArgumentException(
+          "gradient returned more buckets than the model has — kernel drift"))
       var n = 1L
       rows.foreach { r =>
         if (r.getInt(0) == -1) n = math.max(1L, r.getLong(2))
@@ -134,6 +132,10 @@ object QualityClassifier {
     }
     QualityClfModel(weights, logBuckets, bigrams, bias)
   }
+
+  /** The first row of `df`, if any: a guard's offending example. */
+  private def firstRow(df: DataFrame): Option[org.apache.spark.sql.Row] =
+    graft.core.CacheRegistry.pull(df.limit(1), 1)(_.nextOption()).flatten
 
   /** Append labeled rows — PRE-FEATURIZED — to a parquet feature store
     * (the `raw_counts_store` idiom from [[Dsir]], applied to classifier
@@ -170,17 +172,17 @@ object QualityClassifier {
         .getOrElse(fresh0))
     // fail BEFORE persisting, not at train time: a poisoned store can't
     // be repaired by re-appending (the anti-join sees the id as stored)
-    val badLabel = fresh.filter(col("y") =!= 0.0 && col("y") =!= 1.0).take(1)
+    val badLabel = firstRow(fresh.filter(col("y") =!= 0.0 && col("y") =!= 1.0))
     require(badLabel.isEmpty,
       s"QualityClassifier.appendToFeatureStore: $labelCol must be 0/1, " +
-        s"found ${if (badLabel.isEmpty) "" else badLabel.head.getDouble(1)}")
+        s"found ${badLabel.fold("")(_.getDouble(1).toString)}")
     // duplicate ids inside one increment would make store-training
     // diverge from full-batch (train aggregates BOTH rows, the store
     // can keep only one) — the bit-parity contract demands loudness
-    val dup = fresh.groupBy("id").count().filter(col("count") > 1).take(1)
+    val dup = firstRow(fresh.groupBy("id").count().filter(col("count") > 1))
     require(dup.isEmpty,
       s"QualityClassifier.appendToFeatureStore: duplicate $idCol ${
-        if (dup.isEmpty) "" else dup.head.getLong(0)} in the increment — " +
+        dup.fold("")(_.getLong(0).toString)} in the increment — " +
         "bit-parity with full-batch training requires one row per id; " +
         "dedup the increment first")
     val n = fresh.count()
@@ -328,14 +330,14 @@ object QualityClassifier {
     val logBuckets = field("log_buckets").trim.toInt
     val bigrams = field("bigrams").trim.toBoolean
     val bias = field("bias").trim.toDouble
-    val rows = spark.read.parquet(s"$path/weights")
-      .select(col("bucket").cast("int"), col("weight").cast("double"))
-      .take((1 << logBuckets) + 1)
-    require(rows.length == (1 << logBuckets),
-      s"QualityClassifier.load: expected ${1 << logBuckets} weights, " +
-        s"found ${rows.length}")
     val w = new Array[Double](1 << logBuckets)
-    rows.foreach(r => w(r.getInt(0)) = r.getDouble(1))
+    val rows = graft.core.CacheRegistry.pull(spark.read.parquet(s"$path/weights")
+      .select(col("bucket").cast("int"), col("weight").cast("double")),
+      w.length)(_.toArray)
+    require(rows.exists(_.length == w.length),
+      s"QualityClassifier.load: expected ${w.length} weights, " +
+        s"found ${rows.fold(s"more than ${w.length}")(_.length.toString)}")
+    rows.get.foreach(r => w(r.getInt(0)) = r.getDouble(1))
     QualityClfModel(w, logBuckets, bigrams, bias)
   }
 }

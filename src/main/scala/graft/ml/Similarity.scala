@@ -295,18 +295,18 @@ object Similarity {
         // hard-fail a 10-doc corpus).
         val seeded = corpus.filter(col(idCol) < numCells)
           .select(col(idCol).cast("long").as("cell_id"), col(vecCol).as("centroid"))
-        // Validation via CollectLimit, not a full-scan aggregate: at most
-        // numCells + 1 matching ids are fetched, so the scan EARLY-
-        // TERMINATES once the fast path is provable (dense ids have their
-        // 16 seeds in the first row groups). numCells + 1 rows back ⇒ a
-        // duplicate id exists (only numCells distinct values fit under
-        // the filter) ⇒ same degenerate-index rejection as before. The
-        // r7 count/count_distinct aggregate paid a full corpus scan plus
-        // a distinct exchange on every semanticDedup call — measured
-        // 0.205 s vs 0.114 s for the r6 plain count at sf0.1, the one
-        // real code cost in the r6→r7 gate delta.
-        val ids = seeded.select(col("cell_id")).head(numCells + 1)
-          .map(_.getLong(0))
+        // Validation via a limit, not a full-scan aggregate: each scan
+        // task stops at numCells + 1 matching ids, and the limit bounds
+        // the pull. numCells + 1 rows back ⇒ a duplicate id exists (only
+        // numCells distinct values fit under the filter) ⇒ same
+        // degenerate-index rejection as before. The r7 count/count_distinct
+        // aggregate paid a full corpus scan plus a distinct exchange on
+        // every semanticDedup call — measured 0.205 s vs 0.114 s for the
+        // r6 plain count at sf0.1, the one real code cost in the r6→r7
+        // gate delta.
+        val ids = graft.core.CacheRegistry.pull(
+          seeded.select(col("cell_id")).limit(numCells + 1), numCells + 1)(
+          _.map(_.getLong(0)).toArray).get
         def dense(upTo: Int) = ids.length == upTo &&
           ids.distinct.length == upTo && ids.forall(i => i >= 0 && i < upTo)
         if (dense(numCells)) seeded
@@ -397,13 +397,9 @@ object Similarity {
       .dropDuplicates("vec_id")
       .join(idx.assigned.select("vec_id"), Seq("vec_id"), "left_anti")
       .filter(col("vec_id").isNotNull)
-      // count + write must see the SAME rows (the store grows under the
-      // plan): the cut is the barrier, as in the seen-store append
-      .transform(graft.core.CacheRegistry.cut)
-    val n = fresh.count()
-    if (n > 0) fresh.write.mode("append").partitionBy("cell_id")
-      .parquet(s"$path/assigned")
-    n
+    // the count rides the write (one evaluation, as in Stores.land)
+    graft.streaming.Observability.observedCount(fresh)(
+      _.write.mode("append").partitionBy("cell_id").parquet(s"$path/assigned"))
   }
 
   /** Rebuild a saved index IN PLACE from its own posting lists: re-train
@@ -460,10 +456,10 @@ object Similarity {
       fs.delete(legacy, true)
     }
     val idx = IvfIndex.load(spark, path)
-    // bounded drain: a saved index has at most thousands of cells
-    val k = idx.centroids.select(col("cell_id")).head(65537).length
-    require(k >= 1 && k <= 65536,
-      s"rebuildIvfIndex: implausible cell count $k at $path")
+    // a saved index has at most thousands of cells
+    val k = graft.core.CacheRegistry.pull(idx.centroids.select(col("cell_id")),
+      65536)(_.size).filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
+        s"rebuildIvfIndex: implausible cell count (0 or over 65536) at $path"))
     // cut lineage from the files the swap will delete — the new index
     // must be fully materialized (save) before any old file goes away
     val corpus = idx.assigned.select(col("vec_id"), col("cv"))
@@ -614,6 +610,8 @@ object Similarity {
 
   def trainPq(corpus: DataFrame, vecCol: String, idCol: String,
       m: Int = 8, kc: Int = 16): PqModel = {
+    // an ordered top-k bounded by its own k: the one frame take outside
+    // CacheRegistry.pull
     val rows = corpus.filter(col(idCol) < kc).orderBy(col(idCol))
       .select(col(vecCol).cast("array<double>")).take(kc)
     val vecs = rows.map(_.getSeq[Double](0).toArray)
@@ -708,10 +706,13 @@ object Similarity {
     * lands), and a persisted join input advertises true size, inviting
     * AQE to coalesce the pair join's exchanges under a quadratic output.
     * The RDD barrier computes the assignment once and reports unknown
-    * stats. Fault tolerance is the cut's contract: fast localCheckpoint
-    * by default (a lost executor fails the job), or set
-    * `spark.sql.graft.checkpointDir` for the cluster-reliable DFS
-    * checkpoint with identical plan shape.
+    * stats.
+    *
+    * Executor loss: the assignment cut is a `localCheckpoint` unless
+    * `spark.sql.graft.checkpointDir` is set, so by default a lost
+    * executor fails the dedup job. Set it to a DFS path on a cluster
+    * that must survive executor loss: the cut then writes a reliable
+    * checkpoint, with the same plan shape.
     *
     * `maxCellSize > 0` bounds the quadratic against HOT cells (one
     * centroid near a dense mode otherwise makes its cell's join

@@ -41,10 +41,6 @@ object TextAnalysis {
     size(filter(t, x => array_contains(sw, lower(x)))).cast("double") / size(t)
   }
 
-  def punctRatio(text: Column): Column =
-    (length(text) - length(regexp_replace(text, """[.,!?;:'"()\[\]]""", "")))
-      .cast("double") / length(text)
-
   def distinctTokenRatio(text: Column): Column =
     distinctTokenRatioOf(tokens(text))
 
@@ -71,22 +67,6 @@ object TextAnalysis {
     "de" -> Seq("der", "die", "und", "das", "ist", "nicht", "mit", "ein"),
     "fr" -> Seq("le", "la", "les", "des", "est", "une", "dans", "que"),
     "zh" -> Seq("的", "是", "了", "在", "我", "有", "和", "不"))
-
-  def langScores(text: Column): Seq[(String, Column)] = {
-    val t = tokens(lower(text))
-    langMarkers.map { case (lang, markers) =>
-      val m = array(markers.map(lit(_)): _*)
-      lang -> size(filter(t, x => array_contains(m, x)))
-    }
-  }
-
-  def langGuess(text: Column): Column = {
-    val scores = langScores(text)
-    val best = scores.map(_._2).reduce((a, b) => greatest(a, b))
-    scores.reverse.foldLeft(lit("und")) { case (acc, (lang, s)) =>
-      when(s === best && s > 0, lit(lang)).otherwise(acc)
-    }
-  }
 
   /** Rolling-hash document fingerprint: md5 of the normalized text
     * (lowercase, collapsed whitespace). Pair with Dedup.fingerprintCol for
@@ -382,8 +362,8 @@ object TextAnalysis {
     * mislabeled-language / mixed-script curation signal [[scriptProfile]]
     * counts. Latin is two sub-ranges (A-Z, a-z) so the punctuation
     * between them never counts as a letter. Order matters: the dominant-
-    * foreign tie-break prefers the FIRST listed class (the langGuess
-    * convention), and the oracle replays the same order. */
+    * foreign tie-break prefers the FIRST listed class (the `lang_guess`
+    * convention of [[profile]]), and the oracle replays the same order. */
   private[graft] val scriptRanges: Seq[(String, Seq[(Int, Int)])] = Seq(
     "latin" -> Seq((0x41, 0x5A), (0x61, 0x7A)),
     "greek" -> Seq((0x370, 0x3FF)),
@@ -445,7 +425,7 @@ object TextAnalysis {
     val t = col(textCol)
     // Column vals referenced N times embed N COPIES of the expression
     // (the normalizeUrl lesson): the naive single-projection form
-    // re-tokenized each row ~13× and langGuess's argmax re-ran each
+    // re-tokenized each row ~13× and the language argmax re-ran each
     // language filter ~6× (~40 tokenizer/filter passes per row). Binding
     // the tokenizations, per-language scores, and ratios as real columns
     // makes every later reference an attribute; CollapseProject keeps

@@ -68,16 +68,18 @@ object Observability {
   }
 
   /** The Spark work one labelled action did: the jobs, stages and tasks
-    * it launched, their executor CPU time and shuffle bytes. Unlike wall
+    * it launched, their executor CPU time, shuffle bytes and spilled bytes
+    * (in memory, and on disk after serialization). Unlike wall
     * time, a busy machine does not move these, so a regression that
     * moves them is the code's. `jobStages` holds each job's stage names
     * (`<action> at <file>:<line>`, its call site). */
   final case class JobCounts(jobs: Int = 0, stages: Int = 0, tasks: Long = 0L,
       cpuNs: Long = 0L, shuffleReadBytes: Long = 0L,
-      shuffleWriteBytes: Long = 0L,
+      shuffleWriteBytes: Long = 0L, memoryBytesSpilled: Long = 0L,
+      diskBytesSpilled: Long = 0L,
       jobStages: Vector[Seq[String]] = Vector.empty) {
     def json: String =
-      s"""{"jobs":$jobs,"stages":$stages,"tasks":$tasks,"cpu_ms":${cpuNs / 1000000L},"shuffle_read_bytes":$shuffleReadBytes,"shuffle_write_bytes":$shuffleWriteBytes}"""
+      s"""{"jobs":$jobs,"stages":$stages,"tasks":$tasks,"cpu_ms":${cpuNs / 1000000L},"shuffle_read_bytes":$shuffleReadBytes,"shuffle_write_bytes":$shuffleWriteBytes,"memory_bytes_spilled":$memoryBytesSpilled,"disk_bytes_spilled":$diskBytesSpilled}"""
   }
 
   // job-group ids stay unique across every JobCounter in the JVM
@@ -132,7 +134,9 @@ object Observability {
           shuffleReadBytes = c.shuffleReadBytes +
             m.shuffleReadMetrics.totalBytesRead,
           shuffleWriteBytes = c.shuffleWriteBytes +
-            m.shuffleWriteMetrics.bytesWritten))
+            m.shuffleWriteMetrics.bytesWritten,
+          memoryBytesSpilled = c.memoryBytesSpilled + m.memoryBytesSpilled,
+          diskBytesSpilled = c.diskBytesSpilled + m.diskBytesSpilled))
       }
 
     def count[T](label: String)(body: => T): (T, JobCounts) = {

@@ -50,6 +50,27 @@ class SourceGuardSpec extends AnyFunSuite {
       s"eager barrier outside CacheRegistry.cut: ${offenders.mkString(", ")}")
   }
 
+  test("no bounded drain outside CacheRegistry.pull") {
+    // every bounded model leaves the executors through CacheRegistry.pull:
+    // one job of one task, under spark.driver.maxResultSize. A drain is a
+    // toLocalIterator, a head(n), or a take on a frame chain (after a
+    // call's closing paren, or on a continuation line); a one-row
+    // aggregate's head() is a scalar read. Allowed, one line each: the
+    // stdout sink streams output and drains no model (sinks/Sinks.scala);
+    // the fixture synthesis streams a gate's input rows (SparkEntry.scala);
+    // Similarity.trainPq's ordered top-k is bounded by its own k
+    val drain = """toLocalIterator|\.head\([^)]|(^|\))\.take\(""".r
+    val allowed = Map(Paths.get("core", "CacheRegistry.scala") -> Int.MaxValue,
+      Paths.get("sinks", "Sinks.scala") -> 1, Paths.get("graft", "SparkEntry.scala") -> 1,
+      Paths.get("ml", "Similarity.scala") -> 1)
+    val offenders = mainSources.collect {
+      case (p, text) if code(text).count(drain.findFirstIn(_).isDefined) >
+          allowed.collectFirst { case (a, n) if p.endsWith(a) => n }.getOrElse(0) => p
+    }
+    assert(offenders.isEmpty,
+      s"bounded drain outside CacheRegistry.pull: ${offenders.mkString(", ")}")
+  }
+
   test("no rename outside Stores") {
     // every store append, compaction, directory swap and sidecar write
     // commits through graft.core.Stores, which holds the crash contract.

@@ -155,4 +155,72 @@ class CacheRegistrySpec extends SparkSpec {
     assert(n == 1)
     assert(newFiles == 0, s"a fast-path score left $newFiles checkpoint files")
   }
+
+  test("pull is one job of one task over a shuffle output, a scan and a cut") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-pull").toString
+    spark.range(0, 100, 1, 4).write.mode("overwrite").parquet(dir)
+    val counter = new graft.streaming.Observability.JobCounter(spark)
+    def pulled(df: DataFrame) =
+      counter.count("pull")(CacheRegistry.pull(df, 1000)(_.size))
+    try {
+      // AQE runs the aggregate's map stage (4 tasks) as a job of its own;
+      // the pull is the one job of one task that follows it
+      val (agg, aggJobs) = pulled(
+        spark.range(0, 1000, 1, 4).groupBy(col("id") % 10).count())
+      assert(agg.contains(10))
+      assert((aggJobs.jobs, aggJobs.tasks) == (2, 4 + 1), aggJobs)
+      val scan = spark.read.parquet(dir)
+      val (rows, scanJobs) = pulled(scan)
+      assert(rows.contains(100))
+      assert((scanJobs.jobs, scanJobs.tasks) == (1, 1), scanJobs)
+      val cut = CacheRegistry.cut(spark.range(0, 100, 1, 4).toDF("id"))
+      val (cutRows, cutJobs) = pulled(cut)
+      assert(cutRows.contains(100))
+      assert((cutJobs.jobs, cutJobs.tasks) == (1, 1), cutJobs)
+    } finally counter.close()
+  }
+
+  test("a pull over a file scan makes no cut, whatever the scan's size") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-pull-scan").toString
+    spark.range(0, 100, 1, 4).write.mode("overwrite").parquet(dir)
+    val store = java.nio.file.Files.createTempDirectory("graft-pull-seen") + "/seen"
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val before = spark.conf.getOption(threshold)
+    val counter = new graft.streaming.Observability.JobCounter(spark)
+    spark.conf.set(threshold, "1") // every scan is larger than this
+    try {
+      val ((rows, jobs), newFiles) = underCheckpointDir {
+        val scan = spark.read.parquet(dir).select(xxhash64(col("id")))
+        val pulled = counter.count("pull")(CacheRegistry.pull(scan, 1000)(_.size))
+        // the Bloom sidecar folds each increment through a pull over the
+        // files the append just wrote
+        graft.ml.Dedup.appendToSeenStore(
+          Seq("a", "b").toDF("text"), "text", store)
+        graft.ml.Dedup.appendToSeenStore(
+          Seq("b", "c", "d").toDF("text"), "text", store)
+        pulled
+      }
+      assert(rows.contains(100))
+      assert((jobs.jobs, jobs.tasks) == (1, 1), jobs)
+      assert(newFiles == 0, s"pulls over file scans left $newFiles checkpoint files")
+    } finally {
+      counter.close()
+      before.fold(spark.conf.unset(threshold))(spark.conf.set(threshold, _))
+    }
+  }
+
+  test("an over-cap pull returns None after at most cap + 1 rows") {
+    val evaluated = spark.sparkContext.longAccumulator("pull-rows")
+    val seen = udf { (x: Long) => evaluated.add(1); x }
+    val read = new java.util.concurrent.atomic.AtomicInteger()
+    val out = CacheRegistry.pull(
+      spark.range(0, 1000, 1, 4).select(seen(col("id"))), 10) { it =>
+      it.foreach(_ => read.incrementAndGet()); "model"
+    }
+    assert(out.isEmpty)
+    assert(read.get == 10, "read sees at most cap rows")
+    assert(evaluated.value <= 11, s"${evaluated.value} rows left the scan")
+    assert(CacheRegistry.pull(spark.range(0, 10, 1, 4).toDF("id"), 10)(_.size)
+      .contains(10))
+  }
 }

@@ -74,4 +74,26 @@ class ObservabilitySpec extends SparkSpec {
       assert(calls.get() >= 2)
     } finally w.stop()
   }
+
+  test("JobCounter counts spilled bytes") {
+    // window buffers of one row spill every partition past its first row
+    val keys = Seq("spark.sql.windowExec.buffer.in.memory.threshold",
+      "spark.sql.windowExec.buffer.spill.threshold")
+    val prev = keys.map(k => k -> spark.conf.getOption(k))
+    val counter = new Observability.JobCounter(spark)
+    try {
+      keys.foreach(spark.conf.set(_, "1"))
+      val (_, c) = counter.count("spill") {
+        spark.range(0, 16, 1, 2).withColumn("k", col("id") % 2)
+          .withColumn("s", sum("id").over(
+            org.apache.spark.sql.expressions.Window.partitionBy("k")))
+          .write.format("noop").mode("overwrite").save()
+      }
+      assert(c.memoryBytesSpilled > 0 && c.diskBytesSpilled > 0, c)
+      assert(c.json.contains("\"disk_bytes_spilled\":" + c.diskBytesSpilled))
+    } finally {
+      counter.close()
+      prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
+  }
 }
