@@ -146,15 +146,20 @@ object CacheRegistry {
     *     reducers hold every input row of a partition, not just those the
     *     filter above keeps;
     *   - otherwise a [[cut]], so the plan runs once at full parallelism
-    *     instead of collapsing into the one task. */
+    *     instead of collapsing into the one task. The pull reads that cut
+    *     once and [[release]]s it when it returns or fails, so a reliable
+    *     cut's checkpoint files do not outlive the call. */
   def pull[A](df: DataFrame, cap: Long)(read: Iterator[Row] => A): Option[A] = {
     val n = math.min(cap, Int.MaxValue - 1L).toInt
-    val all = (if (settled(df)) df else cut(df)).coalesce(1).limit(n + 1)
-      .toLocalIterator().asScala
-    val rows = all.take(n)
-    val a = read(rows)
-    rows.foreach(_ => ())
-    if (all.hasNext) None else Some(a)
+    val made = if (settled(df)) None else Some(cut(df))
+    try {
+      val all = made.getOrElse(df).coalesce(1).limit(n + 1)
+        .toLocalIterator().asScala
+      val rows = all.take(n)
+      val a = read(rows)
+      rows.foreach(_ => ())
+      if (all.hasNext) None else Some(a)
+    } finally made.foreach(release)
   }
 
   /** Whether [[pull]] reads `df` without a cut in front (see there). */

@@ -82,14 +82,10 @@ object Stores {
       want: StructType): Unit = {
     val dataFile = dataFiles(spark, path).headOption
       .getOrElse(sys.error(s"store $path exists but holds no parquet data file"))
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(dataFile,
-        spark.sparkContext.hadoopConfiguration))
-    val have =
-      try new org.apache.spark.sql.execution.datasources.parquet
+    val have = footers(spark, Seq(dataFile))(r =>
+      new org.apache.spark.sql.execution.datasources.parquet
         .ParquetToSparkSchemaConverter()
-        .convert(reader.getFooter.getFileMetaData.getSchema)
-      finally reader.close()
+        .convert(r.getFooter.getFileMetaData.getSchema)).head
     val bad = want.fields.filterNot(f =>
       have.fields.exists(h => h.name == f.name && h.dataType == f.dataType))
     if (bad.nonEmpty)
@@ -111,6 +107,30 @@ object Stores {
       .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
         !st.getPath.getName.startsWith("."))
       .map(_.getPath)
+  }
+
+  /** The store's row count: the sum of the footer row counts of its
+    * [[dataFiles]], read on the driver with no Spark job; 0 for an absent
+    * store. It counts exactly the rows `spark.read.parquet(path).count()`
+    * counts (duplicates a crashed write left included), so sidecar
+    * markers compare with it. It costs one footer read per data file, and
+    * a store's `compact_files` trigger bounds that number. */
+  def rowCount(spark: SparkSession, path: String): Long =
+    footers(spark, dataFiles(spark, path))(_.getRecordCount).sum
+
+  /** `read` over the Parquet footer of each of `files`, opened on the
+    * driver. The read options are built once per call: building them
+    * copies the Hadoop configuration, which costs more than a footer
+    * read (measured 6 ms against 0.2 ms on a local file). */
+  private def footers[A](spark: SparkSession, files: Seq[Path])(
+      read: org.apache.parquet.hadoop.ParquetFileReader => A): Seq[A] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val options = org.apache.parquet.HadoopReadOptions.builder(conf).build()
+    files.map { f =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf), options)
+      try read(reader) finally reader.close()
+    }
   }
 
   /** `<path><suffix>` as a SIBLING of path, built via parent+name: string
@@ -183,22 +203,17 @@ object Stores {
     * stores, summed partials for count stores, version dedup for the
     * temporal store) into at most `targetFiles` files under `compact-`,
     * then delete the old files. A known `schema` reads the store without
-    * the footer-inference job ([[readParquetIfExists]]). `onRows` gets
-    * the rewrite's row count — under the single-writer contract the
-    * store's row count once the files land — so sidecar rebuilds pay no
-    * count job. Returns that count; 0 for a store with no data files. */
+    * the footer-inference job ([[readParquetIfExists]]). Returns the
+    * rewrite's row count; 0 for a store with no data files. */
   def compact(spark: SparkSession, storePath: String, targetFiles: Int,
-      schema: Option[StructType])(rewrite: DataFrame => DataFrame)
-      (onRows: Long => Unit): Long = {
+      schema: Option[StructType])(rewrite: DataFrame => DataFrame): Long = {
     val old = dataFiles(spark, storePath) // listed BEFORE the new files land
     if (old.isEmpty) 0L
     else {
       val root = new Path(storePath)
       val store = readParquetIfExists(spark, storePath, schema).get
-      val (n, _) = land(rewrite(store).repartition(math.max(targetFiles, 1)),
-        new Path(root, "_compact_tmp"), root, "compact", old)
-      onRows(n)
-      n
+      land(rewrite(store).repartition(math.max(targetFiles, 1)),
+        new Path(root, "_compact_tmp"), root, "compact", old)._1
     }
   }
 

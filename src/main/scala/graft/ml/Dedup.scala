@@ -1037,14 +1037,20 @@ object Dedup {
   //                              DuckDB oracle reads
   //   store/_bloom/bloom.bin     exact-store sidecar: [rows: long]
   //                              [BloomFilter over xxhash64(fp)]; valid
-  //                              iff rows == current store row count
+  //                              iff rows == the store's footer row count
   //   store/_banded/data/band=B/
   //                              near-store banded index: each sim
   //                              re-keyed by its pigeonhole chunks ONCE
   //                              at append time, so no per-run explode
   //   store/_banded/_meta.json   {"bits":..,"bands":..,"rows":..} — valid
-  //                              iff rows == compact row count and the
-  //                              banding matches the query's
+  //                              iff rows == the compact rows' footer
+  //                              row count and the banding matches the
+  //                              query's
+  //
+  // Markers compare with Stores.rowCount: the sum of the data files'
+  // footer row counts, read on the driver with no Spark job. It counts
+  // every row a Spark count would, so a crashed write's duplicate rows
+  // read stale here too.
   //
   // Underscore-prefixed children are invisible to parquet discovery, so a
   // v1 reader (or the oracle) pointed at `store` still sees exactly the
@@ -1057,30 +1063,55 @@ object Dedup {
   /** Append this increment's NEW fingerprints to the seen store (dedup'd
     * against the store first, so re-running an increment doesn't grow
     * it), then refresh the Bloom sidecar [[dropSeenStore]] prefilters
-    * with. Returns how many were added. At-least-once, not transactional:
-    * a failure between the anti-join and the write can lose the
-    * increment's fps (re-run the update), never corrupt existing rows; a
-    * failure before the sidecar write leaves a stale sidecar that readers
-    * detect and ignore. */
-  def appendToSeenStore(df: DataFrame, textCol: String, storePath: String): Long = {
-    val (n, newFps) = appendFps(contentFingerprints(df, textCol), "fp", storePath)
-    updateBloomSidecar(df.sparkSession, storePath, newFps, n)
+    * with. Returns how many were added. The fingerprints that anti-join
+    * the store here land through [[appendUnseen]], the Planner's
+    * post-commit append. At-least-once, not transactional: a failure
+    * between the anti-join and the write can lose the increment's fps
+    * (re-run the update), never corrupt existing rows; a failure before
+    * the sidecar write leaves a stale sidecar that readers detect and
+    * ignore. */
+  def appendToSeenStore(df: DataFrame, textCol: String, storePath: String): Long =
+    appendUnseen(unseenIn(contentFingerprints(df, textCol), "fp", storePath),
+      storePath)
+
+  /** Land `unseen`, fingerprints the exact seen store lacks, and fold them
+    * into the Bloom sidecar. `unseen` is [[probeSeenStore]]'s second
+    * result, so the append computes no fingerprint the probe already
+    * computed and scans no store the probe already matched.
+    *
+    * The reuse relies on the single-writer contract: `unseen` was found
+    * against the store as the probe saw it. Two incremental `Dedup`
+    * stages on one store in one run each probe the store before either
+    * appends, so a fingerprint both saw lands twice; a key store
+    * tolerates that (the probes are distinct, the next compaction removes
+    * the duplicate). Returns how many rows were added. */
+  def appendUnseen(unseen: DataFrame, storePath: String): Long = {
+    val (n, newFps) = landFps(unseen, "fp", storePath)
+    updateBloomSidecar(unseen.sparkSession, storePath, newFps, n)
     n
   }
 
-  private def appendFps(fresh: DataFrame, keyCol: String,
+  /** `fresh`'s keys minus those the store at `storePath` holds. The store
+    * holds `fresh`'s rows, so it is read by `fresh`'s schema (no
+    * footer-inference job; see Stores.readParquetIfExists). */
+  private def unseenIn(fresh: DataFrame, keyCol: String,
+      storePath: String): DataFrame =
+    Stores.readParquetIfExists(fresh.sparkSession, storePath,
+        Some(nullableSchema(fresh)))
+      .map(s => fresh.join(s, Seq(keyCol), "left_anti"))
+      .getOrElse(fresh)
+
+  private def nullableSchema(df: DataFrame): StructType =
+    StructType(df.schema.fields.map(_.copy(nullable = true)))
+
+  /** Append `unseen`'s non-null keys to the store; returns (rows added,
+    * the appended rows read back from the landed files). */
+  private def landFps(unseen: DataFrame, keyCol: String,
       storePath: String): (Long, DataFrame) = {
-    val spark = fresh.sparkSession
-    // the store and the appended files hold `fresh`'s rows: read both by
-    // its schema (no footer-inference job; see Stores.readParquetIfExists)
-    val schema = StructType(fresh.schema.fields.map(_.copy(nullable = true)))
     // Null keys (null/absent text) never leave the anti-join's left side
     // (null = null is null), so unfiltered they'd re-append one null row
     // EVERY run; they also can't match any future probe — drop them.
-    val deduped = Stores.readParquetIfExists(spark, storePath, Some(schema))
-      .map(s => fresh.join(s, Seq(keyCol), "left_anti"))
-      .getOrElse(fresh)
-      .filter(col(keyCol).isNotNull)
+    val deduped = unseen.filter(col(keyCol).isNotNull)
     // one-job counted append (r20): count rides the write action, so the
     // old three-consumer memo barrier (count + write + sidecar over one
     // frame while the store changes under it) is structural now —
@@ -1090,7 +1121,8 @@ object Dedup {
     // would see the grown store and return empty).
     val (n, files) = Stores.appendCountedFiles(deduped, storePath)
     val newFps =
-      if (files.nonEmpty) spark.read.schema(schema).parquet(files: _*)
+      if (files.nonEmpty)
+        unseen.sparkSession.read.schema(nullableSchema(deduped)).parquet(files: _*)
       else deduped.limit(0)
     (n, newFps)
   }
@@ -1108,19 +1140,15 @@ object Dedup {
     * validity marker (covered row count) is stale. Skipped above
     * `spark.sql.graft.storeBloomMaxItems` (default 1e8 ≈ 115 MB at 1%
     * fpp): one driver-held filter stops scaling there — shard by fp
-    * prefix before raising it. The build is one extra store scan per
-    * append (the append's anti-join already paid one). `knownRows` is the
-    * store's row count when the caller already observed it (a compaction's
-    * rewrite), sparing the count job. */
+    * prefix before raising it. The build is one store scan; the row count
+    * it compares comes from the footers ([[Stores.rowCount]], no job). */
   private def refreshBloomSidecar(spark: org.apache.spark.sql.SparkSession,
-      storePath: String, force: Boolean = false,
-      knownRows: Option[Long] = None): Unit = {
+      storePath: String, force: Boolean = false): Unit = {
     val maxItems =
       spark.conf.get("spark.sql.graft.storeBloomMaxItems", "100000000").toLong
     val fpp = spark.conf.get("spark.sql.graft.storeBloomFpp", "0.01").toDouble
     if (maxItems <= 0) return
-    val store = readSeenStore(spark, storePath)
-    val rows = store.map(s => knownRows.getOrElse(s.count())).getOrElse(0L)
+    val rows = Stores.rowCount(spark, storePath)
     if (rows == 0 || rows > maxItems) return
     // `force` bypasses the covered==rows short-circuit: after a
     // compaction every data file was rewritten, and a distinct-count can
@@ -1133,7 +1161,7 @@ object Dedup {
     // force updateBloomSidecar's incremental path into a full rebuild on
     // the very next append
     val sizedFor = math.min(maxItems, math.max(rows * 2, 1L << 20))
-    val bf = store.get
+    val bf = readSeenStore(spark, storePath).get
       .select(xxhash64(col("fp")).as("h"))
       .stat.bloomFilter("h", sizedFor, fpp)
     writeBloomSidecar(spark, storePath, rows, bf)
@@ -1176,7 +1204,7 @@ object Dedup {
     val incrMax = spark.conf
       .get("spark.sql.graft.storeBloomIncrementalMax", "4000000").toLong
     if (maxItems <= 0) return
-    val rows = readSeenStore(spark, storePath).map(_.count()).getOrElse(0L)
+    val rows = Stores.rowCount(spark, storePath)
     if (rows == 0 || rows > maxItems) return
     loadBloomCovered(spark, storePath) match {
       case Some(covered) if covered == rows => () // no-op append, marker current
@@ -1250,6 +1278,11 @@ object Dedup {
         org.apache.spark.sql.graftbridge.Bridge.expression(h)))
   }
 
+  /** [[dropSeen]] against a STORE PATH: [[probeSeenStore]] over the
+    * increment's own fingerprints. */
+  def dropSeenStore(df: DataFrame, storePath: String, textCol: String): DataFrame =
+    probeSeenStore(df, contentFingerprints(df, textCol), storePath, textCol)._1
+
   /** [[dropSeen]] against a STORE PATH, using the Bloom sidecar to keep
     * the store scan-only: increment rows failing the Bloom probe are
     * definitely-unseen (no false negatives over a valid sidecar) and skip
@@ -1261,16 +1294,30 @@ object Dedup {
     * 160 GB of fingerprints every day through the plain anti join. Falls
     * back to [[dropSeen]] when the sidecar is stale/absent or the
     * candidate set exceeds `spark.sql.graft.incrementalBroadcastRows`
-    * (a dup-heavy increment, where the Bloom prunes nothing anyway). */
-  def dropSeenStore(df: DataFrame, storePath: String, textCol: String): DataFrame = {
+    * (a dup-heavy increment, where the Bloom prunes nothing anyway).
+    *
+    * `fps` is the increment's [[contentFingerprints]]. Returns (kept
+    * rows, unseen): `unseen` is `fps` minus the store's fingerprints, in
+    * the form the probe's path already holds — `fps` itself when the
+    * store is absent; `fps` anti-joined with the store when the sidecar
+    * is stale or off; once the Bloom probe ran, the memo of `fps` the
+    * candidates came from: whole when no candidate passed, minus the
+    * matched cut, or anti-joined with the store past the broadcast cap.
+    * [[appendUnseen]] lands it, so each path computes the fingerprints
+    * once: a probe that computed them leaves them cached for the append,
+    * and one that did not leaves the append to compute them. That reuse
+    * relies on the single-writer contract (see [[appendUnseen]]):
+    * `unseen` is true of the store as this probe saw it. */
+  def probeSeenStore(df: DataFrame, fps: DataFrame, storePath: String,
+      textCol: String): (DataFrame, DataFrame) = {
     val spark = df.sparkSession
     readSeenStore(spark, storePath) match {
-      case None => df
+      case None => (df, fps)
       case Some(seen) =>
-        // one count job over the known schema (no footer-inference job)
-        val rows = seen.count()
+        val rows = Stores.rowCount(spark, storePath)
         loadBloomSidecar(spark, storePath).filter(_._1 == rows).map(_._2) match {
-          case None => dropSeen(df, seen, textCol)
+          case None =>
+            (dropSeen(df, seen, textCol), fps.join(seen, Seq("fp"), "left_anti"))
           case Some(bf) =>
             val fpc = md5(col(textCol).cast("string"))
             val bcastRows = spark.conf
@@ -1287,12 +1334,16 @@ object Dedup {
             // literal, one probe stage. Per-row pruning is not lost —
             // every increment row flows through the final broadcast anti
             // join regardless.
-            val incFps = graft.core.CacheRegistry.memo(
-              df.select(fpc.as("fp")).distinct())
+            val incFps = graft.core.CacheRegistry.memo(fps)
             val cand = graft.core.CacheRegistry.memo(
               incFps.filter(bloomMightContainLong(spark, bf, xxhash64(col("fp")))))
             val nCand = cand.count()
-            if (nCand == 0L) df
+            // the append reads the memo behind a rebalance: a memo's
+            // shuffle partitioning is fixed (AQE does not coalesce a cached
+            // plan's output partitions), so every append would otherwise
+            // land one file per shuffle partition and trip `compact_files`
+            // on every increment
+            if (nCand == 0L) (df, incFps.hint("rebalance"))
             else if (nCand <= bcastRows) {
               // matched goes through a CHECKPOINT barrier, not just a
               // cache: the optimizer pushes LeftAnti below a union-shaped
@@ -1308,8 +1359,11 @@ object Dedup {
               // checkpointDir switch keeps the cluster-reliable form.
               val matched = graft.core.CacheRegistry.cut(
                 seen.join(broadcast(cand), Seq("fp"), "left_semi"))
-              df.join(broadcast(matched), fpc === matched("fp"), "left_anti")
-            } else dropSeen(df, seen, textCol)
+              (df.join(broadcast(matched), fpc === matched("fp"), "left_anti"),
+                incFps.join(broadcast(matched), Seq("fp"), "left_anti")
+                  .hint("rebalance"))
+            } else (dropSeen(df, seen, textCol),
+              incFps.join(seen, Seq("fp"), "left_anti").hint("rebalance"))
         }
     }
   }
@@ -1335,22 +1389,21 @@ object Dedup {
   /** Compact an EXACT seen store in place: rewrite the fingerprint rows
     * (distinct — a crashed append's double-write heals here) into at most
     * `targetFiles` files (the YAML `compact_files: N` trigger passes
-    * max(1, N/2), see Planner) and force-rebuild the Bloom sidecar. The
-    * rebuild takes its row count from the rewrite's own observation —
-    * under the single-writer contract that IS the store's row count — so
-    * it pays no count job. Crash contract: [[graft.core.Stores]]. Returns
-    * the store's distinct row count. */
+    * max(1, N/2), see Planner) and force-rebuild the Bloom sidecar,
+    * whose marker takes the rewritten files' footer row count (no count
+    * job). Crash contract: [[graft.core.Stores]]. Returns the store's
+    * distinct row count. */
   def compactSeenStore(spark: org.apache.spark.sql.SparkSession,
       storePath: String, targetFiles: Int = 32): Long =
-    compactStore(spark, storePath, "fp", targetFiles, Some(seenSchema))(rows =>
-      refreshBloomSidecar(spark, storePath, force = true, knownRows = Some(rows)))
+    compactStore(spark, storePath, "fp", targetFiles, Some(seenSchema))(
+      refreshBloomSidecar(spark, storePath, force = true))
 
   /** [[compactSeenStore]] for a near-dup (simhash) store; always rebuilds
     * the banded sidecar (compaction rewrote the rows it derives from). */
   def compactNearStore(spark: org.apache.spark.sql.SparkSession,
       storePath: String, targetFiles: Int = 32,
       totalBits: Int = 64, bands: Int = 8): Long =
-    compactStore(spark, storePath, "sim", targetFiles)(_ =>
+    compactStore(spark, storePath, "sim", targetFiles)(
       refreshBandedSidecar(spark, storePath,
         spark.read.parquet(storePath).select("sim"), 0, totalBits, bands,
         force = true))
@@ -1358,9 +1411,12 @@ object Dedup {
   private def compactStore(spark: org.apache.spark.sql.SparkSession,
       storePath: String, keyCol: String, targetFiles: Int,
       schema: Option[StructType] = None)
-      (refreshSidecars: Long => Unit): Long =
-    Stores.compact(spark, storePath, targetFiles, schema)(
-      _.select(keyCol).distinct())(refreshSidecars)
+      (refreshSidecars: => Unit): Long = {
+    val n = Stores.compact(spark, storePath, targetFiles, schema)(
+      _.select(keyCol).distinct())
+    if (n > 0) refreshSidecars
+    n
+  }
 
   /** Append NEW simhash fingerprints to a near-dup seen store AND keep
     * its banded sidecar current: the fresh sims' (band, chunk) rows are
@@ -1373,7 +1429,7 @@ object Dedup {
       totalBits: Int = 64, bands: Int = 8): Long = {
     val spark = df.sparkSession
     val fresh = df.select(fingerprint(col(textCol)).as("sim")).distinct()
-    val (n, newSims) = appendFps(fresh, "sim", storePath)
+    val (n, newSims) = landFps(unseenIn(fresh, "sim", storePath), "sim", storePath)
     refreshBandedSidecar(spark, storePath, newSims, n, totalBits, bands)
     n
   }
@@ -1425,7 +1481,7 @@ object Dedup {
   private def refreshBandedSidecar(spark: org.apache.spark.sql.SparkSession,
       storePath: String, newSims: DataFrame, nNew: Long,
       totalBits: Int, bands: Int, force: Boolean = false): Unit = {
-    val rows = Stores.readParquetIfExists(spark, storePath).map(_.count()).getOrElse(0L)
+    val rows = Stores.rowCount(spark, storePath)
     if (rows == 0) return
     def write(sims: DataFrame, append: Boolean): Unit = {
       // directory-partition by BAND only (≤ `bands` dirs): per-(band,
@@ -1531,7 +1587,7 @@ object Dedup {
     Stores.readParquetIfExists(spark, storePath) match {
       case None => df
       case Some(compact) =>
-        val rows = compact.count()
+        val rows = Stores.rowCount(spark, storePath)
         val bandedOk = loadBandedMeta(spark, storePath).exists {
           case (bi, ba, covered) =>
             bi == totalBits && ba == bands && covered == rows

@@ -125,7 +125,7 @@ object Dsir {
   def compactCountsStore(spark: SparkSession, storePath: String,
       targetFiles: Int = 8): Long =
     graft.core.Stores.compact(spark, storePath, targetFiles, None)(
-      _.groupBy("bucket").agg(sum(col("cnt")).as("cnt")))(_ => ())
+      _.groupBy("bucket").agg(sum(col("cnt")).as("cnt")))
 
   /** Driver-side model from the two bounded count frames. Arrays are
     * indexed by bucket; ratio[b] and logRatio[b] per the class doc. */

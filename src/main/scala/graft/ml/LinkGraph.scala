@@ -88,7 +88,7 @@ object LinkGraph {
   def compactHostGraphStore(spark: org.apache.spark.sql.SparkSession,
       storePath: String, targetFiles: Int = 32): Long =
     graft.core.Stores.compact(spark, storePath, targetFiles, None)(
-      _.groupBy("src_host", "dst_host").agg(sum(col("n_links")).as("n_links")))(_ => ())
+      _.groupBy("src_host", "dst_host").agg(sum(col("n_links")).as("n_links")))
 
   /** Fixed-point PageRank over an edge list: returns (node, rank_scaled)
     * where rank_scaled = rank × 10^scaleDigits (LONG). Init rank 1.0 per

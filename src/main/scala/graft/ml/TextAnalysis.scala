@@ -700,7 +700,7 @@ object TextAnalysis {
   def compactVocabStore(spark: org.apache.spark.sql.SparkSession,
       storePath: String, targetFiles: Int = 32): Long =
     graft.core.Stores.compact(spark, storePath, targetFiles, None)(
-      _.groupBy("token").agg(sum(col("cnt")).as("cnt")))(_ => ())
+      _.groupBy("token").agg(sum(col("cnt")).as("cnt")))
 
   /** Inverted-index build: one row per (token, posting) with the token's
     * document frequency and the posting's 1-based rank — the

@@ -302,7 +302,7 @@ object AsOfJoin {
       storePath: String, keys: Seq[String], tsCol: String,
       targetFiles: Int = 32): Long =
     graft.core.Stores.compact(spark, storePath, targetFiles, None)(
-      _.dropDuplicates(keys :+ tsCol))(_ => ())
+      _.dropDuplicates(keys :+ tsCol))
 
   /** As-of enrich `left` against the accumulated store: for each left
     * row, the most recent stored version at-or-before `leftTs` per key.

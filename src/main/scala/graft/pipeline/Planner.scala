@@ -550,11 +550,18 @@ object Planner {
                   df, fcol, id, ffn, 64, kOpt, bandsOpt),
                 store, fcol, id, ffn, 64, kOpt, bandsOpt)
             } else {
+              // one fingerprint pass per increment: the probe hands back
+              // the fingerprints the store lacks, which the post-commit
+              // append lands as they are. The hook runs before runBatch's
+              // drain, so it reads the probe's fingerprint memo and matched
+              // cut cached.
+              val (kept, unseen) = graft.ml.Dedup.probeSeenStore(
+                graft.ml.Dedup.dropDuplicatesExact(df, text, id),
+                graft.ml.Dedup.contentFingerprints(df, text), store, text)
               if (update) graft.core.PostCommit.register(
-                () => { graft.ml.Dedup.appendToSeenStore(df, text, store)
+                () => { graft.ml.Dedup.appendUnseen(unseen, store)
                   maybeCompact(df.sparkSession) })
-              graft.ml.Dedup.dropSeenStore(
-                graft.ml.Dedup.dropDuplicatesExact(df, text, id), store, text)
+              kept
             }
           }
         case "clustered" =>

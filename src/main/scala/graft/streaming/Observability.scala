@@ -38,17 +38,22 @@ object Observability {
   /** Collects observed metrics + input/processed rates per query. */
   final class Listener extends StreamingQueryListener {
     private val counters = new ConcurrentHashMap[String, Long]()
-    @volatile private var lastProgress: Map[String, Double] = Map.empty
+    // each query's latest rates, keyed by its id: queries sharing one
+    // listener report independently
+    private val lastProgress =
+      new ConcurrentHashMap[java.util.UUID, Map[String, Double]]()
+    @volatile private var lastId: Option[java.util.UUID] = None
 
     override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
     override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
 
     override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
       val p = e.progress
-      lastProgress = Map(
+      lastProgress.put(p.id, Map(
         "inputRowsPerSecond" -> p.inputRowsPerSecond,
         "processedRowsPerSecond" -> p.processedRowsPerSecond,
-        "numInputRows" -> p.numInputRows.toDouble)
+        "numInputRows" -> p.numInputRows.toDouble))
+      lastId = Some(p.id)
       // only graft's own observations carry the `events` schema — a
       // foreign df.observe from a Custom plugin would throw here and
       // (the listener bus swallowing it) silently drop every counter
@@ -64,7 +69,11 @@ object Observability {
 
     /** Cumulative per-stage event counts (Prometheus scrape shape). */
     def snapshot: Map[String, Long] = counters.asScala.toMap
-    def progress: Map[String, Double] = lastProgress
+    /** The latest rates of query `id` (empty before its first report). */
+    def progressOf(id: java.util.UUID): Map[String, Double] =
+      Option(lastProgress.get(id)).getOrElse(Map.empty)
+    /** The latest rates of whichever query reported last. */
+    def progress: Map[String, Double] = lastId.fold(Map.empty[String, Double])(progressOf)
   }
 
   /** The Spark work one labelled action did: the jobs, stages and tasks

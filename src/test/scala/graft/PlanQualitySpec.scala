@@ -761,4 +761,23 @@ class PlanQualitySpec extends SparkSpec {
         Map("q_vocab_store" -> 12, "q_dsir" -> 9, "q_langid" -> 7))
     } finally counter.close()
   }
+
+  test("job counts: a steady curate increment computes its fingerprints once") {
+    // a non-first increment against a store with a valid Bloom sidecar:
+    // the probe's fingerprint memo feeds the post-commit append, and the
+    // sidecar markers compare with footer row counts, not count jobs
+    import graft.pipeline.{CurateIncrement, Planner}
+    val root = java.nio.file.Files.createTempDirectory("curate-jobs").toString
+    val store = s"$root/fps"
+    def increment(day: Int): Unit =
+      Planner.fromYaml(CurateIncrement.yaml(CurateIncrement.write(root, day),
+        store, s"$root/out-$day")).runBatch(spark): Unit
+    increment(0)
+    assert(new java.io.File(s"$store/_bloom/bloom.bin").isFile)
+    val counter = new graft.streaming.Observability.JobCounter(spark)
+    val counts = try counter.count("curate")(increment(1))._2
+      finally counter.close()
+    assert(graft.ml.Dedup.storeDataFiles(spark, store).size == 2)
+    assert(counts.jobs <= 15, counts.jobStages.mkString("\n"))
+  }
 }

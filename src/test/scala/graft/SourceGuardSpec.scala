@@ -86,6 +86,46 @@ class SourceGuardSpec extends AnyFunSuite {
       s"rename outside graft.core.Stores: ${offenders.mkString(", ")}")
   }
 
+  test("no Spark count of a store read") {
+    // a store's row count is the sum of its footer row counts
+    // (Stores.rowCount, no job), so no store read is counted by a Spark
+    // job. Caught, per statement (a continuation line starting with `.`
+    // joins the line before it): a count after a store read in the same
+    // statement, and a count on a name bound to a store read (`val x =
+    // <read>`, or `case Some(x) =>` within three lines of a `<read>
+    // match`), directly or inside its `map`
+    val read = """readSeenStore\(|readParquetIfExists\(|\.parquet\(storePath\b""".r
+    val counted = """\.count\(\)""".r
+    def statements(text: String): Seq[String] =
+      code(text).foldLeft(Vector.empty[String]) {
+        case (acc, l) if l.startsWith(".") && acc.nonEmpty => acc.init :+ (acc.last + l)
+        case (acc, l) => acc :+ l
+      }
+    def offending(text: String): Seq[String] = {
+      val st = statements(text)
+      val bound = st.indices.flatMap { i =>
+        val byVal = """^val (\w+) = (.*)""".r.findFirstMatchIn(st(i))
+          .filter(m => read.findFirstIn(m.group(2)).isDefined).map(_.group(1))
+        val bySome =
+          if (read.findFirstIn(st(i)).isDefined && st(i).endsWith("match {"))
+            st.slice(i + 1, i + 4).flatMap(
+              """case Some\((\w+)\) =>""".r.findFirstMatchIn(_).map(_.group(1)))
+          else Nil
+        byVal.toSeq ++ bySome
+      }.toSet
+      st.filter { s =>
+        read.findFirstMatchIn(s).exists(m => counted.findFirstIn(s.drop(m.end)).isDefined) ||
+          bound.exists(n => s.contains(s"$n.count()") ||
+            (s.contains(s"$n.map(") && counted.findFirstIn(s).isDefined))
+      }
+    }
+    val offenders = mainSources.flatMap { case (p, text) =>
+      offending(text).map(s => s"${p.getFileName}: $s")
+    }
+    assert(offenders.isEmpty,
+      s"store read counted by a Spark job (use Stores.rowCount):\n${offenders.mkString("\n")}")
+  }
+
   test("no NUL or other raw control bytes in main sources") {
     // a raw control byte makes git treat the file as binary (no diff or
     // review); escape sequences express the same value as text

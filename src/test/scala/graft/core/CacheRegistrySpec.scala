@@ -2,6 +2,9 @@ package graft.core
 
 import graft.SparkSpec
 import graft.ml.{Dsir, IvfIndex, LangId, LinkGraph, NgramLm, Similarity}
+import org.apache.hadoop.fs.{FSDataOutputStream, Path}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
@@ -18,26 +21,37 @@ class CacheRegistrySpec extends SparkSpec {
   private def countFiles(f: java.io.File): Int =
     if (f.isFile) 1 else Option(f.listFiles).toSeq.flatten.map(countFiles).sum
 
-  /** Run `body` with the setting on a fresh directory; return its result
-    * and how many files it left there. */
-  private def underCheckpointDir[T](body: => T): (T, Int) = {
+  /** Run `body` with the setting on a fresh directory, reached through
+    * [[CountingLocalFs]]; return its result, how many files it wrote
+    * there and how many it left there. */
+  private def underCheckpointDir[T](body: => T): (T, Int, Int) = {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toFile
-    spark.conf.set(Key, dir.toString)
+    spark.sparkContext.hadoopConfiguration.set(
+      s"fs.${CountingLocalFs.Scheme}.impl", classOf[CountingLocalFs].getName)
+    spark.conf.set(Key, s"${CountingLocalFs.Scheme}://$dir")
+    val before = CountingLocalFs.created.get
     try {
       val out = body
-      (out, countFiles(dir))
+      (out, CountingLocalFs.created.get - before, countFiles(dir))
     } finally spark.conf.unset(Key)
   }
 
-  /** Same rows with and without the setting, and the set run wrote
-    * reliable checkpoint files. */
-  private def assertCovered(what: String)(run: => Set[Row]): Unit = {
+  /** Same rows with and without the setting, and the set run left
+    * reliable checkpoint files; with `released`, it wrote them during the
+    * call and left none. */
+  private def assertCovered(what: String, released: Boolean = false)(
+      run: => Set[Row]): Unit = {
     val unset = run
-    val (set, newFiles) = underCheckpointDir(run)
+    val (set, written, left) = underCheckpointDir(run)
     assert(set == unset, s"$what: rows differ under $Key")
-    assert(newFiles > 0, s"$what: no reliable checkpoint files under $Key")
+    if (released) {
+      assert(written > 0, s"$what: wrote no reliable checkpoint files under $Key")
+      assert(left == 0, s"$what: left $left checkpoint files under $Key")
+    } else assert(left > 0, s"$what: no reliable checkpoint files under $Key")
   }
 
+  // the profiles end in a window, so the pull cuts them, reads the cut
+  // once and releases it
   test("LangId.annotate's profile drain honors checkpointDir") {
     val train = Seq(
       ("en", "the quick brown fox jumps over the lazy dog and the cat"),
@@ -45,7 +59,7 @@ class CacheRegistrySpec extends SparkSpec {
       .toDF("lang", "text")
     val docs = Seq((0L, "the dog and the cat"), (1L, "der hund und die katze"))
       .toDF("id", "text")
-    assertCovered("LangId.annotate") {
+    assertCovered("LangId.annotate", released = true) {
       LangId.annotate(docs, "text", LangId.trainProfiles(train, "text", "lang"))
         .collect().toSet
     }
@@ -98,7 +112,7 @@ class CacheRegistrySpec extends SparkSpec {
       .map(e => String.valueOf(e.getMessage)).mkString("\n")
     assert(msgs.contains("Checkpoint block") && msgs.contains("not found"), msgs)
 
-    val (rows, newFiles) = underCheckpointDir {
+    val (rows, _, newFiles) = underCheckpointDir {
       val reliable = CacheRegistry.cut(src)
       loseBlocks(reliable)
       reliable.as[Long].collect().sorted.toSeq
@@ -149,7 +163,7 @@ class CacheRegistrySpec extends SparkSpec {
     val model = NgramLm.train(Seq((0L, "a b c a b c a b d")).toDF("doc_id", "text"),
       "text", order = 3, minCount = 1)
     val docs = Seq((1L, "a b c")).toDF("doc_id", "text")
-    val (n, newFiles) = underCheckpointDir {
+    val (n, _, newFiles) = underCheckpointDir {
       NgramLm.score(docs, model, "text", "doc_id", order = 3).count()
     }
     assert(n == 1)
@@ -189,7 +203,7 @@ class CacheRegistrySpec extends SparkSpec {
     val counter = new graft.streaming.Observability.JobCounter(spark)
     spark.conf.set(threshold, "1") // every scan is larger than this
     try {
-      val ((rows, jobs), newFiles) = underCheckpointDir {
+      val ((rows, jobs), written, _) = underCheckpointDir {
         val scan = spark.read.parquet(dir).select(xxhash64(col("id")))
         val pulled = counter.count("pull")(CacheRegistry.pull(scan, 1000)(_.size))
         // the Bloom sidecar folds each increment through a pull over the
@@ -202,7 +216,7 @@ class CacheRegistrySpec extends SparkSpec {
       }
       assert(rows.contains(100))
       assert((jobs.jobs, jobs.tasks) == (1, 1), jobs)
-      assert(newFiles == 0, s"pulls over file scans left $newFiles checkpoint files")
+      assert(written == 0, s"pulls over file scans wrote $written checkpoint files")
     } finally {
       counter.close()
       before.fold(spark.conf.unset(threshold))(spark.conf.set(threshold, _))
@@ -223,4 +237,31 @@ class CacheRegistrySpec extends SparkSpec {
     assert(CacheRegistry.pull(spark.range(0, 10, 1, 4).toDF("id"), 10)(_.size)
       .contains(10))
   }
+}
+
+/** A local file system under a scheme of its own that counts the files it
+  * creates, so a checkpoint root on it shows what a call wrote even when
+  * the call deleted the files again before it returned. */
+class CountingLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI =
+    java.net.URI.create(s"${CountingLocalFs.Scheme}:///")
+  override def getScheme: String = CountingLocalFs.Scheme
+  // every create overload of the local file system ends in one of these
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    CountingLocalFs.created.incrementAndGet()
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean,
+      bufferSize: Int, replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream = {
+    CountingLocalFs.created.incrementAndGet()
+    super.create(f, permission, overwrite, bufferSize, replication, blockSize,
+      progress)
+  }
+}
+
+object CountingLocalFs {
+  val Scheme = "graftcount"
+  val created = new java.util.concurrent.atomic.AtomicInteger()
 }

@@ -71,4 +71,18 @@ class StoresSpec extends SparkSpec {
       AsOfJoin.compactTemporalStore(spark, temporal, Seq("key"), "t", targetFiles = 2)
     }
   }
+
+  test("rowCount reads the footers: a Spark count's value, 0 when absent") {
+    val root = java.nio.file.Files.createTempDirectory("graft-rowcount").toString
+    val store = s"$root/store"
+    assert(Stores.rowCount(spark, store) == 0)
+    spark.range(0, 1000, 1, 4).toDF("id").write.parquet(store)
+    Stores.appendCounted(spark.range(0, 37, 1, 3).toDF("id"), store)
+    // an empty file and a sidecar under `_` hold no store rows
+    spark.range(0).toDF("id").write.mode("append").parquet(store)
+    spark.range(5).toDF("id").write.parquet(s"$store/_bloom/data")
+    assert(Stores.dataFiles(spark, store).size >= 7)
+    assert(Stores.rowCount(spark, store) == spark.read.parquet(store).count())
+    assert(Stores.rowCount(spark, store) == 1037)
+  }
 }

@@ -31,6 +31,31 @@ class ObservabilitySpec extends SparkSpec {
     }
   }
 
+  test("progress is kept per query") {
+    val listener = new Observability.Listener
+    spark.streams.addListener(listener)
+    val (a, b) = (MemoryStream[Int](spark), MemoryStream[Int](spark))
+    val qa = a.toDF().writeStream.format("noop").start()
+    val qb = b.toDF().writeStream.format("noop").start()
+    def rows(q: org.apache.spark.sql.streaming.StreamingQuery) =
+      listener.progressOf(q.id).getOrElse("numInputRows", -1.0)
+    try {
+      a.addData(1, 2, 3)
+      qa.processAllAvailable()
+      b.addData(1, 2, 3, 4, 5)
+      qb.processAllAvailable()
+      // listener events are async — poll briefly
+      val deadline = System.currentTimeMillis() + 10000
+      while ((rows(qa), rows(qb)) != ((3.0, 5.0)) &&
+             System.currentTimeMillis() < deadline) Thread.sleep(100)
+      assert((rows(qa), rows(qb)) == ((3.0, 5.0)))
+      assert(listener.progress.getOrElse("numInputRows", -1.0) == 5.0)
+    } finally {
+      qa.stop(); qb.stop()
+      spark.streams.removeListener(listener)
+    }
+  }
+
   test("batch observedCount reads counters without a second pass") {
     val df = spark.range(100).toDF("id")
     val n = Observability.observedCount(df)(d => { d.filter(col("id") < 10).count(): Unit })
